@@ -33,25 +33,15 @@ def entry(spark: SparkSession) -> DataFrame:
 #: (emitted first); the previous rotation returns to registration
 #: order.  tests/test_driver_contract.py pins both resulting sets.
 #:
-#: r11 batch (r10 verdict item 1): LEAD with doc_shard_manifest — the
-#: one oracled query registered past the window in r10, hence the only
-#: one with no driver evidence — then recycle OLDEST-verified first:
-#: the 14 r6-era veterans, the 14 r7-era, the 15 r8-era, and six of
-#: the r9 batch fill the window to 50 (order computed from the
-#: CORRECTNESS_r01..r10 archives: last-verified round ascending, then
-#: registration order).  The r10 batch (TPC-H tail, md5 siblings,
-#: source-stats, decon/doc-quality) went 50/50 driver-green in
-#: CORRECTNESS_r10 and returns to overflow.
-#:
-#: Late-r11 amendment: doc_corpus_diff + doc_eval_carve (registered
-#: AFTER this round's rotation commit, so otherwise driver-unverified
-#: until r12) displace the two youngest fills (orders_of_building_semi,
-#: orders_left_join_big_lines — both r9-verified): never-verified
-#: oracles always outrank recycling a veteran.  Second amendment, same
-#: principle: the four web-text oracles (doc_html_extract,
-#: doc_line_dedup, doc_c4_line_filter, doc_warc_roundtrip_extract)
-#: displace four more r9-verified fills (q3, q5, events_json_extract,
-#: orders_excluding_building_anti).
+#: r12 batch: the 50 OLDEST-verified oracled queries, computed from
+#: the CORRECTNESS_r01..r11 archives (last-verified round ascending,
+#: then registration order): all 47 r9-verified queries (joins /
+#: argmax / asof / topk, the URL family, the eval octet, TPC-H
+#: q2/q3/q5/q11, sessionize / rollup / windows) plus the 3 oldest r10
+#: fills (daily_top_events, dedup_minhash_md5, dedup_simhash_md5).
+#: The r11 batch returns to the overflow set.  Next rotation: the
+#: remaining r10 batch, oldest-verified first (CLAUDE.md "r13 starting
+#: points" (a)).
 WINDOW_ROTATION = [
     "argmax_event_per_user", "asof_click_before_purchase",
     "cube_lineitem_stats", "disjunctive_join_nation_customer",

@@ -28,6 +28,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
+from .catalog import load_table
 from .plans.trends import TrendsParams, TrendsPipeline, TrendsTables
 
 # reference trends.go:39: hard-coded deprecated list id also matched
@@ -105,8 +106,9 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def load_domain_tables(spark: SparkSession, source_dir: str) -> TrendsTables:
-    load = lambda n: spark.read.parquet(f"{source_dir}/{n}.parquet")
-    return TrendsTables(*[load(n) for n in DOMAIN_TABLES])
+    return TrendsTables(
+        *[load_table(spark, source_dir, n) for n in DOMAIN_TABLES]
+    )
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:

@@ -4,9 +4,8 @@ Decoding Guide").  No code is taken from any decoder implementation;
 the large static spec tables (quantizer lookups, default/update
 coefficient probabilities, key-frame B-mode probabilities) are lifted
 from the system ``libwebp.so.7`` data section at verified-unique
-offsets — the same precedent as ``codec_webp._CODE_TO_PLANE`` — and
-``tests/test_codec_vp8.py`` re-extracts them from the .so at run time
-and asserts byte equality.
+offsets, and ``tests/test_codec_vp8.py`` re-extracts them from the .so
+at run time and asserts byte equality.
 
 Scope: key frames only (a WebP 'VP8 ' chunk is always a key frame).
 Covers the full still-image feature surface: boolean arithmetic
@@ -25,7 +24,7 @@ fixed-point YUV→RGB conversion, interop-tested byte-exact against
 Reference parity note: the reference repo has no media decoding at
 all (its only source is trends.go); this module extends the engine's
 multimodal boundary (SURVEY.md LLM-pipeline section) from
-PNG/JPEG/GIF/BMP/WAV/VP8L to lossy WebP.
+PNG/JPEG/WAV to the VP8 bitstream that WebM/MP4 video carries.
 """
 
 from __future__ import annotations

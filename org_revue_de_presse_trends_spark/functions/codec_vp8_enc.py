@@ -1,9 +1,8 @@
 """Minimal spec-valid VP8 intra (key-frame) ENCODER — pure
-Python/numpy, written from the public RFC 6386 specification.  The
-same role the minimal VP8L encoder plays in ``codec_webp``: produce
-real, decodable lossy-WebP/WebM payloads inside an environment with no
-media libraries, so video/image pipelines can be exercised end-to-end
-with REAL bitstreams.
+Python/numpy, written from the public RFC 6386 specification.  It
+produces real, decodable lossy-WebP/WebM payloads inside an environment
+with no media libraries, so video/image pipelines can be exercised
+end-to-end with REAL bitstreams.
 
 Deliberately minimal, spec-valid, and decoder-honest:
 

@@ -14,32 +14,20 @@ decodable with the standard library alone, so those paths are REAL
   (Annex K tables; the progressive encoder emits the classic
   libjpeg-style scan script and exists chiefly so the decoder's
   Annex-G paths round-trip against the baseline path bit-exactly).
-- GIF: 87a/89a LZW decode (first frame, interlace, transparency,
-  local/global palettes) + a lossless single-frame encoder.
-- BMP: uncompressed 8/24/32-bit decode (paletted/BGR/BGRA, either row
-  order).
 - WAV: stdlib ``wave`` for PCM 8/16/32-bit.
-- WebP lossless (VP8L): full decoder (all four transforms, meta-
-  Huffman, LZ77, color cache) + a minimal spec-valid encoder in
-  ``codec_webp.py`` — interop-verified bit-exact both ways against
-  the system libwebp.
-- WebP lossy (VP8 key frame) + still alpha (ALPH): full decoder in
-  ``codec_vp8.py`` (boolean arithmetic decoder, segmentation, all
-  intra modes, multi-partition, both loop filters) — YUV planes and
-  RGBA output interop-verified bit-exact against the system libwebp.
-  A minimal spec-valid VP8 ENCODER lives in ``codec_vp8_enc.py``.
+- VP8 (lossy WebP key frame): full decoder in ``codec_vp8.py`` (boolean
+  arithmetic decoder, segmentation, all intra modes, multi-partition,
+  both loop filters) — YUV planes and RGBA output interop-verified
+  bit-exact against the system libwebp.  A minimal spec-valid VP8
+  ENCODER lives in ``codec_vp8_enc.py``.
 - MP4 (ISO-BMFF) + WebM (EBML): native container demux (tracks,
   sample tables / clusters, sync flags) with VP8 video decoding
   through ``codec_vp8`` (``container_mp4.py`` / ``container_webm.py``).
-- Animated WebP (ANIM/ANMF): full frame composition (alpha-over /
-  replace, dispose-to-background) over the native still decoders in
-  ``codec_webp.decode_webp_anim``; ``decode_image`` returns the first
-  composed frame (the GIF precedent).
 
-Everything else (non-VP8 video codecs, fragmented mp4, arithmetic/12-bit JPEG,
-...) dispatches to PIL / the ffmpeg binary when present (``HAVE_PIL``
-/ ``FFMPEG_BIN``) and raises ``NotImplementedError`` otherwise — the
-documented codec boundary.
+Everything else (GIF, BMP and WebP image files, non-VP8 video codecs,
+fragmented mp4, arithmetic/12-bit JPEG, ...) dispatches to PIL / the
+ffmpeg binary when present (``HAVE_PIL`` / ``FFMPEG_BIN``) and raises
+``NotImplementedError`` otherwise — the documented codec boundary.
 
 Scale note: these run inside ``mapInPandas`` workers on the executors;
 per-image cost is the codec itself (zlib inflate dominates).  The
@@ -219,10 +207,9 @@ def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
 
 
 def decode_image(payload: bytes) -> np.ndarray:
-    """Image bytes → uint8 (H, W, C): stdlib for PNG, JPEG (baseline
-    + progressive), GIF (first frame), uncompressed BMP, and lossless
-    WebP (VP8L); PIL for the rest when installed, NotImplementedError
-    at the boundary."""
+    """Image bytes → uint8 (H, W, C): stdlib for PNG and JPEG (baseline
+    + progressive); PIL for the rest (GIF, BMP, WebP, ...) when
+    installed, NotImplementedError naming the format at the boundary."""
     fmt = sniff_format(payload)
     if fmt == "png":
         try:
@@ -237,28 +224,6 @@ def decode_image(payload: bytes) -> np.ndarray:
             # arithmetic/12-bit/CMYK and files our parser rejects both
             # fall through to PIL when installed (the pre-native
             # robustness property); without PIL the error surfaces
-            if not HAVE_PIL:
-                raise
-    if fmt == "gif":
-        try:
-            return decode_gif(payload)
-        except (NotImplementedError, ValueError):
-            if not HAVE_PIL:
-                raise
-    if fmt == "bmp":
-        try:
-            return decode_bmp(payload)
-        except (NotImplementedError, ValueError):
-            if not HAVE_PIL:
-                raise
-    if fmt == "webp":
-        try:
-            from .codec_webp import decode_webp
-
-            return decode_webp(payload)
-        except (NotImplementedError, ValueError):
-            # VP8L/VP8/ALPH/ANIM are all native; ValueError here
-            # means a malformed container
             if not HAVE_PIL:
                 raise
     if HAVE_PIL:  # pragma: no cover - exercised only with PIL
@@ -1541,344 +1506,3 @@ def encode_jpeg_progressive(
     out.extend(data)
     out += b"\xff\xd9"
     return bytes(out)
-
-
-# --------------------------------------------------------------------------
-# GIF (87a/89a) — stdlib+numpy LZW decode/encode, first frame.
-# --------------------------------------------------------------------------
-
-
-def _gif_lzw_decode(min_code_size: int, data: bytes, n_expected: int):
-    """GIF-variant LZW: variable-width codes packed LSB-first, CLEAR
-    resets the table, widths grow to 12 bits.  Returns the index
-    stream (length clamped to ``n_expected`` — encoders may pad)."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    out: list[int] = []
-    # bit reader, LSB-first
-    acc = 0
-    nbits = 0
-    pos = 0
-
-    def read(width):
-        nonlocal acc, nbits, pos
-        while nbits < width:
-            if pos >= len(data):
-                return None
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        v = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        return v
-
-    table: list[list[int]] = []
-    width = min_code_size + 1
-    prev: list[int] | None = None
-
-    def reset():
-        nonlocal table, width, prev
-        table = [[i] for i in range(clear)] + [[], []]
-        width = min_code_size + 1
-        prev = None
-
-    reset()
-    while len(out) < n_expected:
-        code = read(width)
-        if code is None or code == end:
-            break
-        if code == clear:
-            reset()
-            continue
-        if code < len(table) and code not in (clear, end):
-            entry = table[code]
-            if not entry and code >= clear:
-                raise ValueError("GIF LZW referenced reserved code")
-        elif code == len(table) and prev is not None:
-            entry = prev + [prev[0]]
-        else:
-            raise ValueError("GIF LZW code out of range")
-        out.extend(entry)
-        if prev is not None and len(table) < 4096:
-            table.append(prev + [entry[0]])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    return out[:n_expected]
-
-
-def _gif_lzw_encode(min_code_size: int, indices) -> bytes:
-    """GIF-variant LZW encoder (LSB-first packing, CLEAR on table
-    overflow) — the exact inverse of ``_gif_lzw_decode``."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    outbits = bytearray()
-    acc = 0
-    nbits = 0
-
-    def write(code, width):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            outbits.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = {(i,): i for i in range(clear)}
-    next_code = end + 1
-    width = min_code_size + 1
-    write(clear, width)
-    buf: tuple = ()
-    for sym in indices:
-        cand = buf + (int(sym),)
-        if cand in table:
-            buf = cand
-            continue
-        write(table[buf], width)
-        if next_code < 4096:
-            table[cand] = next_code
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            next_code += 1
-        else:
-            write(clear, width)
-            table = {(i,): i for i in range(clear)}
-            next_code = end + 1
-            width = min_code_size + 1
-        buf = (int(sym),)
-    if buf:
-        write(table[buf], width)
-    write(end, width)
-    if nbits:
-        outbits.append(acc & 0xFF)
-    return bytes(outbits)
-
-
-def decode_gif(payload: bytes) -> np.ndarray:
-    """GIF bytes → uint8 (H, W, 3|4) — the FIRST frame, composited on
-    the logical screen; alpha channel present iff the frame declares a
-    transparency index.  Supports 87a/89a, global/local color tables,
-    interlacing; raises ValueError on malformed input."""
-    if not payload.startswith((b"GIF87a", b"GIF89a")):
-        raise ValueError("not a GIF: bad signature")
-    try:
-        return _decode_gif_inner(payload)
-    except (struct.error, IndexError, KeyError) as e:
-        raise ValueError(f"malformed GIF: {type(e).__name__}: {e}") from e
-
-
-def _decode_gif_inner(payload: bytes) -> np.ndarray:
-    sw, sh, flags, _bg, _ar = struct.unpack_from("<HHBBB", payload, 6)
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = np.frombuffer(
-            payload[pos : pos + 3 * n], dtype=np.uint8
-        ).reshape(n, 3)
-        pos += 3 * n
-    transparent = None
-    while pos < len(payload):
-        b = payload[pos]
-        if b == 0x3B:  # trailer
-            break
-        if b == 0x21:  # extension
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xF9:  # graphic control
-                size = payload[pos]
-                gflags = payload[pos + 1]
-                if gflags & 1:
-                    transparent = payload[pos + 4]
-                pos += size + 1
-            while payload[pos]:  # sub-blocks until terminator
-                pos += payload[pos] + 1
-            pos += 1
-            continue
-        if b == 0x2C:  # image descriptor — first frame wins
-            left, top, w, h, iflags = struct.unpack_from(
-                "<HHHHB", payload, pos + 1
-            )
-            pos += 10
-            ct = gct
-            if iflags & 0x80:
-                n = 2 << (iflags & 7)
-                ct = np.frombuffer(
-                    payload[pos : pos + 3 * n], dtype=np.uint8
-                ).reshape(n, 3)
-                pos += 3 * n
-            if ct is None:
-                raise ValueError("GIF image without a color table")
-            min_code = payload[pos]
-            pos += 1
-            chunks = []
-            while payload[pos]:
-                ln = payload[pos]
-                chunks.append(payload[pos + 1 : pos + 1 + ln])
-                pos += ln + 1
-            pos += 1
-            idx = _gif_lzw_decode(min_code, b"".join(chunks), w * h)
-            if len(idx) < w * h:
-                raise ValueError("GIF pixel data truncated")
-            grid = np.array(idx, dtype=np.int64).reshape(h, w)
-            if iflags & 0x40:  # interlaced: 4-pass row order
-                rows = np.concatenate([
-                    np.arange(0, h, 8), np.arange(4, h, 8),
-                    np.arange(2, h, 4), np.arange(1, h, 2),
-                ])
-                un = np.empty_like(grid)
-                un[rows] = grid
-                grid = un
-            if np.any(grid >= len(ct)):
-                raise ValueError("GIF index outside color table")
-            rgb = ct[grid]
-            if transparent is not None:
-                alpha = np.where(grid == transparent, 0, 255).astype(
-                    np.uint8
-                )
-                out = np.dstack([rgb, alpha])
-            else:
-                out = rgb
-            # composite onto the logical screen when the frame is a
-            # sub-rectangle (rare for frame 0; zeros elsewhere)
-            if (left, top, w, h) != (0, 0, sw, sh):
-                full = np.zeros(
-                    (sh, sw, out.shape[2]), dtype=np.uint8
-                )
-                full[top : top + h, left : left + w] = out
-                out = full
-            return out
-        raise ValueError(f"unexpected GIF block 0x{b:02x}")
-    raise ValueError("GIF contains no image data")
-
-
-def encode_gif(img: np.ndarray) -> bytes:
-    """uint8 (H, W) / (H, W, 1) / (H, W, 3) → single-frame GIF89a.
-    The palette is built from the image's unique colors — raises
-    ValueError beyond 256 (GIF is palettized; quantization is the
-    caller's job).  Lossless inverse of ``decode_gif``."""
-    img = np.asarray(img, dtype=np.uint8)
-    if img.ndim == 2:
-        img = img[:, :, None]
-    if img.ndim != 3 or img.shape[2] not in (1, 3):
-        raise ValueError(f"unsupported image shape {img.shape}")
-    if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    h, w, _ = img.shape
-    flat = img.reshape(-1, 3)
-    colors, inverse = np.unique(flat, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError(
-            f"GIF needs <= 256 colors, image has {len(colors)}"
-        )
-    # palette size: power of two >= max(2, n_colors)
-    bits = max((len(colors) - 1).bit_length(), 1)
-    n_pal = 1 << bits
-    pal = np.zeros((n_pal, 3), dtype=np.uint8)
-    pal[: len(colors)] = colors
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += pal.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    min_code = max(bits, 2)
-    out.append(min_code)
-    lzw = _gif_lzw_encode(min_code, inverse.reshape(-1))
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """BMP (BITMAPINFOHEADER, uncompressed BI_RGB) → uint8 (H, W, 3|4):
-    8-bit paletted, 24-bit BGR, 32-bit BGRA; bottom-up or top-down rows,
-    4-byte row padding.  ValueError on malformed, NotImplementedError on
-    compressed/exotic variants."""
-    if not payload.startswith(b"BM"):
-        raise ValueError("not a BMP: bad signature")
-    try:
-        (data_off,) = struct.unpack_from("<I", payload, 10)
-        hdr_size, w, h_signed = struct.unpack_from("<Iii", payload, 14)
-        planes, bpp = struct.unpack_from("<HH", payload, 26)
-        (compression,) = struct.unpack_from("<I", payload, 30)
-    except struct.error as e:
-        raise ValueError(f"malformed BMP header: {e}") from e
-    if hdr_size in (12, 16, 64):  # OS/2 core-header family
-        raise NotImplementedError("BMP core-header variant needs PIL")
-    if hdr_size < 40:
-        raise ValueError(f"malformed BMP header size {hdr_size}")
-    masks = None
-    if compression == 3 and bpp == 32 and hdr_size >= 52:
-        # BI_BITFIELDS: not compression at all, just channel masks
-        # (3 or 4 DWORDs following the 40-byte info header)
-        try:
-            masks = struct.unpack_from("<III", payload, 54)
-            masks += (
-                struct.unpack_from("<I", payload, 66) if hdr_size >= 56
-                else (0,)
-            )
-        except struct.error as e:
-            raise ValueError(f"BMP bitfields truncated: {e}") from e
-        if any(m == 0 for m in masks[:3]):
-            raise NotImplementedError(
-                "BMP bitfields with a zero color mask need PIL"
-            )
-        if any(m and bin(m).count("1") != 8 for m in masks) or any(
-            m and (m >> (m & -m).bit_length() - 1) != 0xFF
-            for m in masks if m
-        ):
-            raise NotImplementedError(
-                "BMP bitfields with non-byte-aligned masks need PIL"
-            )
-    elif compression != 0:
-        raise NotImplementedError(
-            f"compressed BMP (method {compression}) needs PIL"
-        )
-    if bpp not in (8, 24, 32):
-        raise NotImplementedError(f"{bpp}-bit BMP needs PIL")
-    top_down = h_signed < 0
-    height = abs(h_signed)
-    width = w
-    if width <= 0 or height <= 0:
-        raise ValueError("BMP with non-positive dimensions")
-    row_bytes = (width * bpp // 8 + 3) & ~3
-    need = data_off + row_bytes * height
-    if len(payload) < need:
-        raise ValueError("BMP pixel data truncated")
-    rows = np.frombuffer(
-        payload[data_off : data_off + row_bytes * height], dtype=np.uint8
-    ).reshape(height, row_bytes)
-    if not top_down:
-        rows = rows[::-1]
-    if bpp == 8:
-        # palette: BGRX quads between header and pixel data
-        pal_off = 14 + hdr_size
-        n_pal = (data_off - pal_off) // 4
-        if n_pal <= 0:
-            raise ValueError("8-bit BMP without a palette")
-        pal = np.frombuffer(
-            payload[pal_off : pal_off + 4 * n_pal], dtype=np.uint8
-        ).reshape(n_pal, 4)[:, [2, 1, 0]]  # BGRX → RGB
-        idx = rows[:, :width].astype(np.int64)
-        if np.any(idx >= n_pal):
-            raise ValueError("BMP index outside palette")
-        return pal[idx]
-    ch = bpp // 8
-    px = rows[:, : width * ch].reshape(height, width, ch)
-    if ch == 3:
-        return px[:, :, [2, 1, 0]].copy()  # BGR → RGB
-    if masks is not None:
-        # byte-aligned masks: channel c lives at byte mask.bit_length()//8 - 1
-        order = []
-        for m in masks[:3]:
-            order.append((m.bit_length() - 8) // 8)
-        alpha = masks[3]
-        if alpha:
-            order.append((alpha.bit_length() - 8) // 8)
-            return px[:, :, order].copy()
-        return px[:, :, order].copy()
-    return px[:, :, [2, 1, 0, 3]].copy()  # BGRA → RGBA

@@ -157,86 +157,14 @@ def shingle_hashes(text: Column, k: int = 3) -> Column:
     ).otherwise(F.array_distinct(_rolling_kgram_hashes(toks, k)))
 
 
-def _rot_col(c: Column, r: int) -> Column:
-    r = r % 64
-    if r == 0:
-        return c
-    return F.shiftrightunsigned(c, r).bitwiseOR(F.shiftleft(c, 64 - r))
-
-
-def _with_log_kgrams(df, th_col: str, out_col: str, k: int):
-    """Doubling rolling-hash combine: O(log k) interpreted passes
-    instead of the sequential fold's k-1.
-
-    The rotate-xor hash composes: h(u·v) = rot(h(u), 7·|v|) ^ h(v)
-    (induction on |v|), so width-2^j window hashes are built by
-    combining two staged width-2^(j-1) levels, and the k-gram is
-    assembled from k's binary decomposition.  Every level is a COLUMN
-    ATTRIBUTE behind a projection boundary — inside one expression the
-    interpreted evaluator would recompute each level once per
-    reference, turning the doubling into exponential work (CLAUDE.md
-    HOF invariant).  Values are bit-identical to ``_combine_kgrams``.
-    """
-    # closure factories: PySpark introspects lambda arity, so rotation
-    # amounts must be captured in a closure, not a default argument
-    def _merge(r: int):
-        return lambda a, b: _rot_col(a, r).bitwiseXOR(b)
-
-    def _rotate(r: int):
-        return lambda x: _rot_col(x, r)
-
-    levels = {1: th_col}
-    w = 1
-    while w * 2 <= k:
-        lo, hi = levels[w], f"__kg{w * 2}"
-        n_windows = F.greatest(
-            F.size(F.col(lo)) - F.lit(w), F.lit(0)
-        )  # len(g_2w) = len(g_w) - w
-        combined = F.zip_with(
-            F.slice(F.col(lo), 1, n_windows),
-            F.slice(F.col(lo), w + 1, n_windows),
-            _merge(7 * w),
-        )
-        df = df.select(*df.columns, combined.alias(hi))
-        levels[w * 2] = hi
-        w *= 2
-    # binary decomposition of k, most-significant piece first: piece at
-    # token offset ``off`` covers ``width`` tokens and is rotated by
-    # 7 × (tokens remaining to its right)
-    pieces = []
-    offset = 0
-    remaining = k
-    for width in sorted(levels, reverse=True):
-        if width <= remaining:
-            pieces.append((width, offset))
-            offset += width
-            remaining -= width
-    win = F.greatest(F.size(F.col(th_col)) - F.lit(k - 1), F.lit(1))
-    acc = None
-    consumed = 0
-    for width, off in pieces:
-        consumed += width
-        tail = k - consumed
-        part = F.slice(F.col(levels[width]), off + 1, win)
-        rotated = F.transform(part, _rotate(7 * tail)) if tail else part
-        acc = rotated if acc is None else F.zip_with(
-            acc, rotated, lambda a, b: a.bitwiseXOR(b)
-        )
-    return df.select(*df.columns, acc.alias(out_col))
-
-
 def with_shingle_hashes(
     df, text_col: str = "text", out_col: str = "sh", k: int = 3
 ):
     """DataFrame-level ``shingle_hashes`` with each level staged as a
     column attribute (see ``with_winnow_fingerprints`` for why) —
     identical values, tokenization/hashing evaluated once per row.
-    (An O(log k)-pass doubling combine — ``_with_log_kgrams``, bit-
-    identical by the composition rule h(u·v) = rot(h(u), 7|v|) ^ h(v) —
-    was measured 2.3× SLOWER at k=13/sf0.1: each staged power-of-two
-    level materializes a full-length array attribute, and that copying
-    outweighs the saved interpreted passes.  The sequential fold wins
-    at every k; the doubling form is kept for reference/testing only.)
+    (An O(log k)-pass doubling combine measured 2.3× slower at k=13/sf0.1:
+    each staged level copies a full-length array attribute.)
     """
     rest = list(df.columns)
     # every stage as ONE parsed SQL expression: the Column-by-Column

@@ -55,7 +55,6 @@ def shingle_pair_counts(
     block_cols: list[str] | None = None,
     k: int = 3,
     max_shingle_df: int | None = 1000,
-    pair_mode: str = "join",
 ) -> DataFrame:
     """Shared candidate-pair machinery for the exact set-similarity
     family: (id_a, id_b, n_a, n_b, n_inter) with id_a < id_b over the
@@ -92,7 +91,10 @@ def shingle_pair_counts(
     # exploded map stage materialized TWICE (two 1-task 5.9 MB shuffle
     # writes); with the pre-filter every reference of the exploded
     # stream reuses ONE materialized exchange (plan: 2 ShuffleQueryStage
-    # on the explode subtree -> 1 + ReusedExchange).  Output-identical.
+    # on the explode subtree -> 1 + ReusedExchange).  Output-identical
+    # unless ``max_shingle_df`` is set and the input holds NULL ids or
+    # blocks: those rows no longer count towards a shingle's document
+    # frequency, so a shingle at the cap boundary can move below it.
     notnull = F.col("id").isNotNull()
     for c in block_cols:
         notnull = notnull & F.col(c).isNotNull()
@@ -127,65 +129,25 @@ def shingle_pair_counts(
     # id-window before the join would re-partition the exploded rows by
     # id and force both join sides to recompute everything.  Shingles
     # are distinct per doc, so a row count is the set size.
-    # Dead end (r12 optimization round): a WINDOW-FREE group mode —
-    # groupBy(shingle, block).agg(array_sort(collect_list(id))) with
-    # the df cap as a size(ids) filter (no Sort+Window pass at all),
-    # memory-bounded pair expansion via posexplode + slice + explode
-    # (O(cap) per row, fixing the C(cap,2)-in-one-value spike), and
-    # sizes derived from the same grouped frame.  Output identical;
-    # steady-state interleaved best-of-8 at sf0.1 vs the fixed join
-    # form: join min 1.206 / med 1.256 s, group min 1.512 / med 1.704
-    # (localCheckpoint(grouped) variant 1.65/1.86 — worse still).  The
-    # collect_list buffering + double Generate + the aggregate running
-    # once per reference cost more than the window's sorts, which the
-    # reused exchange already amortizes.  Don't retry without a
-    # different sizes story.
-    if pair_mode == "group":
-        # Alternative formulation: aggregate each shingle's id list and
-        # expand C(df,2) ordered pairs with a HOF instead of the
-        # exploded self-join — one hash aggregate replaces the
-        # sort-merge join (both sort the exploded stream by the same
-        # key; the aggregate skips one side's sort + the join operator).
-        # MEASURED r11 (sf0.1, doc_neardup_clustering's pair stage,
-        # warm interleaved best-of-8, three sessions): group med
-        # 1.34-1.46 s vs join med 1.54-1.69 s — a consistent but
-        # marginal 5-7% win.  NOT the default: a df-capped shingle
-        # expands to C(cap,2) structs in ONE array value (~500k
-        # structs at cap=1000) where the join STREAMS the same rows —
-        # the local win does not justify the per-row memory spike at
-        # the cap boundary at 100 TB.  Kept as a measured alternative;
-        # output bit-identical (exact integer counts, pinned in
-        # tests/test_operators.py).
-        grouped = ex.groupBy("shingle", *block_cols).agg(
-            F.array_sort(F.collect_list("id")).alias("ids")
+    # Dead end (r11 group mode, r12 window-free group mode): collecting
+    # each shingle's id list and expanding C(df,2) pairs with a HOF
+    # instead of the self-join.  Output identical; r11 measured a 5-7%
+    # local win but a df-capped shingle becomes C(cap,2) structs in ONE
+    # value; r12's memory-bounded variant lost outright at sf0.1
+    # (join med 1.256 s vs group med 1.704 s) once the window exchange
+    # was reused.  Don't retry without a different sizes story.
+    a, b = ex.alias("a"), ex.alias("b")
+    join_cond = F.col("a.shingle") == F.col("b.shingle")
+    for c in block_cols:
+        join_cond = join_cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    inter = (
+        a.join(b, join_cond & (F.col("a.id") < F.col("b.id")))
+        .groupBy(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
         )
-        pairs = grouped.where(F.size("ids") >= 2).select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids)), "
-                    "y -> struct(x AS id_a, y AS id_b))))"
-                )
-            ).alias("p")
-        )
-        inter = (
-            pairs.select("p.id_a", "p.id_b")
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    else:
-        a, b = ex.alias("a"), ex.alias("b")
-        join_cond = F.col("a.shingle") == F.col("b.shingle")
-        for c in block_cols:
-            join_cond = join_cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-        inter = (
-            a.join(b, join_cond & (F.col("a.id") < F.col("b.id")))
-            .groupBy(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
     sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
     return (
         inter.join(sizes.select(F.col("id").alias("id_a"),

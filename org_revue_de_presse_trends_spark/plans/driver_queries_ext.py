@@ -38,12 +38,15 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: 30-minute-gap sessions via lag + running sum —
     the batch formulation of stateful session windows (the streaming
     equivalent is session_window / applyInPandasWithState).  One
-    shuffle on user_id serves both window passes."""
+    shuffle on user_id serves both window passes.  The gap is compared
+    in microseconds (the oracle's INTERVAL precision): a whole-second
+    cast would keep a 1800.27 s gap inside one session."""
     ev = load_table(spark, sf_dir, "events")
     order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(order)
+    ts_us = F.unix_micros(F.col("ts"))
+    gap = ts_us - F.lag(ts_us).over(order)
     new_session = F.when(
-        gap.isNull() | (gap > 30 * 60), F.lit(1)
+        gap.isNull() | (gap > 30 * 60 * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
     running = (
         Window.partitionBy("user_id")

@@ -70,9 +70,10 @@ def split_corrupt(
     the full parsed corpus competes with execution memory on every
     executor (guide §5) — a disk-backed copy satisfies the analyzer
     and the share-one-parse goal while bounding pressure to local
-    disk.  Call ``unpersist()`` on either returned frame's source
-    (``clean.sparkSession.catalog.clearCache()`` or keep a handle to
-    ``parsed``) once both splits are consumed."""
+    disk.  ``persist`` marks the caller's ``parsed`` frame itself, so
+    call ``parsed.unpersist()`` once both splits are consumed (a
+    session-wide ``clearCache()`` would drop every other cached
+    dataset too)."""
     if corrupt_col not in parsed.columns:
         raise ValueError(
             f"no {corrupt_col!r} column — read with read_jsonl()"

@@ -1,7 +1,7 @@
 """Lossy-WebP (VP8 key frame) codec vs the system libwebp (ctypes).
 
-Evidence layers (the codec-claim pattern set by test_codec_webp.py —
-the system libwebp.so.7 is the interop oracle for ANY codec claim):
+Evidence layers (the system libwebp.so.7 is the interop oracle for ANY
+codec claim):
 
 1. YUV plane interop: ``decode_vp8_planes`` must be BIT-EXACT against
    ``WebPDecodeYUV`` on libwebp-encoded streams across content types,
@@ -10,13 +10,10 @@ the system libwebp.so.7 is the interop oracle for ANY codec claim):
    ``WebPDecodeRGBA`` (fancy chroma upsampler + fixed-point YUV->RGB).
 3. Feature-path coverage via libwebp's advanced encoder API (WebPConfig
    + WebPPicture over ctypes): simple loop filter, sharpness,
-   2/4/8 token partitions, skip MBs, segment counts, and the ALPH
-   alpha chunk in raw + lossless compression with every filter mode.
+   2/4/8 token partitions, skip MBs and segment counts.
 4. The large spec tables in codec_vp8.py were lifted from libwebp's
    data section; tests re-locate them by content signature and assert
    byte equality (kf-bmode via the documented enum-order permutation).
-5. External ground truth: imghdrdata's python.webp (VP8X+ALPH+VP8)
-   must decode byte-identically to libwebp through decode_image.
 """
 from __future__ import annotations
 
@@ -29,9 +26,6 @@ import numpy as np
 import pytest
 
 from org_revue_de_presse_trends_spark.functions import codec_vp8, codecs
-from org_revue_de_presse_trends_spark.functions.codec_webp import decode_webp
-
-IMGHDR = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/imghdrdata"
 SO_CANDIDATES = ("libwebp.so.7", "/lib/x86_64-linux-gnu/libwebp.so.7")
 
 
@@ -125,9 +119,6 @@ def _load_libwebp():
         lib.WebPPictureImportRGB.restype = ctypes.c_int
         lib.WebPPictureImportRGB.argtypes = [
             ctypes.POINTER(_WebPPicture), ctypes.c_char_p, ctypes.c_int]
-        lib.WebPPictureImportRGBA.restype = ctypes.c_int
-        lib.WebPPictureImportRGBA.argtypes = [
-            ctypes.POINTER(_WebPPicture), ctypes.c_char_p, ctypes.c_int]
         lib.WebPEncode.restype = ctypes.c_int
         lib.WebPEncode.argtypes = [ctypes.POINTER(_WebPConfig),
                                    ctypes.POINTER(_WebPPicture)]
@@ -173,9 +164,9 @@ def _lw_encode_rgb(img: np.ndarray, quality: float) -> bytes:
 
 
 def _lw_encode_advanced(img: np.ndarray, **opts) -> bytes:
-    """Advanced-API encode; img is (H,W,3) RGB or (H,W,4) RGBA."""
+    """Advanced-API encode of an (H,W,3) RGB image."""
     assert _ABI is not None
-    h, w, ch = img.shape
+    h, w, _ = img.shape
     cfg = _WebPConfig()
     assert _LIB.WebPConfigInitInternal(ctypes.byref(cfg), 0, 75.0, _ABI)
     for k, v in opts.items():
@@ -183,12 +174,7 @@ def _lw_encode_advanced(img: np.ndarray, **opts) -> bytes:
     pic = _WebPPicture()
     assert _LIB.WebPPictureInitInternal(ctypes.byref(pic), _ABI)
     pic.width, pic.height = w, h
-    if ch == 3:
-        assert _LIB.WebPPictureImportRGB(ctypes.byref(pic), img.tobytes(),
-                                         w * 3)
-    else:
-        assert _LIB.WebPPictureImportRGBA(ctypes.byref(pic), img.tobytes(),
-                                          w * 4)
+    assert _LIB.WebPPictureImportRGB(ctypes.byref(pic), img.tobytes(), w * 3)
     wr = _WebPMemoryWriter()
     _LIB.WebPMemoryWriterInit(ctypes.byref(wr))
     pic.writer = ctypes.cast(_LIB.WebPMemoryWrite, ctypes.c_void_p)
@@ -385,39 +371,7 @@ def test_advanced_feature_paths(case):
 
 
 # ---------------------------------------------------------------------------
-# 4. ALPH chunk: raw + lossless compression, all filter modes
-# ---------------------------------------------------------------------------
-
-def _alpha_image(mask: bool) -> np.ndarray:
-    rng = np.random.default_rng(3)
-    h, w = 41, 57
-    img = rng.integers(0, 256, (h, w, 4), dtype=np.uint8)
-    xx, yy = np.meshgrid(np.arange(w), np.arange(h))
-    if mask:
-        img[..., 3] = (((xx + yy) % 7 < 3) * 255).astype(np.uint8)
-    else:
-        img[..., 3] = (xx * 255 // (w - 1)).astype(np.uint8)
-    return img
-
-
-@needs_libwebp
-@pytest.mark.parametrize("mask", [False, True])
-@pytest.mark.parametrize("opts", [
-    dict(alpha_compression=0),
-    dict(alpha_compression=1, alpha_filtering=0),
-    dict(alpha_compression=1, alpha_filtering=1),
-    dict(alpha_compression=1, alpha_filtering=2, method=6),
-    dict(alpha_compression=1, alpha_quality=40),
-], ids=["raw", "lossless_f0", "lossless_f1", "lossless_f2", "quality40"])
-def test_alpha_chunk_matches_libwebp(mask, opts):
-    if _ABI is None:
-        pytest.skip("no usable encoder ABI")
-    data = _lw_encode_advanced(_alpha_image(mask), **opts)
-    assert np.array_equal(_lw_decode_rgba(data), decode_webp(data))
-
-
-# ---------------------------------------------------------------------------
-# 5. lifted tables match the system libwebp byte-for-byte
+# 4. lifted tables match the system libwebp byte-for-byte
 # ---------------------------------------------------------------------------
 
 @needs_libwebp
@@ -475,29 +429,8 @@ def test_lifted_tables_match_system_libwebp():
 
 
 # ---------------------------------------------------------------------------
-# 6. external ground truth + dispatch + malformed input
+# 5. malformed input
 # ---------------------------------------------------------------------------
-
-@needs_libwebp
-def test_external_python_webp_decodes_natively():
-    path = f"{IMGHDR}/python.webp"
-    if not os.path.exists(path):
-        pytest.skip("imghdrdata vector not present")
-    data = open(path, "rb").read()
-    assert codecs.sniff_format(data) == "webp"
-    ours = codecs.decode_image(data)           # VP8X + ALPH + VP8
-    assert np.array_equal(ours, _lw_decode_rgba(data))
-    # the alpha plane is real (the logo has transparent corners)
-    assert ours[..., 3].min() < 128 < int(ours[..., 3].max())
-
-
-@needs_libwebp
-def test_decode_image_dispatches_lossy_webp():
-    data = _lw_encode_rgb(_VEC["grad_48x48"], 75.0)
-    out = codecs.decode_image(data)
-    assert out.shape == (48, 48, 4)
-    assert np.array_equal(out, _lw_decode_rgba(data))
-
 
 def test_malformed_inputs_raise_value_error():
     with pytest.raises(ValueError):
@@ -537,15 +470,15 @@ def test_truncated_real_stream_still_terminates():
 
 
 def test_mutated_lossy_webp_raises_value_error_or_decodes():
-    """Deterministic byte-mutation fuzz: a corrupted lossy-WebP either
-    decodes (VP8 tolerates bool-stream damage by design — reads past
-    the end yield zeros) or raises ValueError — never another
+    """Deterministic byte-mutation fuzz: a corrupted lossy-WebP VP8
+    chunk either decodes (VP8 tolerates bool-stream damage by design —
+    reads past the end yield zeros) or raises ValueError — never another
     exception class, never a hang.  Seeded, so green means green on
     any machine (the r7 hypothesis lesson)."""
     if _LIB is None:
         pytest.skip("system libwebp not available")
     rng = np.random.default_rng(1234)
-    base = bytearray(_lw_encode_rgb(_VEC["waves_16x16"], 60.0))
+    base = bytearray(_vp8_chunk(_lw_encode_rgb(_VEC["waves_16x16"], 60.0)))
     for _ in range(80):
         data = bytearray(base)
         for _ in range(int(rng.integers(1, 4))):
@@ -554,16 +487,16 @@ def test_mutated_lossy_webp_raises_value_error_or_decodes():
                 data[int(rng.integers(0, len(data)))] = int(
                     rng.integers(0, 256))
             elif kind == 1:    # truncate
-                data = data[:int(rng.integers(12, len(data)))]
+                data = data[:int(rng.integers(1, len(data)))]
             else:              # splice garbage into the stream body
-                at = int(rng.integers(20, max(len(data), 21)))
+                at = int(rng.integers(10, max(len(data), 11)))
                 data = (data[:at]
                         + bytes(rng.integers(0, 256, 8, dtype=np.uint8))
                         + data[at:])
         try:
-            out = codecs.decode_image(bytes(data))
+            out = codec_vp8.decode_vp8_rgba(bytes(data))
             assert out.dtype == np.uint8 and out.ndim == 3
-        except (ValueError, NotImplementedError):
+        except ValueError:
             pass
 
 

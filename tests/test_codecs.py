@@ -209,14 +209,20 @@ def test_sniff_format():
 
 @pytest.mark.skipif(codecs.HAVE_PIL, reason="PIL installed: real path")
 def test_undecodable_format_raises_without_pil():
-    # webm sits past the native boundary (PNG/JPEG/GIF decode without
-    # PIL since r6); malformed JPEG/GIF raise ValueError instead
-    with pytest.raises(NotImplementedError, match="PIL"):
-        codecs.decode_image(b"\x1a\x45\xdf\xa3 fake webm")
+    # only PNG/JPEG decode natively; every other sniffed format reaches
+    # the PIL boundary and the error names it.  Malformed JPEG raises
+    # ValueError instead.
+    for payload, fmt in [
+        (b"\x1a\x45\xdf\xa3 fake webm", "webm"),
+        (b"GIF89a fake gif", "gif"),
+        (b"BM" + b"\x00" * 60, "bmp"),
+        (b"RIFF\x00\x00\x00\x00WEBPVP8 fake webp", "webp"),
+    ]:
+        assert codecs.sniff_format(payload) == fmt
+        with pytest.raises(NotImplementedError, match=f"'{fmt}'.*PIL"):
+            codecs.decode_image(payload)
     with pytest.raises(ValueError, match="JPEG"):
         codecs.decode_image(b"\xff\xd8\xff fake jpeg")
-    with pytest.raises(ValueError, match="GIF"):
-        codecs.decode_image(b"GIF89a fake gif")
 
 
 @pytest.mark.skipif(not codecs.HAVE_PIL, reason="PIL not installed")
@@ -443,129 +449,3 @@ def test_jpeg_encoder_output_is_parseable_structure():
     assert b.startswith(b"\xff\xd8\xff\xe0") and b.endswith(b"\xff\xd9")
     for marker in (b"\xff\xdb", b"\xff\xc0", b"\xff\xc4", b"\xff\xda"):
         assert marker in b
-
-
-IMGHDR_DIR = "/root/.pyenv/versions/3.7.16/lib/python3.7/test/imghdrdata"
-
-
-def test_gif_roundtrip_lossless():
-    """GIF is palettized-lossless: encode->decode is pixel-exact for
-    any image with <= 256 distinct colors."""
-    rng = np.random.default_rng(3)
-    for shape, ncol in [((13, 17), 7), ((32, 48), 250), ((8, 8), 2)]:
-        pal = rng.integers(0, 256, (ncol, 3)).astype(np.uint8)
-        img = pal[rng.integers(0, ncol, shape)]
-        assert np.array_equal(codecs.decode_gif(codecs.encode_gif(img)), img)
-    gray = rng.integers(0, 200, (9, 11)).astype(np.uint8)
-    rt = codecs.decode_gif(codecs.encode_gif(gray))
-    assert np.array_equal(rt, np.repeat(gray[:, :, None], 3, axis=2))
-    yy, xx = np.mgrid[0:20, 0:20]
-    manycolors = np.stack([yy, xx, xx], axis=2).astype(np.uint8)  # 400
-    with pytest.raises(ValueError, match="256 colors"):
-        codecs.encode_gif(manycolors)
-
-
-@pytest.mark.skipif(
-    not __import__("os").path.exists(IMGHDR_DIR),
-    reason="external GIF samples not on this host",
-)
-def test_gif_external_matches_truecolor_png_sibling():
-    """The CPython test-suite logo exists as BOTH python.gif and
-    python.png: decoding the externally-encoded GIF must land within
-    palette-quantization distance of the truecolor PNG (max per-pixel
-    channel-sum diff 8 measured while pinning) — a decoding bug
-    produces wildly different colors, not near-equality."""
-    g = codecs.decode_gif(open(f"{IMGHDR_DIR}/python.gif", "rb").read())
-    p = codecs.decode_png(open(f"{IMGHDR_DIR}/python.png", "rb").read())
-    assert g.shape == (16, 16, 4)  # transparency declared
-    assert p.shape == (16, 16, 3)
-    opaque = g[:, :, 3] > 0
-    assert int((~opaque).sum()) == 107  # pinned
-    diff = np.abs(
-        g[:, :, :3].astype(int) - p.astype(int)
-    ).sum(axis=2)[opaque]
-    assert int(diff.max()) <= 8 and float(diff.mean()) < 2.0
-    # and through the auto dispatcher
-    assert np.array_equal(
-        codecs.decode_image(open(f"{IMGHDR_DIR}/python.gif", "rb").read()),
-        g,
-    )
-
-
-def test_gif_interlaced_and_subrect_decode():
-    """Hand-build an interlaced GIF and a sub-rectangle frame; the
-    decoder must deinterlace and composite onto the logical screen."""
-    rng = np.random.default_rng(9)
-    pal = rng.integers(0, 256, (4, 3)).astype(np.uint8)
-    idx = rng.integers(0, 4, (8, 5))
-    img = pal[idx]
-    # interlace: reorder rows into the 4-pass stream and set the flag
-    plain = codecs.encode_gif(img)
-    dec_plain = codecs.decode_gif(plain)
-    passes = list(range(0, 8, 8)) + list(range(4, 8, 8)) + \
-        list(range(2, 8, 4)) + list(range(1, 8, 2))
-    inter_img = img[passes]
-    payload = bytearray(codecs.encode_gif(inter_img))
-    i = payload.index(b"\x2c")
-    assert payload[i + 9] == 0
-    payload[i + 9] = 0x40  # interlace flag
-    dec_inter = codecs.decode_gif(bytes(payload))
-    assert np.array_equal(dec_inter, dec_plain)
-
-
-@pytest.mark.skipif(
-    not __import__("os").path.exists(IMGHDR_DIR),
-    reason="external BMP sample not on this host",
-)
-def test_bmp_external_matches_png_sibling_exactly():
-    """python.bmp (32-bit BI_BITFIELDS, a real external encoder's
-    output) must decode pixel-EXACTLY equal to the truecolor
-    python.png sibling — BMP is lossless."""
-    b = codecs.decode_bmp(open(f"{IMGHDR_DIR}/python.bmp", "rb").read())
-    p = codecs.decode_png(open(f"{IMGHDR_DIR}/python.png", "rb").read())
-    assert b.shape == (16, 16, 4) and p.shape == (16, 16, 3)
-    assert np.array_equal(b[:, :, :3], p)
-    assert np.array_equal(
-        codecs.decode_image(
-            open(f"{IMGHDR_DIR}/python.bmp", "rb").read()
-        ),
-        b,
-    )
-
-
-def test_bmp_hand_built_24bit_both_row_orders():
-    """Hand-assemble minimal 24-bit BMPs (bottom-up and top-down,
-    padded rows) and check exact reconstruction."""
-    img = np.array(
-        [[[255, 0, 0], [0, 255, 0], [0, 0, 255]],
-         [[1, 2, 3], [4, 5, 6], [7, 8, 9]]], dtype=np.uint8
-    )
-    h, w, _ = img.shape
-    row_bytes = (w * 3 + 3) & ~3
-
-    def build(top_down):
-        rows = img if top_down else img[::-1]
-        data = bytearray()
-        for r in rows:
-            line = bytearray()
-            for px in r:
-                line += bytes([px[2], px[1], px[0]])  # BGR
-            line += b"\x00" * (row_bytes - len(line))
-            data += line
-        hsigned = -h if top_down else h
-        hdr = b"BM" + struct.pack("<IHHI", 54 + len(data), 0, 0, 54)
-        info = struct.pack(
-            "<IiiHHIIiiII", 40, w, hsigned, 1, 24, 0, len(data),
-            2835, 2835, 0, 0,
-        )
-        return bytes(hdr + info + data)
-
-    for td in (False, True):
-        assert np.array_equal(codecs.decode_bmp(build(td)), img), td
-
-
-def test_bmp_rejects_garbage_and_exotic():
-    with pytest.raises(ValueError, match="signature"):
-        codecs.decode_bmp(b"not a bmp")
-    with pytest.raises(ValueError, match="truncated|header"):
-        codecs.decode_bmp(b"BM" + b"\x00" * 60)

@@ -182,46 +182,6 @@ def test_repetition_signals_planted(spark):
     ]
 
 
-def test_log_kgram_combine_bit_identical_to_sequential(spark):
-    """The doubling combine must reproduce the sequential rolling fold
-    exactly (composition rule h(u.v) = rot(h(u), 7|v|) ^ h(v)).  It is
-    NOT used in hot paths — measured 2.3x slower at k=13 (staged level
-    materialization outweighs saved passes) — but the algebra is pinned
-    so it stays a valid fallback."""
-    from pyspark.sql import functions as F
-
-    from org_revue_de_presse_trends_spark.functions.text import (
-        _combine_kgrams,
-        _with_log_kgrams,
-        tokens,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"t{(i * 31 + j) % 97}" for j in range(13 + i)))
-         for i in range(1, 30)],
-        ["doc_id", "text"],
-    )
-    base = docs.select("doc_id", tokens(F.col("text")).alias("tk"))
-    base = base.select(
-        "doc_id", "tk",
-        F.transform(F.col("tk"), lambda t: F.xxhash64(t)).alias("th"),
-    )
-    for k in (7, 13):
-        seq = base.select(
-            "doc_id", _combine_kgrams(F.col("th"), k).alias("g")
-        )
-        log = _with_log_kgrams(base, "th", "g2", k).select(
-            "doc_id", F.col("g2").alias("g")
-        )
-        mism = (
-            seq.alias("s")
-            .join(log.alias("l"), "doc_id")
-            .filter(F.col("s.g") != F.col("l.g"))
-            .count()
-        )
-        assert mism == 0, f"k={k}: doubling combine diverged"
-
-
 def test_remove_spans_cuts_exactly_the_matched_windows(spark):
     """Verbatim benchmark inclusion: exactly the 15 benchmark tokens
     vanish (the three overlapping 13-grams merge); the surrounding

@@ -170,18 +170,14 @@ def test_entry_smoke(spark):
 #: how many queries() entries the driver evaluates per round
 DRIVER_WINDOW = 50
 
-#: the frozen contents of that window.  r11 ROTATION (r10 verdict item
-#: 1): doc_shard_manifest leads (the only oracled query with no driver
-#: evidence, registered past the window in r10), followed by the 49
-#: oldest-last-verified veterans (r6-era 14, r7-era 14, r8-era 15, six
-#: r9 fills — order computed from the CORRECTNESS_r01..r10 archives).
-#: The r10 batch went 50/50 driver-green in CORRECTNESS_r10 and
-#: returned to the overflow set below, still gated by this file's
-#: per-query oracle test.  Changing the window is an explicit edit
-#: here, never a side effect of registering a new query.  Late-r11
-#: amendments (never-verified oracles outrank recycling a veteran):
-#: doc_corpus_diff + doc_eval_carve, then the four web-text oracles,
-#: displace the six youngest r9-verified fills.
+#: the frozen contents of that window.  r12 ROTATION: the 50
+#: oldest-verified oracled queries (all 47 r9-verified ones plus the 3
+#: oldest r10 fills, daily_top_events / dedup_minhash_md5 /
+#: dedup_simhash_md5 — order computed from the CORRECTNESS_r01..r11
+#: archives).  The r11 batch returned to the overflow set below, still
+#: gated by this file's per-query oracle test.  Changing the window is
+#: an explicit edit here, never a side effect of registering a new
+#: query.
 WINDOW_QUERIES = [
     "argmax_event_per_user", "asof_click_before_purchase",
     "cube_lineitem_stats", "disjunctive_join_nation_customer",
@@ -331,3 +327,53 @@ def test_query_matches_oracle(spark, duck, name, fn, oracle):
         f"spark={s[mismatches[0]]} duck={d[mismatches[0]]}"
     )
     assert len(s) > 0, f"{name}: empty result — weak test, tune constants"
+
+
+def test_sessionize_events_splits_gaps_at_microsecond_precision(
+    spark, tmp_path
+):
+    """A 1800.27 s gap between events at x.5 s and x.77 s starts a new
+    session (the oracle's INTERVAL 30 MINUTE compares microseconds); an
+    exact 1800 s gap and a 1799.9 s gap do not.  Whole-second gap math
+    sees 1800 for all three and keeps one session."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from org_revue_de_presse_trends_spark.plans.registry import (
+        ORACLES,
+        QUERIES,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 500000)
+    ts = [t0]
+    for gap_s in (1800.27, 1800.0, 1799.9):
+        ts.append(ts[-1] + dt.timedelta(seconds=gap_s))
+    n = len(ts)
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us")),
+            "user_id": pa.array([7] * n, pa.int64()),
+            "event_type": pa.array(["view"] * n),
+            "value": pa.array([1.0] * n, pa.float64()),
+            "props": pa.array(["{}"] * n),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    df = QUERIES["sessionize_events"](spark, str(tmp_path))
+    rows = df.collect()
+    got = sorted((r["event_id"], r["session_id"]) for r in rows)
+    assert got == [(0, 1), (1, 2), (2, 2), (3, 2)]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    res = con.execute(ORACLES["sessionize_events"])
+    duck_cols = [d[0] for d in res.description]
+    assert canon([tuple(r) for r in rows], df.columns) == canon(
+        res.fetchall(), duck_cols
+    )
+    con.close()

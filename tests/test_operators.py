@@ -1123,25 +1123,3 @@ def test_kmv_distinct_count_estimator(spark):
     true_l = 24998  # 25000 tokens -> 24998 shingle positions, distinct
     rel = abs(out["L"]["est_distinct"] - true_l) / true_l
     assert rel < 3 / (k ** 0.5), (out["L"], rel)
-
-
-def test_shingle_pair_counts_group_mode_identical(spark):
-    """pair_mode='group' (HOF pair expansion off the per-shingle id
-    list — the measured r11 alternative to the exploded self-join)
-    returns the bit-identical pair stream, including under the df cap
-    and with blocking columns."""
-    from org_revue_de_presse_trends_spark.catalog import load_table
-    from org_revue_de_presse_trends_spark.operators.dedup import (
-        shingle_pair_counts,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    base = dict(block_cols=["source"], k=3, max_shingle_df=50)
-    a = sorted(map(tuple, shingle_pair_counts(docs, **base).collect()))
-    b = sorted(
-        map(
-            tuple,
-            shingle_pair_counts(docs, pair_mode="group", **base).collect(),
-        )
-    )
-    assert a == b and len(a) > 0

@@ -404,41 +404,6 @@ def test_jpeg_progressive_equals_baseline_fuzz(h, w, ch, subsample, q, seed):
     assert np.array_equal(dp, db)
 
 
-@settings(max_examples=25, deadline=None, derandomize=True, database=None)
-@given(
-    st.integers(min_value=1, max_value=32),
-    st.integers(min_value=1, max_value=32),
-    st.integers(min_value=1, max_value=256),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-def test_gif_roundtrip_fuzz(h, w, ncol, seed):
-    import numpy as np
-
-    from org_revue_de_presse_trends_spark.functions import codecs
-
-    rng = np.random.default_rng(seed)
-    pal = rng.integers(0, 256, (ncol, 3)).astype(np.uint8)
-    img = pal[rng.integers(0, ncol, (h, w))]
-    assert np.array_equal(
-        codecs.decode_gif(codecs.encode_gif(img)), img
-    )
-
-
-@settings(max_examples=40, deadline=None, derandomize=True, database=None)
-@given(st.binary(min_size=0, max_size=300), st.integers(0, 2**32 - 1))
-def test_gif_decoder_rejects_garbage_cleanly(data, seed):
-    import numpy as np
-
-    from org_revue_de_presse_trends_spark.functions import codecs
-
-    rng = np.random.default_rng(seed)
-    payload = (b"GIF89a" if rng.integers(2) else b"") + data
-    try:
-        codecs.decode_gif(payload)
-    except ValueError:
-        pass  # the only admissible failure mode
-
-
 def _py_duplicate_span_removal(docs, n, keep_first=False):
     """Pure-Python reference for remove_duplicate_spans[_keep_first]:
     token n-grams (whole text for docs shorter than n), corpus-wide

@@ -22,10 +22,10 @@ import pytest
 from conftest import canon
 from fixtures.gen import DEPRECATED_LIST, TARGET_LIST, generate
 
+from org_revue_de_presse_trends_spark.cli import load_domain_tables
 from org_revue_de_presse_trends_spark.plans.trends import (
     TrendsParams,
     TrendsPipeline,
-    TrendsTables,
 )
 
 DAY = "2024-03-02"
@@ -174,14 +174,7 @@ def domain_dir(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def domain_tables(spark, domain_dir):
-    load = lambda n: spark.read.parquet(f"{domain_dir}/{n}.parquet")
-    return TrendsTables(
-        highlight=load("highlight"),
-        weaving_status=load("weaving_status"),
-        publishers_list=load("publishers_list"),
-        status_popularity=load("status_popularity"),
-        weaving_user=load("weaving_user"),
-    )
+    return load_domain_tables(spark, domain_dir)
 
 
 @pytest.fixture(scope="session")
@@ -367,3 +360,53 @@ def test_argmax_one_row_per_source(spark, domain_tables):
     out = pipe.distinct_sources(include_retweets=False).collect()
     names = [r["username"] for r in out]
     assert len(names) == len(set(names))
+
+
+def test_cli_loads_nanosecond_timestamps(spark, domain_dir, tmp_path):
+    """pandas' default parquet export stores timestamps as
+    TIMESTAMP(NANOS), which a raw ``spark.read.parquet`` rejects
+    (PARQUET_TYPE_ILLEGAL).  The CLI loads through ``catalog.load_table``
+    and writes the same sink tree as from the microsecond tables."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from org_revue_de_presse_trends_spark.cli import DOMAIN_TABLES, main
+
+    ns_cols = {
+        "weaving_status": "ust_created_at",
+        "highlight": "publication_date_time",
+    }
+    ns_dir = tmp_path / "ns"
+    ns_dir.mkdir()
+    for name in DOMAIN_TABLES:
+        table = pq.read_table(f"{domain_dir}/{name}.parquet")
+        col = ns_cols.get(name)
+        if col is not None:
+            table = table.set_column(
+                table.schema.get_field_index(col), col,
+                table[col].cast(pa.timestamp("ns")),
+            )
+        pq.write_table(table, str(ns_dir / f"{name}.parquet"))
+    for name, col in ns_cols.items():
+        schema = pq.read_schema(str(ns_dir / f"{name}.parquet"))
+        assert schema.field(col).type == pa.timestamp("ns")
+
+    trees = {}
+    for label, src in (("us", domain_dir), ("ns", str(ns_dir))):
+        sink = tmp_path / f"sink_{label}"
+        rc = main(
+            [
+                "--publishers-list-id", TARGET_LIST,
+                "--deprecated-list-id", DEPRECATED_LIST,
+                "--since-date", DAY,
+                "--source-dir", src,
+                "--sink-dir", str(sink),
+            ],
+            spark=spark,
+        )
+        assert rc == 0
+        trees[label] = {
+            p.relative_to(sink).as_posix(): p.read_bytes()
+            for p in sink.rglob("*") if p.is_file()
+        }
+    assert trees["us"] and trees["ns"] == trees["us"]
