@@ -25,6 +25,7 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import sys
+from dataclasses import asdict, is_dataclass
 
 from pyspark.sql import SparkSession
 
@@ -77,10 +78,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--distinct-sources-only", action="store_true")
     p.add_argument("--limit", type=int, default=10)
     p.add_argument("--page", type=int, default=0)
+    # the reference launcher passes -in-parallel=true (fun.sh:393-404)
+    parity = "accepted for launcher parity; the sink sends one request per run"
     p.add_argument("--in-parallel", dest="in_parallel", action="store_true",
-                   default=True)
+                   default=True, help=parity)
     p.add_argument("--no-in-parallel", dest="in_parallel",
-                   action="store_false")
+                   action="store_false", help=parity)
     p.add_argument("--dry-mode", action="store_true")
     p.add_argument("--quiet", action="store_true", default=True,
                    help="suppress progress output (reference default)")
@@ -162,6 +165,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         if collector is None:
             return action(df)
         result, qm = collector.measure(name, df, action)
+        if is_dataclass(result):  # the document sink's SinkStats
+            qm.extra.update(asdict(result))
         print(qm.to_json(), file=sys.stderr)
         return result
 
@@ -275,7 +280,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 lambda: LocalFSDocumentStore(root),
                 list_id=args.publishers_list_id,
                 since_date=args.since_date,
-                parallel=args.in_parallel,
             ),
         )
     elif use_firebase:
@@ -284,8 +288,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         fb_url, fb_cfg = cfg.firebase_url, args.firebase_config
 
         def firebase_factory(url=fb_url, key_path=fb_cfg):
-            # built per-partition on the executor: the token provider
-            # holds a lock and must not be pickled from the driver
             from .sources.config import token_provider_from_firebase_config
             from .sources.document_sink import FirebaseRESTStore
 
@@ -300,7 +302,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 firebase_factory,
                 list_id=args.publishers_list_id,
                 since_date=args.since_date,
-                parallel=args.in_parallel,
             ),
         )
     if not (args.sink_dir or args.lake_dir or use_firebase):

@@ -3,29 +3,30 @@ reference's Firebase RTDB fan-out (trends.go:656-745).
 
 Reference behaviors reproduced:
 
-- S4 idempotency: the output subtree ``highlights/{list}/{date}/{type}``
-  is deleted before writing (trends.go:656-662) — delete-then-write per
-  partition key.
-- S5 bounded parallel fan-out: ≤100 concurrent in-flight writes
-  (sizedwaitgroup, trends.go:664-679); ``parallel=False`` reproduces
-  the serial path (trends.go:681-683).
+- S4 idempotency: each run replaces ``highlights/{list}/{date}/{type}``
+  wholesale (the reference deletes, then writes, trends.go:656-662), so
+  a rerun leaves no stale leaf.  Types the run does not produce are
+  left alone, so a ``--distinct-sources-only`` run keeps ``status``.
+- S5 fan-out: the reference bounds ≤100 concurrent leaf writes
+  (sizedwaitgroup, trends.go:664-679).  Here the whole day is one
+  commit per run, so there is nothing to fan out: a failed run leaves
+  the previous day as it was instead of empty or half-written.
 - skip-on-invalid-JSON: records whose ``json`` field fails validation
   are skipped with a counter, not failed (trends.go:690-694).
 
-Spark-first shape: the DataFrame stays distributed — each executor
-partition opens its own client (clients are per-partition, never
-serialized from the driver) and runs its own bounded pool, so total
-in-flight = partitions × max_in_flight, tunable for the sink's rate
-limit.  At 100 TB scale you'd coalesce to the sink's capacity, not the
-data's.
+Shape: the day's result is collected once on the driver (the reference
+also loads the day into memory, trends.go:542-684), grouped by type and
+handed to the store in one ``replace_children`` call — one RTDB
+multi-path ``PATCH``, or one staged-directory swap on the filesystem.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable, Iterator
-from concurrent.futures import ThreadPoolExecutor
+import shutil
+import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Row
@@ -41,10 +42,11 @@ RECORD_FIELDS = (
 class DocumentStore:
     """Minimal client protocol: a keyed document tree."""
 
-    def delete_subtree(self, path: str) -> None:
-        raise NotImplementedError
-
-    def update(self, path: str, record: dict) -> None:
+    def replace_children(self, path: str,
+                         children: dict[str, dict[str, dict]]) -> int:
+        """Replace each named child of ``path`` by its ``{key: record}``
+        map (an empty map removes the child) in one atomic commit,
+        leaving other children alone.  Returns the retried requests."""
         raise NotImplementedError
 
     def close(self) -> None:
@@ -54,7 +56,12 @@ class DocumentStore:
 class LocalFSDocumentStore(DocumentStore):
     """Filesystem-backed store: one JSON file per leaf, directories for
     tree levels.  Serves tests and local runs; the Firebase REST client
-    below is the production analogue."""
+    below is the production analogue.
+
+    Every child is first staged under ``{root}/.staging-<uuid>/``, then
+    swapped in by rename (live → trash, staged → live), so a run that
+    fails while staging leaves the live tree untouched.  The swap is
+    two renames per child, so a concurrent reader can briefly miss one."""
 
     def __init__(self, root: str):
         self.root = root
@@ -62,24 +69,50 @@ class LocalFSDocumentStore(DocumentStore):
     def _p(self, path: str) -> str:
         return os.path.join(self.root, *path.strip("/").split("/"))
 
-    def delete_subtree(self, path: str) -> None:
-        import shutil
-
-        target = self._p(path)
-        if os.path.isdir(target):
-            shutil.rmtree(target)
-
-    def update(self, path: str, record: dict) -> None:
-        target = self._p(path) + ".json"
-        os.makedirs(os.path.dirname(target), exist_ok=True)
+    def _write_leaf(self, target: str, record: dict) -> None:
         with open(target, "w") as f:
             json.dump(record, f, ensure_ascii=False, sort_keys=True)
 
+    def replace_children(self, path, children):
+        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex}")
+        new, old = os.path.join(staging, "new"), os.path.join(staging, "old")
+        try:
+            for name, records in children.items():
+                os.makedirs(os.path.join(new, name))
+                for key, rec in records.items():
+                    self._write_leaf(
+                        os.path.join(new, name, f"{key}.json"), rec)
+            os.makedirs(self._p(path), exist_ok=True)
+            os.makedirs(old)
+            for name, records in children.items():
+                live = os.path.join(self._p(path), name)
+                if os.path.isdir(live):
+                    os.rename(live, os.path.join(old, name))
+                if records:
+                    os.rename(os.path.join(new, name), live)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return 0
+
+
+def _transient(exc: Exception) -> bool:
+    """HTTP 5xx and 429, connection failures and timeouts are worth a
+    retry; any other 4xx (auth, missing path, bad body) is not."""
+    from urllib.error import HTTPError, URLError
+
+    if isinstance(exc, HTTPError):
+        return exc.code == 429 or exc.code >= 500
+    return isinstance(exc, (URLError, ConnectionError, TimeoutError))
+
 
 class FirebaseRESTStore(DocumentStore):
-    """Firebase RTDB REST client (PUT/DELETE on ``{base}/{path}.json``)
-    — the production sink (reference uses the firego client,
-    trends.go:686-745).  Network I/O is urllib-only so no extra deps.
+    """Firebase RTDB REST client — the production sink (reference uses
+    the firego client, trends.go:686-745); urllib-only, no extra deps.
+
+    ``replace_children`` is one multi-path ``PATCH {base}/{path}.json``
+    mapping each child to its whole record map: RTDB overwrites every
+    named child wholesale, atomically.  Transient failures are retried,
+    ``ATTEMPTS`` tries in all, with exponential backoff.
 
     Auth, in precedence order:
 
@@ -90,6 +123,8 @@ class FirebaseRESTStore(DocumentStore):
       REST docs, re-evaluated per request so refresh just works.
     - ``auth_token`` — a static legacy database secret (``?auth=``).
     """
+
+    ATTEMPTS, BASE_DELAY = 3, 0.1
 
     def __init__(self, base_url: str, auth_token: str | None = None,
                  timeout: float = 10.0,
@@ -111,44 +146,33 @@ class FirebaseRESTStore(DocumentStore):
             url += f"?auth={quote(self.auth_token, safe='')}"
         return url
 
-    def _request(self, method: str, path: str, body: bytes | None = None):
+    def replace_children(self, path, children):
+        import time
         import urllib.request
 
-        req = urllib.request.Request(
-            self._url(path), data=body, method=method,
-            headers={"Content-Type": "application/json"},
-        )
-        with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-            return resp.read()
-
-    def delete_subtree(self, path: str) -> None:
-        self._request("DELETE", path)
-
-    def update(self, path: str, record: dict) -> None:
-        self._request("PATCH", path, json.dumps(record).encode())
+        # JSON null deletes a child in RTDB; an empty map stores nothing
+        body = {name: recs or None for name, recs in children.items()}
+        data = json.dumps(body).encode()
+        for i in range(self.ATTEMPTS):
+            req = urllib.request.Request(
+                self._url(path), data=data, method="PATCH",
+                headers={"Content-Type": "application/json"},
+            )
+            try:
+                with urllib.request.urlopen(req, timeout=self.timeout) as r:
+                    r.read()
+                return i
+            except Exception as exc:  # noqa: BLE001 — classified below
+                if i == self.ATTEMPTS - 1 or not _transient(exc):
+                    raise
+                time.sleep(self.BASE_DELAY * (2**i))
 
 
 @dataclass
 class SinkStats:
     written: int = 0
     skipped_invalid_json: int = 0
-
-
-def _with_retries(fn, attempts: int = 3, base_delay: float = 0.1):
-    """Call fn() with bounded exponential backoff — transient sink
-    errors (HTTP 5xx, connection resets) shouldn't fail the Spark task;
-    persistent ones still raise after the last attempt."""
-    import time
-
-    last = None
-    for i in range(attempts):
-        try:
-            return fn()
-        except Exception as exc:  # noqa: BLE001 — sink clients raise varied types
-            last = exc
-            if i < attempts - 1:
-                time.sleep(base_delay * (2**i))
-    raise last
+    retried: int = 0
 
 
 def _record_of(row: Row) -> dict:
@@ -174,59 +198,31 @@ def write_highlights(
     store_factory: Callable[[], DocumentStore],
     list_id: str,
     since_date: str,
-    max_in_flight: int = 100,
-    parallel: bool = True,
-    truncate_first: bool = True,
-    retry_attempts: int = 3,
-) -> None:
+) -> SinkStats:
     """Write a (possibly multi-variant) highlights DataFrame to the
     document store under ``highlights/{list}/{date}/{type}/{id}``.
 
-    ``df`` must carry the 12-field record plus ``statusType``.
+    ``df`` must carry the 12-field record plus ``statusType``.  Every
+    type present in ``df`` is replaced; a type whose every row has
+    invalid JSON ends with no subtree.
     """
-    type_col = "statusType"
-    if truncate_first:
-        # S4: enumerate present partitions (tiny — ≤4 variants), then
-        # delete each subtree once, driver-side, before any write.
-        types = [r[0] for r in df.select(type_col).distinct().collect()]
-        store = store_factory()
-        try:
-            for t in types:
-                store.delete_subtree(f"highlights/{list_id}/{since_date}/{t}")
-        finally:
-            store.close()
-
-    if not parallel:
-        df = df.coalesce(1)
-    pool_size = max_in_flight if parallel else 1
-
-    def write_partition(rows: Iterator[Row]) -> None:
-        store = store_factory()
-        stats = SinkStats()
-        try:
-            with ThreadPoolExecutor(max_workers=pool_size) as pool:
-                futures = []
-                for row in rows:
-                    rec = _record_of(row)
-                    if not _valid_json(rec.get("json")):
-                        # trends.go:690-694 — skip, don't fail
-                        stats.skipped_invalid_json += 1
-                        continue
-                    path = (
-                        f"highlights/{list_id}/{since_date}/"
-                        f"{row[type_col]}/{rec['twitterId']}"
-                    )
-                    futures.append(
-                        pool.submit(
-                            _with_retries,
-                            lambda p=path, r=rec: store.update(p, r),
-                            retry_attempts,
-                        )
-                    )
-                for fut in futures:
-                    fut.result()
-                    stats.written += 1
-        finally:
-            store.close()
-
-    df.foreachPartition(write_partition)
+    stats = SinkStats()
+    children: dict[str, dict[str, dict]] = {}
+    for row in df.collect():
+        recs = children.setdefault(row["statusType"], {})
+        rec = _record_of(row)
+        if not _valid_json(rec["json"]):
+            # trends.go:690-694 — skip, don't fail
+            stats.skipped_invalid_json += 1
+            continue
+        recs[rec["twitterId"]] = rec
+    if not children:
+        return stats
+    store = store_factory()
+    try:
+        stats.retried = store.replace_children(
+            f"highlights/{list_id}/{since_date}", children)
+    finally:
+        store.close()
+    stats.written = sum(map(len, children.values()))
+    return stats

@@ -94,16 +94,16 @@ def foreach_batch_document_sink(
     list_id: str,
     ts_col: str = "publishedAt",
     shift_hours: int = 1,
-    **write_kwargs,
 ):
     """Build a foreachBatch function that fans each micro-batch's
     highlight records out to the document store — the reference's
     Firebase write (trends.go:656-745) run continuously.
 
     Per micro-batch, records are grouped by their civil day and each
-    day's slice goes through ``write_highlights`` (delete-then-write
-    per (list, day, type) subtree → idempotent, so micro-batch retries
-    are exactly-once per subtree, matching the lake path's semantics).
+    day's slice goes through ``write_highlights`` (one atomic replace
+    of each (list, day, type) subtree → idempotent, so micro-batch
+    retries are exactly-once per subtree, matching the lake path's
+    semantics).
     """
     from ..sources.document_sink import write_highlights
 
@@ -122,8 +122,7 @@ def foreach_batch_document_sink(
                 == F.lit(day).cast("date")
             )
             write_highlights(
-                slice_df, store_factory, list_id=list_id, since_date=day,
-                **write_kwargs,
+                slice_df, store_factory, list_id=list_id, since_date=day
             )
 
     return run

@@ -358,7 +358,14 @@ def test_cli_config_file_routes_firebase_sink(spark, domain_dir, tmp_path):
     assert token_posts and all("/token" in p for _, p, _ in token_posts)
     patches = [p for (m, p, _) in requests if m == "PATCH"]
     assert patches and all("access_token=cli-tok" in p for p in patches)
-    assert any(f"highlights/{TARGET_LIST}/2024-03-02/" in p for p in patches)
+    # the whole day is one PATCH of the day path, nothing else mutates
+    assert [p.split("?")[0] for p in patches] == [
+        f"/highlights/{TARGET_LIST}/2024-03-02.json"
+    ]
+    assert not [m for (m, _, _) in requests if m in ("DELETE", "PUT")]
+    day = json.loads(next(b for (m, _, b) in requests if m == "PATCH"))
+    assert set(day) == {"status", "statusFromDistinctSources",
+                        "retweetFromDistinctSources"}
 
 
 def test_resize_images_composes_with_features(spark, media_df):

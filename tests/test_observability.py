@@ -101,3 +101,62 @@ def test_cli_metrics_flag_emits_json_lines(spark, tmp_path, capsys):
     assert rec["tasks"] >= 1
     assert rec["executions"] >= 1
     assert rec["result_rows"] >= 0
+
+
+def test_cli_metrics_reports_sink_counters(spark, tmp_path, capsys):
+    """The document-sink metrics line carries the sink's counters:
+    ``written`` is the number of leaf files, ``skipped_invalid_json``
+    the day's result rows whose planted JSON does not parse."""
+    import os
+
+    from org_revue_de_presse_trends_spark.cli import load_domain_tables
+    from org_revue_de_presse_trends_spark.plans.trends import (
+        TrendsParams,
+        TrendsPipeline,
+    )
+
+    domain, sink = str(tmp_path / "domain"), str(tmp_path / "store")
+    generate(domain)
+    rc = main(
+        [
+            "--publishers-list-id", TARGET_LIST,
+            "--deprecated-list-id", DEPRECATED_LIST,
+            "--since-date", "2024-03-02",
+            "--source-dir", domain,
+            "--sink-dir", sink,
+            "--limit", "0",
+            "--metrics",
+        ],
+        spark=spark,
+    )
+    assert rc == 0
+    recs = {
+        r["query"]: r
+        for r in map(json.loads, (
+            ln for ln in capsys.readouterr().err.splitlines()
+            if ln.startswith("{")
+        ))
+    }
+    rec = recs["highlights:document_sink"]
+    leaves = sum(len(files) for _, _, files in os.walk(sink))
+    assert rec["written"] == leaves > 0
+    assert rec["retried"] == 0
+
+    def parses(doc):
+        try:
+            json.loads(doc)
+            return True
+        except (TypeError, ValueError):
+            return False
+
+    pipe = TrendsPipeline(
+        load_domain_tables(spark, domain),
+        TrendsParams(list_public_ids=(TARGET_LIST, DEPRECATED_LIST),
+                     since_date="2024-03-02", limit=0),
+    )
+    rows = pipe.all_variants(
+        ("status", "statusFromDistinctSources", "retweetFromDistinctSources")
+    ).collect()
+    invalid = sum(not parses(r["json"]) for r in rows)
+    assert invalid > 0
+    assert rec["skipped_invalid_json"] == invalid

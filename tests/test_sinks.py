@@ -54,7 +54,10 @@ def _store_factory(root):
 
 def test_document_sink_writes_tree(spark, sample_df, tmp_path):
     root = str(tmp_path / "store")
-    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    stats = write_highlights(
+        sample_df, _store_factory(root), "list-1", "2024-03-02")
+    assert (stats.written, stats.skipped_invalid_json, stats.retried) == (
+        2, 1, 0)
     p1 = os.path.join(
         root, "highlights", "list-1", "2024-03-02", "status", "100.json"
     )
@@ -63,16 +66,18 @@ def test_document_sink_writes_tree(spark, sample_df, tmp_path):
     assert rec["username"] == "alice"
     assert rec["twitter_id"] == "100"  # quirk parity: duplicated key field
     assert rec["totalRetweets"] == 50
-    # invalid JSON record skipped, not failed (trends.go:690-694)
+    # invalid JSON record skipped, not failed (trends.go:690-694); its
+    # type had no other row, so it has no subtree
     bad = os.path.join(
         root, "highlights", "list-1", "2024-03-02",
         "retweetFromDistinctSources", "300.json",
     )
-    assert not os.path.exists(bad)
+    assert not os.path.exists(os.path.dirname(bad))
 
 
 def test_document_sink_idempotent_overwrite(spark, sample_df, tmp_path):
-    """Delete-then-write (S4): stale leaves from a previous run vanish."""
+    """Each run replaces its types wholesale (S4): stale leaves from a
+    previous run vanish."""
     root = str(tmp_path / "store")
     write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
     stale = os.path.join(
@@ -86,18 +91,6 @@ def test_document_sink_idempotent_overwrite(spark, sample_df, tmp_path):
     assert os.path.exists(
         os.path.join(root, "highlights", "list-1", "2024-03-02", "status",
                      "100.json")
-    )
-
-
-def test_document_sink_serial_mode(spark, sample_df, tmp_path):
-    root = str(tmp_path / "store")
-    write_highlights(
-        sample_df, _store_factory(root), "list-1", "2024-03-02",
-        parallel=False,
-    )
-    assert os.path.exists(
-        os.path.join(root, "highlights", "list-1", "2024-03-02", "status",
-                     "200.json")
     )
 
 
@@ -137,105 +130,191 @@ def test_lake_rerun_identical(spark, tmp_path):
     assert first == second
 
 
+class _RTDB:
+    """A local HTTP server standing in for Firebase RTDB: records every
+    request as ``(method, path, body)`` and answers each PATCH with the
+    next status from ``codes`` (200 once they run out, and for any
+    other method)."""
+
+    def __init__(self, codes=()):
+        import http.server
+        import threading
+
+        self.requests, codes = [], list(codes)
+        requests = self.requests
+
+        class Handler(http.server.BaseHTTPRequestHandler):
+            def _h(self):
+                n = int(self.headers.get("Content-Length") or 0)
+                body = self.rfile.read(n) if n else b""
+                requests.append((self.command, self.path, body))
+                patch = self.command == "PATCH"
+                self.send_response(codes.pop(0) if patch and codes else 200)
+                self.send_header("Content-Length", "2")
+                self.end_headers()
+                self.wfile.write(b"{}")
+
+            do_PATCH = do_DELETE = do_PUT = _h
+
+            def log_message(self, *a):
+                pass
+
+        self.srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+        threading.Thread(target=self.srv.serve_forever, daemon=True).start()
+        self.url = f"http://127.0.0.1:{self.srv.server_address[1]}"
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        self.srv.shutdown()
+        self.srv.server_close()
+
+
+def _rest_factory(url, **kw):
+    from org_revue_de_presse_trends_spark.sources.document_sink import (
+        FirebaseRESTStore,
+    )
+
+    return lambda: FirebaseRESTStore(url, **kw)
+
+
+DAY_PATH = "/highlights/list-1/2024-03-02.json"
+
+
 def test_firebase_rest_store_requests(spark, sample_df):
-    """Drive the Firebase REST client against a live local HTTP server
-    and assert the request shapes (PATCH leaf paths, DELETE subtree)."""
-    import http.server
-    import threading
-
-    requests = []
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def _h(self):
-            n = int(self.headers.get("Content-Length") or 0)
-            body = self.rfile.read(n) if n else b""
-            requests.append((self.command, self.path, body))
-            self.send_response(200)
-            self.send_header("Content-Length", "2")
-            self.end_headers()
-            self.wfile.write(b"{}")
-
-        do_PATCH = do_DELETE = do_PUT = _h
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
-    try:
-        port = srv.server_address[1]
-        base = f"http://127.0.0.1:{port}"
-
-        def factory(url=base):
-            from org_revue_de_presse_trends_spark.sources.document_sink import (
-                FirebaseRESTStore,
-            )
-
-            return FirebaseRESTStore(url, auth_token="tok")
-
-        write_highlights(sample_df, factory, "list-1", "2024-03-02")
-    finally:
-        srv.shutdown()
-        srv.server_close()
-    deletes = [p for (m, p, _) in requests if m == "DELETE"]
-    patches = [(p, b) for (m, p, b) in requests if m == "PATCH"]
-    assert any("highlights/list-1/2024-03-02/status.json" in p for p in deletes)
-    assert all("auth=tok" in p for p, _ in patches)
-    leaf_paths = {p.split("?")[0] for p, _ in patches}
-    assert "/highlights/list-1/2024-03-02/status/100.json" in leaf_paths
-    # invalid-JSON record skipped → its leaf never written
-    assert not any("/300.json" in p for p in leaf_paths)
-    body = json.loads(patches[0][1])
-    assert set(body) >= {"id", "twitterId", "username", "totalRetweets"}
+    """One atomic PATCH of the day path carries every type's whole
+    record map; an all-invalid type is sent as null (removed)."""
+    with _RTDB() as rtdb:
+        stats = write_highlights(
+            sample_df, _rest_factory(rtdb.url, auth_token="tok"),
+            "list-1", "2024-03-02",
+        )
+    assert [(m, p.split("?")[0]) for m, p, _ in rtdb.requests] == [
+        ("PATCH", DAY_PATH)
+    ]
+    assert all("auth=tok" in p for _, p, _ in rtdb.requests)
+    body = json.loads(rtdb.requests[0][2])
+    assert set(body) == {"status", "retweetFromDistinctSources"}
+    assert set(body["status"]) == {"100", "200"}
+    for rec in body["status"].values():
+        assert set(rec) == {
+            "id", "twitterId", "username", "text", "url", "json",
+            "publishedAt", "checkedAt", "isRetweet", "twitter_id",
+            "totalRetweets", "totalFavorites",
+        }
+    assert body["status"]["100"]["username"] == "alice"
+    assert body["status"]["200"]["totalRetweets"] == 40
+    # invalid-JSON record skipped → its type holds nothing
+    assert body["retweetFromDistinctSources"] is None
+    assert (stats.written, stats.skipped_invalid_json, stats.retried) == (
+        2, 1, 0)
 
 
 def test_rest_store_retries_transient_failures(spark, sample_df):
-    """First attempt per path gets HTTP 500; the sink's bounded retry
-    must recover and land every valid record."""
-    import http.server
-    import threading
+    """The first day PATCH gets HTTP 503; the bounded retry lands the
+    whole day with the second request and counts one retry."""
+    with _RTDB(codes=[503]) as rtdb:
+        stats = write_highlights(
+            sample_df, _rest_factory(rtdb.url), "list-1", "2024-03-02"
+        )
+    assert [(m, p) for m, p, _ in rtdb.requests] == [("PATCH", DAY_PATH)] * 2
+    assert rtdb.requests[0][2] == rtdb.requests[1][2]
+    assert set(json.loads(rtdb.requests[1][2])["status"]) == {"100", "200"}
+    assert stats.retried == 1 and stats.written == 2
 
-    seen: dict[str, int] = {}
-    lock = threading.Lock()
 
-    class Flaky(http.server.BaseHTTPRequestHandler):
-        def _h(self):
-            n = int(self.headers.get("Content-Length") or 0)
-            if n:
-                self.rfile.read(n)
-            with lock:
-                seen[self.path] = seen.get(self.path, 0) + 1
-                fail = self.command == "PATCH" and seen[self.path] == 1
-            self.send_response(500 if fail else 200)
-            self.send_header("Content-Length", "2")
-            self.end_headers()
-            self.wfile.write(b"{}")
+def test_rest_store_permanent_error_not_retried(spark, sample_df):
+    """A 4xx other than 429 (here 403) raises at once: one request."""
+    from urllib.error import HTTPError
 
-        do_PATCH = do_DELETE = do_PUT = _h
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Flaky)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        base = f"http://127.0.0.1:{srv.server_address[1]}"
-
-        def factory(url=base):
-            from org_revue_de_presse_trends_spark.sources.document_sink import (
-                FirebaseRESTStore,
+    with _RTDB(codes=[403] * 5) as rtdb:
+        with pytest.raises(HTTPError) as exc:
+            write_highlights(
+                sample_df, _rest_factory(rtdb.url), "list-1", "2024-03-02"
             )
+    assert exc.value.code == 403
+    assert [(m, p) for m, p, _ in rtdb.requests] == [("PATCH", DAY_PATH)]
 
-            return FirebaseRESTStore(url)
 
-        write_highlights(sample_df, factory, "list-1", "2024-03-02")
-    finally:
-        srv.shutdown()
-        srv.server_close()
-    patched = {p for p, c in seen.items() if c >= 2 and p.endswith(".json")}
-    assert any("/status/100.json" in p for p in patched)
-    assert any("/status/200.json" in p for p in patched)
+def test_rest_store_failed_day_sends_no_delete(spark, sample_df):
+    """A server that keeps failing the day PATCH: the sink gives up
+    after its bounded retries, and the day PATCH is the only mutating
+    request ever sent, so RTDB still holds the previous day."""
+    from org_revue_de_presse_trends_spark.sources.document_sink import (
+        FirebaseRESTStore,
+    )
+
+    with _RTDB(codes=[500] * 10) as rtdb:
+        with pytest.raises(Exception):
+            write_highlights(
+                sample_df, _rest_factory(rtdb.url), "list-1", "2024-03-02",
+            )
+    assert [(m, p) for m, p, _ in rtdb.requests] == (
+        [("PATCH", DAY_PATH)] * FirebaseRESTStore.ATTEMPTS)
+    assert json.loads(rtdb.requests[0][2])["retweetFromDistinctSources"] is None
+
+
+def _tree(root):
+    out = {}
+    for d, _, files in os.walk(root):
+        for name in files:
+            p = os.path.join(d, name)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = f.read()
+    return out
+
+
+def test_document_sink_failed_run_keeps_previous_day(spark, sample_df,
+                                                     tmp_path):
+    """A rerun that raises after its first staged leaf leaves the day's
+    tree byte-identical to the previous run, with no debris."""
+    root = str(tmp_path / "store")
+    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    before = _tree(root)
+    assert sorted(before) == [
+        os.path.join("highlights", "list-1", "2024-03-02", "status", n)
+        for n in ("100.json", "200.json")
+    ]
+
+    class Failing(LocalFSDocumentStore):
+        staged = 0
+
+        def _write_leaf(self, target, record):
+            super()._write_leaf(target, record)
+            Failing.staged += 1
+            if Failing.staged == 1:
+                raise OSError("disk full")
+
+    rerun = _records(spark, [
+        (4, "400", "dave", "t4", "u4", '{"ok": 4}', "2024-03-02 13:00:00",
+         "2024-03-02 13:00:00", False, 20, 2, "status"),
+        (5, "500", "erin", "t5", "u5", '{"ok": 5}', "2024-03-02 14:00:00",
+         "2024-03-02 14:00:00", False, 10, 1, "status"),
+    ])
+    with pytest.raises(OSError, match="disk full"):
+        write_highlights(rerun, lambda: Failing(root), "list-1", "2024-03-02")
+    assert Failing.staged == 1
+    assert _tree(root) == before
+    assert os.listdir(root) == ["highlights"]
+
+
+def test_document_sink_keeps_types_the_run_does_not_produce(
+        spark, sample_df, tmp_path):
+    """A --distinct-sources-only style run replaces only its own types."""
+    root = str(tmp_path / "store")
+    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    distinct = _records(spark, [
+        (6, "600", "fay", "t6", "u6", '{"ok": 6}', "2024-03-02 15:00:00",
+         "2024-03-02 15:00:00", False, 5, 1, "statusFromDistinctSources"),
+    ])
+    stats = write_highlights(
+        distinct, _store_factory(root), "list-1", "2024-03-02")
+    day = os.path.join(root, "highlights", "list-1", "2024-03-02")
+    assert sorted(os.listdir(day)) == ["status", "statusFromDistinctSources"]
+    assert sorted(os.listdir(os.path.join(day, "status"))) == [
+        "100.json", "200.json"]
+    assert stats.written == 1 and stats.retried == 0
 
 
 def test_jdbc_options_table_partitioned():
@@ -335,45 +414,16 @@ def test_token_provider_signs_verifiable_jwt_and_caches():
 def test_rest_store_uses_token_provider(spark, sample_df):
     """Sink e2e with OAuth: every request carries ?access_token= from
     the provider instead of the legacy ?auth= secret."""
-    import http.server
-    import threading
-
-    from org_revue_de_presse_trends_spark.sources.document_sink import (
-        FirebaseRESTStore,
-    )
-
-    requests = []
-
-    class Handler(http.server.BaseHTTPRequestHandler):
-        def _h(self):
-            n = int(self.headers.get("Content-Length") or 0)
-            if n:
-                self.rfile.read(n)
-            requests.append((self.command, self.path))
-            self.send_response(200)
-            self.send_header("Content-Length", "2")
-            self.end_headers()
-            self.wfile.write(b"{}")
-
-        do_PATCH = do_DELETE = do_PUT = _h
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        base = f"http://127.0.0.1:{srv.server_address[1]}"
-        factory = lambda url=base: FirebaseRESTStore(
-            url, token_provider=lambda: "oauth-tok"
+    with _RTDB() as rtdb:
+        write_highlights(
+            sample_df,
+            _rest_factory(rtdb.url, token_provider=lambda: "oauth-tok"),
+            "list-1", "2024-03-02",
         )
-        write_highlights(sample_df, factory, "list-1", "2024-03-02")
-    finally:
-        srv.shutdown()
-        srv.server_close()
-    assert requests
-    assert all("access_token=oauth-tok" in p for _, p in requests)
-    assert not any("auth=" in p.replace("access_token=", "") for _, p in requests)
+    paths = [p for _, p, _ in rtdb.requests]
+    assert paths
+    assert all("access_token=oauth-tok" in p for p in paths)
+    assert not any("auth=" in p.replace("access_token=", "") for p in paths)
 
 
 def test_load_app_config_builds_postgres_dsn(tmp_path):
