@@ -1,70 +1,89 @@
 """Named column expressions for the trends domain (SURVEY.md §2.2).
 
 Each function mirrors one scalar-expression operator of the reference,
-cited by trends.go line.  All are built-in Spark column expressions —
-JVM-side, whole-stage-codegen'd; zero Python UDFs (SURVEY §2.10: none
-are needed for parity).
+cited by trends.go line.  An operator is written once, as SQL text
+(``*_sql``, spliced into the statements of plans/trends.py); its
+Column form is ``F.expr`` over that text.  All are built-in Spark
+expressions — JVM-side, whole-stage-codegen'd; zero Python UDFs
+(SURVEY §2.10: none are needed for parity).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
 
-def civil_day(ts: Column, shift_hours: int = 1, tz: str | None = None) -> Column:
-    """Civil-day bucketing (reference trends.go:311,377,399).
+def sql_text(col: Column) -> str:
+    """SQL text of a column reference, or of a cast of one, as the
+    ``spark.sql`` string formatter renders it."""
+    return SparkSession.active()._jsparkSession.expression(col._jc).sql()
+
+
+def civil_day_sql(ts: str, shift_hours: int = 1, tz: str | None = None) -> str:
+    """Civil-day bucketing (reference trends.go:311,377,399) of the SQL
+    expression ``ts``; ``tz`` is SQL text naming the zone (a literal or
+    a parameter marker).
 
     The reference hard-codes ``ts - INTERVAL 1 HOUR → date`` — a
     local(CET)→UTC shift that is correct in winter and off by one hour
-    under CEST (SURVEY §1.4).  Default reproduces that exactly; pass
-    ``tz="Europe/Paris"`` for the corrected DST-aware local→UTC
+    under CEST (SURVEY §1.4).  Default reproduces that exactly; pass a
+    ``tz`` such as Europe/Paris for the corrected DST-aware local→UTC
     conversion (same result in winter, -2h in summer).
     """
     if tz is not None:
-        return F.to_date(F.to_utc_timestamp(ts, tz))
-    return F.to_date(ts - F.expr(f"INTERVAL {int(shift_hours)} HOUR"))
+        return f"to_date(to_utc_timestamp({ts}, {tz}))"
+    return f"to_date({ts} - INTERVAL {int(shift_hours)} HOUR)"
 
 
-def tweet_url(screen_name: Column, status_id: Column) -> Column:
-    """CONCAT('https://twitter.com/', name, '/status/', id)
-    (reference trends.go:281)."""
-    return F.concat(
-        F.lit("https://twitter.com/"),
-        screen_name,
-        F.lit("/status/"),
-        status_id,
-    )
+def civil_day(ts: Column, shift_hours: int = 1, tz: str | None = None) -> Column:
+    """``civil_day_sql`` as a Column; ``tz`` is a zone id."""
+    return F.expr(civil_day_sql(
+        sql_text(ts), shift_hours, None if tz is None else get_lit_sql_str(tz)
+    ))
+
+
+def popularity_sql(
+    checked: str, at_collection: str, raw_json_doc: str | None = None,
+    json_field: str = "retweet_count",
+) -> str:
+    """The popularity cascade (reference trends.go:286-287,338-348):
+    re-checked value → value at collection → raw API JSON fallback."""
+    branches = [checked, at_collection]
+    if raw_json_doc is not None:
+        branches.append(
+            f"CAST(get_json_object({raw_json_doc}, '$.{json_field}') AS INT)"
+        )
+    return f"coalesce({', '.join(branches)})"
 
 
 def popularity(
     checked: Column, at_collection: Column, raw_json_doc: Column | None = None,
     json_field: str = "retweet_count",
 ) -> Column:
-    """The popularity cascade (reference trends.go:286-287,338-348):
-    re-checked value → value at collection → raw API JSON fallback."""
-    branches = [checked, at_collection]
-    if raw_json_doc is not None:
-        branches.append(
-            F.get_json_object(raw_json_doc, f"$.{json_field}").cast("int")
-        )
-    return F.coalesce(*branches)
+    """``popularity_sql`` as a Column."""
+    return F.expr(popularity_sql(
+        sql_text(checked), sql_text(at_collection),
+        None if raw_json_doc is None else sql_text(raw_json_doc), json_field,
+    ))
 
 
-def is_retweet_derived(is_retweet: Column, api_document: Column) -> Column:
+def is_retweet_derived_sql(is_retweet: str, api_document: str) -> str:
     """3-way retweet derivation (reference trends.go:347,378):
     COALESCE(h.is_retweet, doc->>'retweeted_status_result' IS NOT NULL,
     false)."""
-    return F.coalesce(
-        is_retweet,
-        F.get_json_object(api_document, "$.retweeted_status_result").isNotNull(),
-        F.lit(False),
+    return (
+        f"coalesce({is_retweet}, get_json_object({api_document}, "
+        "'$.retweeted_status_result') IS NOT NULL, false)"
     )
 
 
-def json_user_id(api_document: Column) -> Column:
-    """Nested JSON user id as bigint (reference trends.go:379-380)."""
-    return F.get_json_object(api_document, "$.user.id_str").cast("long")
+def is_retweet_derived(is_retweet: Column, api_document: Column) -> Column:
+    """``is_retweet_derived_sql`` as a Column."""
+    return F.expr(
+        is_retweet_derived_sql(sql_text(is_retweet), sql_text(api_document))
+    )
 
 
 def is_valid_json(doc: Column) -> Column:

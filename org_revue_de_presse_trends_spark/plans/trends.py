@@ -1,25 +1,51 @@
 """The three trends pipeline variants (reference trends.go:274-412) as
-parameterized DataFrame builders — the engine's parity core.
+parameterized Spark SQL — the engine's parity core.
 
-Reference semantics (all citations to /root/reference/trends.go):
+Each entry point issues ONE ``spark.sql`` call over a WITH-chain whose
+CTEs mirror the reference SQL (citations are to its trends.go):
 
-- curated spine:  highlight ⋈ weaving_status (J1, :294-299)
-- distinct spine: weaving_status ⟕ highlight (J2, :351-356; predicates
-  stay in the ON clause — outer-join semantics, not optimization)
-- publishers join: curated = equi + IN-list (J3, :300-305);
-  distinct = disjunctive OR-condition (J4, :357-367)
-- popularity: same-civil-day LEFT join (J5, :396-399) collapsed by MAX
-  (A2, :286-287) — implemented here as a pre-aggregation per
-  (status_id, day) BEFORE the join, which is 1:1 afterwards: same
-  result as the reference's GROUP-BY-everything (A3, :323-334) with a
-  strictly better plan (no wide grouping key, popularity shrinks
-  before shuffling — the formulation that survives 100 TB).
-- deleted-member exclusion: anti-join (F3, :313-320 curated on
-  member_id; :379-386 distinct on the JSON user id)
-- argmax per source (A4, :336-349): max_by(struct) replaces ten
-  parallel ARRAY_AGG(... ORDER BY ...)[1] columns
-- top-k (O1/O2, :395-406): orderBy + offset/limit →
-  TakeOrderedAndProject
+==========  ===============================================  ===============
+CTE         role                                             trends.go
+==========  ===============================================  ===============
+``hd``      the day's highlights (sinceWhen() on h)          :311, :536-543
+``sd``      the day's statuses (sinceWhen() on s)            :377, :536-543
+``pd``      the day's popularity checks (J5 day predicate)   :396-399
+``pop``     MAX popularity per status of the day (A2/A3)     :286-287,
+                                                             :323-334
+``tl``      publishers lists in the IN-list (J3)             :300-305
+``dl``      soft-deleted lists with a screen name            :313-320
+``dm``      deleted members by member id (F3, curated)       :313-320
+``dmt``     deleted members by twitter id (F3, distinct)     :379-386
+==========  ===============================================  ===============
+
+Variant bodies:
+
+- curated: ``hd`` ⋈ ``sd`` (J1, :294-299) ⋈ ``tl`` (J3), anti-joined
+  on ``dm``, LEFT-joined to ``pop``; record :279-292.
+- distinct sources: ``sd`` ⟕ ``hd`` (J2, :351-356 — the retweet
+  predicate stays in the ON clause, outer-join semantics), the J4
+  OR-join to ``tl`` (:357-367), the F2 3-way retweet derivation
+  (:370-378), anti-joined on ``dmt``, LEFT-joined to ``pop``; then one
+  row per publisher by ``max_by(struct…)`` (A4, :336-349, :389-392).
+- ORDER BY retweets DESC, id / LIMIT / OFFSET per variant (O1/O2,
+  :395-406), then UNION ALL with a ``statusType`` discriminator — the
+  reference's three sequential runs (:151-198) as one job.
+- ``count_highlights``: the reference count query (:450-529).
+
+Day window.  Every history scan carries a raw column range derived in
+SQL from ``:day`` — ``[start + shift, end + shift)`` under the fixed
+shift, widened to ±18 h (the bound of any zone offset) under ``tz`` —
+that contains every instant whose civil day is ``:day``, DST days of 23
+and 25 hours included.  The exact civil-day predicate stays on top, so
+the output is that of the unwindowed query, while Parquet row groups
+outside the day are skipped.  Every spine row is of ``:day``, so the
+day predicates of J1, J2 and J5 reduce to the per-table day filters.
+
+Anti joins ignore duplicate keys, so ``dm``/``dmt`` carry no DISTINCT.
+
+Binding.  List ids, ``tz``, ``:day`` and the ``statusType`` values are
+named parameters; only ``int()``-coerced values (``shift_hours``,
+``limit``, ``page``) are formatted into the text.
 
 Engine defaults use *corrected* semantics where the reference is buggy
 (SURVEY §7 risk register); ``bug_compat=True`` reproduces the
@@ -29,21 +55,38 @@ reference's favorites-falls-back-to-retweet-count cascade
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.expressions import (
-    civil_day,
-    is_retweet_derived,
-    json_user_id,
-    popularity,
-    tweet_url,
+    civil_day_sql,
+    is_retweet_derived_sql,
+    popularity_sql,
 )
 
 VARIANTS = ("status", "retweet", "statusFromDistinctSources",
             "retweetFromDistinctSources")
+
+#: every zone offset lies within ±18 h (java.time.ZoneOffset), so
+#: to_utc_timestamp moves an instant by at most this much
+MAX_ZONE_OFFSET_HOURS = 18
+
+RECORD = """
+    s.ust_id AS id,
+    s.ust_status_id AS twitterId,
+    s.ust_full_name AS username,
+    s.ust_text AS text,
+    concat('https://twitter.com/', s.ust_full_name, '/status/',
+           s.ust_status_id) AS url,
+    s.ust_api_document AS json,
+    date_format(s.ust_created_at, 'yyyy-MM-dd HH:mm:ss') AS publishedAt,
+    date_format(s.ust_created_at, 'yyyy-MM-dd HH:mm:ss') AS checkedAt"""
+
+#: the A4 pick: every record field but the publisher and the two
+#: counts, which are the group's MAXes
+PICKED = ("id", "twitterId", "text", "url", "json", "publishedAt",
+          "checkedAt", "isRetweet")
 
 
 @dataclass
@@ -67,239 +110,185 @@ class TrendsTables:
 
 
 class TrendsPipeline:
-    """Composable builder for the daily-highlights computation."""
+    """Builder for the daily-highlights computation: each public method
+    returns the DataFrame of one ``spark.sql`` statement."""
 
     def __init__(self, tables: TrendsTables, params: TrendsParams):
         self.t = tables
         self.p = params
 
-    def _day(self, ts: Column) -> Column:
-        return civil_day(ts, self.p.shift_hours, self.p.tz)
+    # -- SQL text -----------------------------------------------------------
 
-    # -- building blocks ----------------------------------------------------
+    def _day(self, ts: str) -> str:
+        return civil_day_sql(ts, self.p.shift_hours,
+                             None if self.p.tz is None else ":tz")
 
-    def popularity_by_day(self) -> DataFrame:
-        """MAX popularity per (status_id, civil day) — the A2/A3 collapse
-        done as a pre-aggregation (see module docstring).
+    def _of_day(self, ts: str) -> str:
+        """``ts``'s civil day is ``:day``: a raw range Parquet can prune
+        by, then the exact predicate."""
+        if self.p.tz is None:
+            lo = hi = int(self.p.shift_hours)
+        else:
+            lo, hi = -MAX_ZONE_OFFSET_HOURS, MAX_ZONE_OFFSET_HOURS
+        return (
+            f"{ts} >= CAST(:day AS TIMESTAMP) + INTERVAL {lo} HOUR"
+            f" AND {ts} < CAST(date_add(:day, 1) AS TIMESTAMP)"
+            f" + INTERVAL {hi} HOUR"
+            f" AND {self._day(ts)} = CAST(:day AS DATE)"
+        )
 
-        Divergence note: like the reference, retweets and favorites are
-        collapsed with INDEPENDENT MAXes over the day's checks
+    def _with(self) -> str:
+        lists = ", ".join(
+            f":l{i}" for i in range(1, len(self.p.list_public_ids) + 1)
+        )
+        return f"""WITH
+hd AS (SELECT * FROM {{h}} WHERE {self._of_day("publication_date_time")}),
+sd AS (SELECT * FROM {{s}} WHERE {self._of_day("ust_created_at")}),
+pd AS (SELECT status_id, total_retweets, total_favorites FROM {{sp}}
+       WHERE {self._of_day("checked_at")}),
+pop AS (SELECT status_id AS p_status_id,
+               MAX(total_retweets) AS p_total_retweets,
+               MAX(total_favorites) AS p_total_favorites
+        FROM pd GROUP BY status_id),
+tl AS (SELECT id, screen_name FROM {{pl}} WHERE public_id IN ({lists})),
+dl AS (SELECT screen_name FROM {{pl}}
+       WHERE deleted_at IS NOT NULL AND screen_name IS NOT NULL),
+dm AS (SELECT /*+ BROADCAST(dl) */ u.usr_id AS excluded_id
+       FROM {{u}} u JOIN dl ON u.usr_twitter_username = dl.screen_name),
+dmt AS (SELECT /*+ BROADCAST(dl) */
+               CAST(u.usr_twitter_id AS BIGINT) AS excluded_id
+        FROM {{u}} u JOIN dl ON u.usr_twitter_username = dl.screen_name)
+"""
+
+    def _curated_sql(self, include_retweets: bool) -> str:
+        """Curated path (trends.go:274-334).  The reference only
+        constrains is_retweet when retweets are EXCLUDED (trends.go:
+        274-277); with include_retweets there is no kind filter.
+
+        Divergence note: like the reference, retweets and favorites
+        are collapsed with INDEPENDENT MAXes over the day's checks
         (trends.go:286-287) — not "both values from the single best
         check row"."""
-        p = self.t.status_popularity
-        return (
-            p.groupBy(
-                F.col("status_id").alias("p_status_id"),
-                self._day(F.col("checked_at")).alias("p_day"),
-            )
-            .agg(
-                F.max("total_retweets").alias("p_total_retweets"),
-                F.max("total_favorites").alias("p_total_favorites"),
-            )
-        )
+        kind = "" if include_retweets else "WHERE h.is_retweet = false"
+        return f"""
+SELECT /*+ BROADCAST(tl), BROADCAST(dm) */ {RECORD},
+    coalesce(h.is_retweet, false) AS isRetweet,
+    CAST({popularity_sql("pop.p_total_retweets", "h.total_retweets")}
+         AS INT) AS totalRetweets,
+    CAST({popularity_sql("pop.p_total_favorites", "h.total_favorites")}
+         AS INT) AS totalFavorites
+FROM hd h
+JOIN sd s ON s.ust_id = h.status_id
+JOIN tl ON h.aggregate_id = tl.id
+LEFT ANTI JOIN dm ON h.member_id = dm.excluded_id
+LEFT JOIN pop ON pop.p_status_id = h.status_id
+{kind}"""
 
-    def target_lists(self) -> DataFrame:
-        """publishers_list filtered to the IN-list (J3, trends.go:303-305);
-        tiny → broadcast."""
-        pl = self.t.publishers_list
-        return F.broadcast(
-            pl.filter(pl.public_id.isin(*self.p.list_public_ids))
-        )
-
-    def deleted_member_ids(self) -> DataFrame:
-        """Member ids excluded on the curated path (F3, trends.go:313-320):
-        members whose twitter username matches the screen_name of a
-        soft-deleted publishers list."""
-        u, pl = self.t.weaving_user, self.t.publishers_list
-        deleted = pl.filter(
-            pl.deleted_at.isNotNull() & pl.screen_name.isNotNull()
-        ).select("screen_name")
-        return (
-            u.join(
-                F.broadcast(deleted),
-                u.usr_twitter_username == F.col("screen_name"),
-            )
-            .select(F.col("usr_id").alias("excluded_id"))
-            .distinct()
-        )
-
-    def deleted_member_twitter_ids(self) -> DataFrame:
-        """Twitter-id variant of the exclusion set (distinct path,
-        trends.go:379-386)."""
-        u, pl = self.t.weaving_user, self.t.publishers_list
-        deleted = pl.filter(
-            pl.deleted_at.isNotNull() & pl.screen_name.isNotNull()
-        ).select("screen_name")
-        return (
-            u.join(
-                F.broadcast(deleted),
-                u.usr_twitter_username == F.col("screen_name"),
-            )
-            .select(F.col("usr_twitter_id").cast("long").alias("excluded_id"))
-            .where(F.col("excluded_id").isNotNull())
-            .distinct()
-        )
-
-    # -- variant pipelines --------------------------------------------------
-
-    def curated(self, include_retweets: bool) -> DataFrame:
-        """Curated path (trends.go:274-334).
-
-        The reference only constrains is_retweet when retweets are
-        EXCLUDED (``AND h.is_retweet = false``, trends.go:274-277);
-        with include_retweets the curated query has no kind filter.
-        The day predicates (sinceWhen(), trends.go:536-543) are
-        equalities on an INNER join → plain filters here, and the
-        day(s)=day(h) consistency predicate makes the $1/$4 params
-        interchangeable."""
-        h, s = self.t.highlight, self.t.weaving_status
-        day_lit = F.lit(self.p.since_date).cast("date")
-        hf = h.filter(self._day(F.col("publication_date_time")) == day_lit)
-        if not include_retweets:
-            hf = hf.filter(F.col("is_retweet") == F.lit(False))
-        base = (
-            hf.join(
-                s,
-                (s.ust_id == hf.status_id)
-                & (self._day(s.ust_created_at)
-                   == self._day(hf.publication_date_time)),
-            )
-            .join(self.target_lists(), hf.aggregate_id == F.col("id"))
-        )
-        base = base.join(
-            self.deleted_member_ids(),
-            base.member_id == F.col("excluded_id"),
-            "left_anti",
-        )
-        pop = self.popularity_by_day()
-        base = base.join(
-            pop,
-            (F.col("p_status_id") == base.status_id)
-            & (F.col("p_day") == self._day(base.publication_date_time)),
-            "left",
-        )
-        return self._project(base, from_distinct=False)
-
-    def distinct_sources(self, include_retweets: bool) -> DataFrame:
+    def _distinct_sql(self, include_retweets: bool) -> str:
         """Distinct-sources path (trends.go:335-393): one row per
         publisher — its most popular tweet of the day.
 
-        J2 ON-clause placement is semantics: the day-consistency
-        predicates (sinceWhen(), trends.go:536-543) and — only when
-        retweets are excluded — ``h.is_retweet = false`` live in the
-        LEFT JOIN condition (trends.go:350-356), so statuses keep
-        their null-extended row when the highlight fails them."""
-        h, s = self.t.highlight, self.t.weaving_status
-        day_lit = F.lit(self.p.since_date).cast("date")
-        sf = s.filter(self._day(s.ust_created_at) == day_lit)
-        # J2: LEFT OUTER; highlight predicates live in the ON clause
-        on = (
-            (sf.ust_id == h.status_id)
-            & (self._day(sf.ust_created_at)
-               == self._day(h.publication_date_time))
-        )
-        if not include_retweets:
-            on = on & (h.is_retweet == F.lit(False))
-        joined = sf.join(h, on, "left")
-        pl = self.target_lists()
-        # J4: disjunctive join — curated membership OR screen-name match
-        joined = joined.join(
-            pl,
-            (h.aggregate_id == pl.id)
-            | ((sf.ust_full_name == pl.screen_name) & pl.screen_name.isNotNull()),
-        )
-        # F2 (3-way retweet derivation, trends.go:370-378)
-        joined = joined.filter(
-            is_retweet_derived(h.is_retweet, sf.ust_api_document)
-            == F.lit(include_retweets)
-        )
-        # F3 distinct variant: exclude by JSON user id (trends.go:379-386)
-        joined = joined.join(
-            self.deleted_member_twitter_ids(),
-            json_user_id(sf.ust_api_document) == F.col("excluded_id"),
-            "left_anti",
-        )
-        # J5: popularity keys on the HIGHLIGHT side even here
-        # (trends.go:396-399) — never-highlighted statuses get no
-        # popularity row.
-        pop = self.popularity_by_day()
-        joined = joined.join(
-            pop,
-            (F.col("p_status_id") == h.status_id)
-            & (F.col("p_day") == self._day(h.publication_date_time)),
-            "left",
-        )
-        projected = self._project(joined, from_distinct=True)
-        # A4: argmax per publisher by popularity (trends.go:336-349,
-        # 389-392).  Quirk kept: the MAX aggregates run over the WHOLE
-        # publisher group — retweets necessarily equals the argmax
-        # winner's value, but favorites may come from a DIFFERENT
-        # status than the winning row (reference trends.go:343-344).
-        picked = F.max_by(
-            F.struct(*[c for c in projected.columns if c != "username"]),
-            F.struct(F.col("totalRetweets"), F.col("id")),
-        ).alias("top")
-        out = projected.groupBy("username").agg(
-            picked,
-            F.max("totalRetweets").alias("max_rt"),
-            F.max("totalFavorites").alias("max_fav"),
-        )
-        return out.select(
-            "username",
-            *[
-                F.col("max_rt").alias(c) if c == "totalRetweets"
-                else F.col("max_fav").alias(c) if c == "totalFavorites"
-                else F.col(f"top.{c}").alias(c)
-                for c in projected.columns
-                if c != "username"
-            ],
+        J5 keys popularity on the HIGHLIGHT side even here (trends.go:
+        396-399): never-highlighted statuses get no popularity row.
+        Quirk kept (trends.go:343-344): the MAX counts run over the
+        WHOLE publisher group — retweets necessarily equals the argmax
+        winner's, but favorites may come from another status.
+        ``bug_compat`` reproduces the favorites cascade bug (trends.go:
+        344: the middle fallback reads h.total_RETWEETS)."""
+        on_kind = "" if include_retweets else "AND h.is_retweet = false"
+        doc = "s.ust_api_document"
+        is_rt = is_retweet_derived_sql("h.is_retweet", doc)
+        fav_mid = ("h.total_retweets" if self.p.bug_compat
+                   else "h.total_favorites")
+        retweets = popularity_sql("pop.p_total_retweets", "h.total_retweets",
+                                  doc, "retweet_count")
+        favorites = popularity_sql("pop.p_total_favorites", fav_mid,
+                                   doc, "favorite_count")
+        picked = ", ".join(PICKED)
+        return f"""
+SELECT pick.id AS id, pick.twitterId AS twitterId, username,
+    pick.text AS text, pick.url AS url, pick.json AS json,
+    pick.publishedAt AS publishedAt, pick.checkedAt AS checkedAt,
+    pick.isRetweet AS isRetweet,
+    max_rt AS totalRetweets, max_fav AS totalFavorites
+FROM (
+  SELECT username,
+         max_by(struct({picked}), struct(totalRetweets, id)) AS pick,
+         MAX(totalRetweets) AS max_rt, MAX(totalFavorites) AS max_fav
+  FROM (
+    SELECT /*+ BROADCAST(tl), BROADCAST(dmt) */ {RECORD},
+        {is_rt} AS isRetweet,
+        CAST({retweets} AS INT) AS totalRetweets,
+        CAST({favorites} AS INT) AS totalFavorites
+    FROM sd s
+    LEFT JOIN hd h ON s.ust_id = h.status_id {on_kind}
+    JOIN tl ON h.aggregate_id = tl.id
+               OR (s.ust_full_name = tl.screen_name
+                   AND tl.screen_name IS NOT NULL)
+    LEFT ANTI JOIN dmt
+      ON CAST(get_json_object({doc}, '$.user.id_str') AS BIGINT)
+         = dmt.excluded_id
+    LEFT JOIN pop ON pop.p_status_id = h.status_id
+    WHERE {is_rt} = {"true" if include_retweets else "false"}
+  )
+  GROUP BY username
+)"""
+
+    def _variant_sql(self, name: str) -> str:
+        """O1/O2: ORDER BY retweets DESC with a unique tiebreaker, then
+        offset/limit (trends.go:395-406; the offset quirk is NOT
+        replicated — see SURVEY §7 risk register)."""
+        if name == "status":
+            body = self._curated_sql(include_retweets=False)
+        elif name == "retweet":
+            body = self._curated_sql(include_retweets=True)
+        elif name == "statusFromDistinctSources":
+            body = self._distinct_sql(include_retweets=False)
+        elif name == "retweetFromDistinctSources":
+            body = self._distinct_sql(include_retweets=True)
+        else:
+            raise ValueError(f"unknown variant {name!r}; one of {VARIANTS}")
+        limit, page = int(self.p.limit), int(self.p.page)
+        out = f"SELECT * FROM ({body}\n) ORDER BY totalRetweets DESC, id"
+        if limit > 0:
+            out += f" LIMIT {limit}"
+        if page > 0:
+            out += f" OFFSET {page * limit}"
+        return out
+
+    def _sql(self, body: str, **args) -> DataFrame:
+        t = self.t
+        args["day"] = self.p.since_date
+        args["tz"] = self.p.tz
+        for i, list_id in enumerate(self.p.list_public_ids, 1):
+            args[f"l{i}"] = list_id
+        return t.highlight.sparkSession.sql(
+            self._with() + body, args=args,
+            h=t.highlight, s=t.weaving_status, pl=t.publishers_list,
+            sp=t.status_popularity, u=t.weaving_user,
         )
 
-    def _project(self, df: DataFrame, from_distinct: bool) -> DataFrame:
-        """The 12-field output record (trends.go:279-292,336-349,716-729).
+    # -- entry points -------------------------------------------------------
 
-        Faithful quirks: publicationDate AND checkedAt are both
-        ``s.ust_created_at`` (trends.go:284,291 — checkedAt never reads
-        status_popularity.checked_at).  ``bug_compat`` reproduces the
-        distinct-path favorites cascade bug (trends.go:344: the middle
-        fallback reads h.total_RETWEETS); the engine default corrects
-        it to h.total_favorites."""
-        doc = F.col("ust_api_document")
-        retweets = popularity(
-            F.col("p_total_retweets"),
-            F.col("total_retweets"),
-            doc if from_distinct else None,
-            json_field="retweet_count",
-        )
-        fav_mid = (
-            F.col("total_retweets") if (self.p.bug_compat and from_distinct)
-            else F.col("total_favorites")
-        )
-        favorites = popularity(
-            F.col("p_total_favorites"),
-            fav_mid,
-            doc if from_distinct else None,
-            json_field="favorite_count",
-        )
-        is_rt = (
-            is_retweet_derived(F.col("is_retweet"), doc)
-            if from_distinct
-            else F.coalesce(F.col("is_retweet"), F.lit(False))
-        )
-        ts_col = F.col("ust_created_at")
-        return df.select(
-            F.col("ust_id").alias("id"),
-            F.col("ust_status_id").alias("twitterId"),
-            F.col("ust_full_name").alias("username"),
-            F.col("ust_text").alias("text"),
-            tweet_url(F.col("ust_full_name"), F.col("ust_status_id")).alias("url"),
-            doc.alias("json"),
-            F.date_format(ts_col, "yyyy-MM-dd HH:mm:ss").alias("publishedAt"),
-            F.date_format(ts_col, "yyyy-MM-dd HH:mm:ss").alias("checkedAt"),
-            is_rt.alias("isRetweet"),
-            retweets.cast("int").alias("totalRetweets"),
-            favorites.cast("int").alias("totalFavorites"),
-        )
+    def curated(self, include_retweets: bool) -> DataFrame:
+        return self._sql(self._curated_sql(include_retweets))
+
+    def distinct_sources(self, include_retweets: bool) -> DataFrame:
+        return self._sql(self._distinct_sql(include_retweets))
+
+    def variant(self, name: str) -> DataFrame:
+        return self._sql(self._variant_sql(name))
+
+    def all_variants(self, names: tuple[str, ...] = VARIANTS) -> DataFrame:
+        """The reference's three sequential runs (trends.go:151-198) as
+        one unioned DataFrame with a statusType discriminator — a
+        single job, single write (SURVEY §2.7)."""
+        parts = [
+            f"SELECT *, :t{i} AS statusType FROM ({self._variant_sql(n)}\n)"
+            for i, n in enumerate(names)
+        ]
+        return self._sql("\nUNION ALL\n".join(parts),
+                         **{f"t{i}": n for i, n in enumerate(names)})
 
     def count_highlights(self, distinct_sources: bool = False) -> int:
         """A1 parity (reference countHighlights, trends.go:450-529):
@@ -308,41 +297,20 @@ class TrendsPipeline:
         IN-list + day filters (none of the retweet/deleted-member
         predicates) and LEFT-joins popularity WITHOUT pre-aggregation —
         so multiple same-day checks multiply the count, exactly as the
-        reference's does."""
-        h, s = self.t.highlight, self.t.weaving_status
-        day_lit = F.lit(self.p.since_date).cast("date")
+        reference's does.  The distinct count LEFT-joins the lists
+        (trends.go:472-481), unlike the select's inner J4."""
         if distinct_sources:
-            spine = s.filter(self._day(s.ust_created_at) == day_lit).join(
-                h,
-                (s.ust_id == h.status_id)
-                & (self._day(s.ust_created_at)
-                   == self._day(h.publication_date_time)),
-                "left",
-            )
-            # reference count uses a LEFT join to publishers_list here
-            # (trends.go:472-481), unlike the select's inner J4
-            spine = spine.join(
-                self.target_lists(),
-                h.aggregate_id == F.col("id"),
-                "left",
-            )
+            spine = """sd s
+LEFT JOIN hd h ON s.ust_id = h.status_id
+LEFT JOIN tl ON h.aggregate_id = tl.id"""
         else:
-            hf = h.filter(self._day(F.col("publication_date_time")) == day_lit)
-            spine = hf.join(
-                s,
-                (s.ust_id == hf.status_id)
-                & (self._day(s.ust_created_at)
-                   == self._day(hf.publication_date_time)),
-            ).join(self.target_lists(), hf.aggregate_id == F.col("id"))
-        p = self.t.status_popularity
-        spine = spine.join(
-            p,
-            (p.status_id == h.status_id)
-            & (self._day(p.checked_at)
-               == self._day(h.publication_date_time)),
-            "left",
-        )
-        return spine.count()
+            spine = """hd h
+JOIN sd s ON s.ust_id = h.status_id
+JOIN tl ON h.aggregate_id = tl.id"""
+        return self._sql(
+            f"SELECT /*+ BROADCAST(tl) */ COUNT(*) FROM {spine}\n"
+            "LEFT JOIN pd p ON p.status_id = h.status_id"
+        ).collect()[0][0]
 
     def last_week_statuses(self, now: str) -> DataFrame:
         """F6 — the reference's -since-last-week mode emits invalid SQL
@@ -350,47 +318,10 @@ class TrendsPipeline:
         dead; this is the corrected semantics: statuses whose shifted
         creation time falls within the 7 days before ``now``
         (parameterized instead of NOW() for determinism)."""
-        s = self.t.weaving_status
-        now_ts = F.lit(now).cast("timestamp")
-        shifted = s.ust_created_at - F.expr(
-            f"INTERVAL {self.p.shift_hours} HOUR"
+        shifted = f"ust_created_at - INTERVAL {int(self.p.shift_hours)} HOUR"
+        return self.t.weaving_status.sparkSession.sql(
+            f"SELECT * FROM {{s}} WHERE {shifted}"
+            " > CAST(:now AS TIMESTAMP) - INTERVAL 7 DAYS"
+            f" AND {shifted} <= CAST(:now AS TIMESTAMP)",
+            args={"now": now}, s=self.t.weaving_status,
         )
-        return s.filter(
-            (shifted > now_ts - F.expr("INTERVAL 7 DAYS"))
-            & (shifted <= now_ts)
-        )
-
-    # -- entry points -------------------------------------------------------
-
-    def variant(self, name: str) -> DataFrame:
-        if name == "status":
-            df = self.curated(include_retweets=False)
-        elif name == "retweet":
-            df = self.curated(include_retweets=True)
-        elif name == "statusFromDistinctSources":
-            df = self.distinct_sources(include_retweets=False)
-        elif name == "retweetFromDistinctSources":
-            df = self.distinct_sources(include_retweets=True)
-        else:
-            raise ValueError(f"unknown variant {name!r}; one of {VARIANTS}")
-        # O1/O2: ORDER BY retweets DESC with unique tiebreaker, then
-        # offset/limit (reference trends.go:395-406; offset quirk NOT
-        # replicated — see SURVEY §7 risk register)
-        out = df.orderBy(F.desc("totalRetweets"), F.asc("id"))
-        if self.p.page > 0:
-            out = out.offset(self.p.page * self.p.limit)
-        if self.p.limit > 0:
-            out = out.limit(self.p.limit)
-        return out
-
-    def all_variants(self, names: tuple[str, ...] = VARIANTS) -> DataFrame:
-        """The reference's three sequential runs (trends.go:151-198) as
-        one unioned DataFrame with a statusType discriminator — a
-        single job, single write (SURVEY §2.7)."""
-        parts = [
-            self.variant(n).withColumn("statusType", F.lit(n)) for n in names
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out

@@ -18,7 +18,7 @@ the same *semantics* with late-data tolerance:
   continuous arrival.  Exactly-once per partition comes from the
   overwrite being idempotent, the classic foreachBatch upsert pattern.
 - ``running_user_peaks`` — applyInPandasWithState example: per-user
-  running peak value with processing-time timeout, the template for
+  running peak value with event-time timeout, the template for
   custom stateful operators the built-in windows can't express.
 - ``foreach_batch_hll_distinct`` / ``foreach_batch_histogram_quantiles``
   / ``foreach_batch_auc`` — running sketches over unbounded streams
@@ -233,36 +233,48 @@ def running_user_peaks(
 ) -> DataFrame:
     """Custom stateful operator via applyInPandasWithState: per-user
     running peak event value + count, state expiring after
-    ``timeout_minutes`` of processing-time inactivity."""
+    ``timeout_minutes`` of event-time inactivity — once the watermark
+    (``timeout_minutes`` behind the latest ``ts_col`` seen) passes the
+    user's last event + ``timeout_minutes``.
+
+    The timeout is on event time, not processing time: under
+    ``trigger(availableNow=True)`` a processing-time timeout keeps the
+    query running no-data batches forever."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     output_schema = "user_id LONG, peak_value DOUBLE, n_events LONG"
-    state_schema = "peak_value DOUBLE, n_events LONG"
+    state_schema = "peak_value DOUBLE, n_events LONG, last_ms LONG"
+    timeout_ms = timeout_minutes * 60 * 1000
 
     def update(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
             state.remove()
             return
-        peak, n = state.get if state.exists else (float("-inf"), 0)
+        peak, n, last = state.get if state.exists else (float("-inf"), 0, 0)
         for pdf in pdf_iter:
             if len(pdf):
                 peak = max(peak, float(pdf["value"].max()))
                 n += len(pdf)
-        state.update((peak, n))
-        state.setTimeoutDuration(timeout_minutes * 60 * 1000)
+                last = max(last, int(pdf["event_ms"].max()))
+        state.update((peak, n, last))
+        # late rows never reach here, so this is at or past the watermark
+        state.setTimeoutTimestamp(last + timeout_ms)
         yield pd.DataFrame(
             {"user_id": [key[0]], "peak_value": [peak], "n_events": [n]}
         )
 
     return (
-        events.groupBy("user_id")
+        events.withWatermark(ts_col, f"{timeout_minutes} minutes")
+        .select("user_id", "value", ts_col,
+                F.unix_millis(F.col(ts_col)).alias("event_ms"))
+        .groupBy("user_id")
         .applyInPandasWithState(
             update,
             outputStructType=output_schema,
             stateStructType=state_schema,
             outputMode="update",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 

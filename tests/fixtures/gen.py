@@ -125,6 +125,15 @@ def generate(outdir: str, seed: int = 42) -> dict[str, str]:
                          rng.randrange(2000, 3000), rng.randrange(0, 500))
                     )
 
+    return write_tables(outdir, statuses, highlights, publishers_list,
+                        popularity, weaving_user)
+
+
+def write_tables(outdir, statuses, highlights, publishers_list, popularity,
+                 weaving_user) -> dict[str, str]:
+    """Write the five tables from their row tuples (the shapes built by
+    ``generate``)."""
+    os.makedirs(outdir, exist_ok=True)
     paths = {}
 
     def write(name: str, table: pa.Table) -> None:
@@ -208,3 +217,50 @@ def generate(outdir: str, seed: int = 42) -> dict[str, str]:
         ),
     )
     return paths
+
+
+#: a plain day and the two 2024 Europe/Paris DST days (23 h, 25 h)
+EDGE_DAYS = ("2024-03-02", "2024-03-31", "2024-10-27")
+
+
+def generate_window_edges(outdir: str, days=EDGE_DAYS) -> dict[str, str]:
+    """Statuses at every hour boundary from 00:00 the day before to 00:00
+    two days after each of ``days``: 1 µs before the boundary, on it,
+    and 30 min after — so every civil-day bound and every day-window
+    bound, under any whole-hour shift or the Europe/Paris zone, has a
+    row just inside and just outside it.  Each status has its own
+    publisher (the distinct variants keep every row) and is highlighted
+    in the target list; every fifth highlight is published an hour
+    later than its status (day-consistency across a boundary); each
+    highlight has one popularity check at publication and one 1 µs
+    before the next hour."""
+    us = dt.timedelta(microseconds=1)
+    instants = sorted(
+        _ts(day, 0, 0) + dt.timedelta(hours=h - 24) + d
+        for day in days
+        for h in range(73)
+        for d in (-us, dt.timedelta(0), dt.timedelta(minutes=30))
+    )
+    statuses, highlights, popularity = [], [], []
+    for i, created in enumerate(instants, 1):
+        kind = i % 3  # is_retweet False / True / NULL
+        doc: dict = {"user": {"id_str": str(5000 + i)},
+                     "retweet_count": i % 50, "favorite_count": i % 70}
+        if kind == 2 and i % 2:
+            doc["retweeted_status_result"] = {}
+        statuses.append((i, f"9{i:018d}", f"edge{i:04d}", f"edge {i}",
+                         created, json.dumps(doc)))
+        pub_dt = created + dt.timedelta(hours=1) if i % 5 == 0 else created
+        highlights.append((i, 1, i, (False, True, None)[kind], pub_dt,
+                           (i * 7) % 40 * 25, (i * 11) % 1000))
+        popularity.append((i, pub_dt, 2000 + i, i))
+        popularity.append((i, pub_dt + dt.timedelta(hours=1) - us,
+                           3000 + i, 2 * i))
+    publishers_list = [
+        (1, TARGET_LIST, None, None),
+        (2, DEPRECATED_LIST, None, None),
+        (4, "deleted-list", "edge0007", _ts(days[0], 0, 0)),
+    ]
+    weaving_user = [(7, "edge0007", "5007")]
+    return write_tables(outdir, statuses, highlights, publishers_list,
+                        popularity, weaving_user)

@@ -329,7 +329,7 @@ def test_running_user_peaks_stateful(spark, events_stream_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     rows = spark.sql(
         "SELECT user_id, max(peak_value) AS peak, max(n_events) AS n "
         "FROM user_peaks GROUP BY user_id"

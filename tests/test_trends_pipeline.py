@@ -20,9 +20,18 @@ from __future__ import annotations
 import pytest
 
 from conftest import canon
-from fixtures.gen import DEPRECATED_LIST, TARGET_LIST, generate
+from fixtures.gen import (
+    DAYS,
+    DEPRECATED_LIST,
+    TARGET_LIST,
+    generate,
+    generate_window_edges,
+)
 
-from org_revue_de_presse_trends_spark.cli import load_domain_tables
+from org_revue_de_presse_trends_spark.cli import (
+    DOMAIN_TABLES,
+    load_domain_tables,
+)
 from org_revue_de_presse_trends_spark.plans.trends import (
     TrendsParams,
     TrendsPipeline,
@@ -62,10 +71,24 @@ IS_RT_DERIVED = (
 )
 
 
-def curated_oracle(day: str, limit: int = 10) -> str:
-    sday = CIVIL.format(c="s.ust_created_at")
-    hday = CIVIL.format(c="h.publication_date_time")
-    pday = CIVIL.format(c="p.checked_at")
+def civil_sql(shift_hours: int = 1, tz: str | None = None) -> str:
+    """DuckDB civil day of ``{c}``: the fixed shift, or local→UTC in
+    ``tz`` (``AT TIME ZONE`` reads a naive timestamp as local time)."""
+    if tz is not None:
+        return f"CAST(timezone('UTC', {{c}} AT TIME ZONE '{tz}') AS DATE)"
+    return f"CAST({{c}} - INTERVAL {shift_hours} HOUR AS DATE)"
+
+
+def _limit(limit: int) -> str:
+    return f"LIMIT {limit}" if limit > 0 else ""
+
+
+def curated_oracle(day: str, limit: int = 10, include_retweets: bool = False,
+                   civil: str = CIVIL) -> str:
+    sday = civil.format(c="s.ust_created_at")
+    hday = civil.format(c="h.publication_date_time")
+    pday = civil.format(c="p.checked_at")
+    kind = "" if include_retweets else "AND h.is_retweet = false"
     return f"""
     SELECT
       s.ust_id AS id,
@@ -86,25 +109,26 @@ def curated_oracle(day: str, limit: int = 10) -> str:
     JOIN weaving_status s ON s.ust_id = h.status_id
       AND {sday} = {hday}
       AND {sday} = DATE '{day}'
-      AND h.is_retweet = false
+      {kind}
     JOIN publishers_list pl ON h.aggregate_id = pl.id
       AND pl.public_id IN {IN_LIST}
     LEFT JOIN status_popularity p ON p.status_id = h.status_id
       AND {pday} = {hday}
     WHERE {hday} = DATE '{day}'
-      AND h.is_retweet = false
+      {kind}
       AND h.member_id NOT IN ({DELETED_MEMBERS})
     GROUP BY h.status_id, s.ust_status_id, s.ust_full_name, s.ust_text,
              s.ust_created_at, s.ust_api_document, s.ust_id, h.is_retweet
     ORDER BY totalRetweets DESC NULLS LAST, id ASC
-    LIMIT {limit}
+    {_limit(limit)}
     """
 
 
-def distinct_oracle(day: str, include_retweets: bool, limit: int = 10) -> str:
-    sday = CIVIL.format(c="s.ust_created_at")
-    hday = CIVIL.format(c="h.publication_date_time")
-    pday = CIVIL.format(c="p.checked_at")
+def distinct_oracle(day: str, include_retweets: bool, limit: int = 10,
+                    civil: str = CIVIL) -> str:
+    sday = civil.format(c="s.ust_created_at")
+    hday = civil.format(c="h.publication_date_time")
+    pday = civil.format(c="p.checked_at")
     kind = "true" if include_retweets else "false"
     on_rt = "" if include_retweets else "AND h.is_retweet = false"
     rt_json = JSON_INT.format(d="s.ust_api_document", f="retweet_count")
@@ -161,7 +185,34 @@ def distinct_oracle(day: str, include_retweets: bool, limit: int = 10) -> str:
       CAST(max_fav AS INTEGER) AS totalFavorites
     FROM ranked WHERE rn = 1
     ORDER BY totalRetweets DESC NULLS LAST, id ASC
-    LIMIT {limit}
+    {_limit(limit)}
+    """
+
+
+def count_oracle(day: str, distinct_sources: bool, civil: str = CIVIL) -> str:
+    """The reference count query (trends.go:450-529)."""
+    sday = civil.format(c="s.ust_created_at")
+    hday = civil.format(c="h.publication_date_time")
+    pday = civil.format(c="p.checked_at")
+    if distinct_sources:
+        spine = f"""weaving_status s
+        LEFT JOIN highlight h ON s.ust_id = h.status_id
+          AND {sday} = {hday} AND {sday} = DATE '{day}'
+        LEFT JOIN publishers_list pl ON h.aggregate_id = pl.id
+          AND pl.public_id IN {IN_LIST}"""
+        where = sday
+    else:
+        spine = f"""highlight h
+        JOIN weaving_status s ON s.ust_id = h.status_id
+          AND {sday} = {hday} AND {sday} = DATE '{day}'
+        JOIN publishers_list pl ON h.aggregate_id = pl.id
+          AND pl.public_id IN {IN_LIST}"""
+        where = hday
+    return f"""
+        SELECT COUNT(*) FROM {spine}
+        LEFT JOIN status_popularity p ON p.status_id = h.status_id
+          AND {pday} = {hday}
+        WHERE {where} = DATE '{day}'
     """
 
 
@@ -177,15 +228,17 @@ def domain_tables(spark, domain_dir):
     return load_domain_tables(spark, domain_dir)
 
 
+def _duck_views(con, src: str):
+    for n in DOMAIN_TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {n} AS SELECT * FROM '{src}/{n}.parquet'"
+        )
+    return con
+
+
 @pytest.fixture(scope="session")
 def domain_duck(duck, domain_dir):
-    for n in ("highlight", "weaving_status", "publishers_list",
-              "status_popularity", "weaving_user"):
-        duck.execute(
-            f"CREATE OR REPLACE VIEW {n} AS "
-            f"SELECT * FROM '{domain_dir}/{n}.parquet'"
-        )
-    return duck
+    return _duck_views(duck, domain_dir)
 
 
 def _params(**kw) -> TrendsParams:
@@ -209,9 +262,6 @@ def _compare(df, duck, sql, min_rows=1):
     for i, (a, b) in enumerate(zip(s, d)):
         assert a == b, f"row {i}: spark={a}\nduck={b}"
     assert len(s) >= min_rows
-
-
-from fixtures.gen import DAYS
 
 
 @pytest.mark.parametrize("day", DAYS)
@@ -278,36 +328,11 @@ def test_count_highlights_matches_reference_count(
 ):
     """A1: the count query (trends.go:450-529) — spine joins + IN-list
     + day filter only, popularity join unaggregated (multiplies)."""
-    sday = CIVIL.format(c="s.ust_created_at")
-    hday = CIVIL.format(c="h.publication_date_time")
-    pday = CIVIL.format(c="p.checked_at")
-    curated_sql = f"""
-        SELECT COUNT(*) FROM highlight h
-        JOIN weaving_status s ON s.ust_id = h.status_id
-          AND {sday} = {hday} AND {sday} = DATE '{DAY}'
-        JOIN publishers_list pl ON h.aggregate_id = pl.id
-          AND pl.public_id IN {IN_LIST}
-        LEFT JOIN status_popularity p ON p.status_id = h.status_id
-          AND {pday} = {hday}
-        WHERE {hday} = DATE '{DAY}'
-    """
-    distinct_sql = f"""
-        SELECT COUNT(*) FROM weaving_status s
-        LEFT JOIN highlight h ON s.ust_id = h.status_id
-          AND {sday} = {hday} AND {sday} = DATE '{DAY}'
-        LEFT JOIN publishers_list pl ON h.aggregate_id = pl.id
-          AND pl.public_id IN {IN_LIST}
-        LEFT JOIN status_popularity p ON p.status_id = h.status_id
-          AND {pday} = {hday}
-        WHERE {sday} = DATE '{DAY}'
-    """
     pipe = TrendsPipeline(domain_tables, _params())
-    assert pipe.count_highlights() == domain_duck.execute(
-        curated_sql
-    ).fetchone()[0]
-    assert pipe.count_highlights(distinct_sources=True) == domain_duck.execute(
-        distinct_sql
-    ).fetchone()[0]
+    for distinct in (False, True):
+        assert pipe.count_highlights(distinct) == domain_duck.execute(
+            count_oracle(DAY, distinct)
+        ).fetchone()[0]
 
 
 def test_last_week_statuses_corrected(spark, domain_tables, domain_duck):
@@ -362,6 +387,83 @@ def test_argmax_one_row_per_source(spark, domain_tables):
     assert len(names) == len(set(names))
 
 
+@pytest.fixture(scope="session")
+def edge_tables(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("trends_window_edges"))
+    generate_window_edges(out)
+    return load_domain_tables(spark, out), out
+
+
+@pytest.fixture(scope="session")
+def edge_duck(edge_tables):
+    import duckdb
+
+    con = _duck_views(duckdb.connect(), edge_tables[1])
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("day,shift_hours,tz", [
+    ("2024-03-31", 1, "Europe/Paris"),  # 23 h local day
+    ("2024-10-27", 1, "Europe/Paris"),  # 25 h local day
+    ("2024-03-02", 0, None),
+    ("2024-03-02", 2, None),
+    ("2024-10-27", 1, None),
+])
+def test_day_window_edges(spark, edge_tables, edge_duck, day, shift_hours,
+                          tz):
+    """Every variant and both COUNT modes against DuckDB on rows 1 µs
+    either side of every hour boundary around the day, so each civil-day
+    bound and each day-window bound has a row just inside and just
+    outside it.  Spark resolves the repeated 02:00-03:00 of 2024-10-27
+    to CEST and DuckDB to CET; both instants fall on the same civil day,
+    so no row is left out."""
+    pipe = TrendsPipeline(edge_tables[0], _params(
+        since_date=day, limit=0, shift_hours=shift_hours, tz=tz))
+    civil = civil_sql(shift_hours, tz)
+    oracles = {
+        "status": curated_oracle(day, 0, False, civil),
+        "retweet": curated_oracle(day, 0, True, civil),
+        "statusFromDistinctSources": distinct_oracle(day, False, 0, civil),
+        "retweetFromDistinctSources": distinct_oracle(day, True, 0, civil),
+    }
+    for name, sql in oracles.items():
+        _compare(pipe.variant(name), edge_duck, sql)
+    for distinct in (False, True):
+        assert pipe.count_highlights(distinct) == edge_duck.execute(
+            count_oracle(day, distinct, civil)
+        ).fetchone()[0]
+
+
+def _executions(spark) -> dict:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {e.executionId(): e
+            for e in (execs.apply(i) for i in range(execs.size()))}
+
+
+def test_day_window_reaches_every_history_scan(spark, domain_tables):
+    """Plan shape of the union and both COUNTs: the day window is a
+    Parquet pushed filter on all three history scans, and no anti-join
+    key set is shuffled (anti joins need no DISTINCT)."""
+    pipe = TrendsPipeline(domain_tables, _params())
+    for run in (lambda: pipe.all_variants().collect(),
+                lambda: pipe.count_highlights(),
+                lambda: pipe.count_highlights(distinct_sources=True)):
+        before = set(_executions(spark))
+        run()
+        plan = "\n".join(e.physicalPlanDescription()
+                         for i, e in _executions(spark).items()
+                         if i not in before)
+        pushed = [ln for ln in plan.splitlines() if "PushedFilters:" in ln]
+        for col in ("publication_date_time", "ust_created_at", "checked_at"):
+            assert any(
+                f"GreaterThanOrEqual({col},2024-03-02 01:00:00.0)" in ln
+                and f"LessThan({col},2024-03-03 01:00:00.0)" in ln
+                for ln in pushed
+            ), col
+        assert "hashpartitioning(excluded_id" not in plan
+
+
 def test_cli_loads_nanosecond_timestamps(spark, domain_dir, tmp_path):
     """pandas' default parquet export stores timestamps as
     TIMESTAMP(NANOS), which a raw ``spark.read.parquet`` rejects
@@ -370,7 +472,7 @@ def test_cli_loads_nanosecond_timestamps(spark, domain_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from org_revue_de_presse_trends_spark.cli import DOMAIN_TABLES, main
+    from org_revue_de_presse_trends_spark.cli import main
 
     ns_cols = {
         "weaving_status": "ust_created_at",
