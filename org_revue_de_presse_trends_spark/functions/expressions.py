@@ -2,10 +2,10 @@
 
 Each function mirrors one scalar-expression operator of the reference,
 cited by trends.go line.  An operator is written once, as SQL text
-(``*_sql``, spliced into the statements of plans/trends.py); its
-Column form is ``F.expr`` over that text.  All are built-in Spark
-expressions — JVM-side, whole-stage-codegen'd; zero Python UDFs
-(SURVEY §2.10: none are needed for parity).
+(``*_sql``, spliced into the statements of plans/trends.py);
+``civil_day``, which Column callers use, is ``F.expr`` over that text.
+All are built-in Spark expressions — JVM-side, whole-stage-codegen'd;
+zero Python UDFs (SURVEY §2.10: none are needed for parity).
 """
 
 from __future__ import annotations
@@ -58,17 +58,6 @@ def popularity_sql(
     return f"coalesce({', '.join(branches)})"
 
 
-def popularity(
-    checked: Column, at_collection: Column, raw_json_doc: Column | None = None,
-    json_field: str = "retweet_count",
-) -> Column:
-    """``popularity_sql`` as a Column."""
-    return F.expr(popularity_sql(
-        sql_text(checked), sql_text(at_collection),
-        None if raw_json_doc is None else sql_text(raw_json_doc), json_field,
-    ))
-
-
 def is_retweet_derived_sql(is_retweet: str, api_document: str) -> str:
     """3-way retweet derivation (reference trends.go:347,378):
     COALESCE(h.is_retweet, doc->>'retweeted_status_result' IS NOT NULL,
@@ -76,13 +65,6 @@ def is_retweet_derived_sql(is_retweet: str, api_document: str) -> str:
     return (
         f"coalesce({is_retweet}, get_json_object({api_document}, "
         "'$.retweeted_status_result') IS NOT NULL, false)"
-    )
-
-
-def is_retweet_derived(is_retweet: Column, api_document: Column) -> Column:
-    """``is_retweet_derived_sql`` as a Column."""
-    return F.expr(
-        is_retweet_derived_sql(sql_text(is_retweet), sql_text(api_document))
     )
 
 

@@ -32,14 +32,12 @@ Variant bodies:
   reference's three sequential runs (:151-198) as one job.
 - ``count_highlights``: the reference count query (:450-529).
 
-Day window.  Every history scan carries a raw column range derived in
-SQL from ``:day`` — ``[start + shift, end + shift)`` under the fixed
-shift, widened to ±18 h (the bound of any zone offset) under ``tz`` —
-that contains every instant whose civil day is ``:day``, DST days of 23
-and 25 hours included.  The exact civil-day predicate stays on top, so
-the output is that of the unwindowed query, while Parquet row groups
-outside the day are skipped.  Every spine row is of ``:day``, so the
-day predicates of J1, J2 and J5 reduce to the per-table day filters.
+Day filters.  Every history scan keeps the rows whose civil day is
+``:day``.  Every spine row is of ``:day``, so the day predicates of J1,
+J2 and J5 reduce to these per-table day filters.  No raw timestamp range
+is added: Spark builds no Parquet row-group predicate from one on the
+naive ``timestamp[us]`` columns the loader reads, and on those tables it
+measured no faster (ROADMAP direction 3).
 
 Anti joins ignore duplicate keys, so ``dm``/``dmt`` carry no DISTINCT.
 
@@ -67,10 +65,6 @@ from ..functions.expressions import (
 
 VARIANTS = ("status", "retweet", "statusFromDistinctSources",
             "retweetFromDistinctSources")
-
-#: every zone offset lies within ±18 h (java.time.ZoneOffset), so
-#: to_utc_timestamp moves an instant by at most this much
-MAX_ZONE_OFFSET_HOURS = 18
 
 RECORD = """
     s.ust_id AS id,
@@ -119,23 +113,11 @@ class TrendsPipeline:
 
     # -- SQL text -----------------------------------------------------------
 
-    def _day(self, ts: str) -> str:
-        return civil_day_sql(ts, self.p.shift_hours,
-                             None if self.p.tz is None else ":tz")
-
     def _of_day(self, ts: str) -> str:
-        """``ts``'s civil day is ``:day``: a raw range Parquet can prune
-        by, then the exact predicate."""
-        if self.p.tz is None:
-            lo = hi = int(self.p.shift_hours)
-        else:
-            lo, hi = -MAX_ZONE_OFFSET_HOURS, MAX_ZONE_OFFSET_HOURS
-        return (
-            f"{ts} >= CAST(:day AS TIMESTAMP) + INTERVAL {lo} HOUR"
-            f" AND {ts} < CAST(date_add(:day, 1) AS TIMESTAMP)"
-            f" + INTERVAL {hi} HOUR"
-            f" AND {self._day(ts)} = CAST(:day AS DATE)"
-        )
+        """``ts``'s civil day is ``:day``."""
+        day = civil_day_sql(ts, self.p.shift_hours,
+                            None if self.p.tz is None else ":tz")
+        return f"{day} = CAST(:day AS DATE)"
 
     def _with(self) -> str:
         lists = ", ".join(

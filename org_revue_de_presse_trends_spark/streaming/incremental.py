@@ -239,7 +239,13 @@ def running_user_peaks(
 
     The timeout is on event time, not processing time: under
     ``trigger(availableNow=True)`` a processing-time timeout keeps the
-    query running no-data batches forever."""
+    query running no-data batches forever.
+
+    Late rows are dropped: a row whose ``ts_col`` is behind the
+    watermark of the batch it arrives in counts in neither
+    ``peak_value`` nor ``n_events``.  The lateness tolerance is thus
+    ``timeout_minutes``, the same horizon as state expiry; a batch
+    frame has no watermark and drops nothing."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

@@ -1,25 +1,18 @@
 #!/usr/bin/env python
 """Per-day cost of the daily worker as its history grows.
 
-Usage: python scripts/day_cost_curve.py [--histories 7,90,365]
-           [--per-day 300] [--days 3] [--seed 1] [--workdir DIR]
+Usage: python scripts/day_cost_curve.py [--workdir DIR]
 
-For each history length, generates the five domain tables with
-``perfbench/gen_domain.py`` (read-only import) at ``--per-day``
-statuses per day and rewrites them with one Parquet row group per
-``--per-day`` rows — the layout of a table appended to daily — in two
-timestamp layouts: ``naive`` (as generated: micros without
-isAdjustedToUTC, which the loader reads as session-time-zone
-timestamps) and ``utc`` (the same values marked UTC-adjusted, as Spark
-writes them).  Then it runs the worker's day (COUNT, then the
-four-variant union collected) for the last ``--days`` days of the
-history.  Prints one line per day: wall seconds, and ``bytes_read``,
-the rows output by all plan nodes and the shuffle bytes, as
-``observability.MetricsCollector`` reports them.  ``bytes_read`` is
-Spark's "size of files read", the size of every file the scan opens:
-row groups skipped inside a file still count, so it is flat only for a
-day-partitioned table.  Not a gated benchmark: one fresh session,
-warmed on the first day, no pairs.
+For each of ``HISTORIES`` (days), generates the five domain tables with
+``perfbench/gen_domain.py`` (read-only import) at ``PER_DAY`` statuses
+per day, then runs the worker's day (COUNT, then the four-variant union
+collected) for the last ``DAYS`` days of the history.  Prints one line
+per day: wall seconds, and ``bytes_read``, the rows output by all plan
+nodes and the shuffle bytes, as ``observability.MetricsCollector``
+reports them.  ``bytes_read`` is Spark's "size of files read", the size
+of every file the scan opens, so it is flat only for a day-partitioned
+table.  Not a gated benchmark: one fresh session, warmed on the first
+day, no pairs.
 """
 import argparse
 import os
@@ -32,8 +25,6 @@ sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "perfbench"))
 
 import gen_domain  # noqa: E402
-import pyarrow as pa  # noqa: E402
-import pyarrow.parquet as pq  # noqa: E402
 
 from org_revue_de_presse_trends_spark.cli import load_domain_tables  # noqa: E402
 from org_revue_de_presse_trends_spark.observability import (  # noqa: E402
@@ -45,72 +36,51 @@ from org_revue_de_presse_trends_spark.plans.trends import (  # noqa: E402
 )
 from org_revue_de_presse_trends_spark.session import get_spark  # noqa: E402
 
-
-def build(workdir: str, days: int, per_day: int, seed: int) -> dict:
-    """Generate one history; return its directory per timestamp layout."""
-    base = os.path.join(workdir, f"h{days}-s{per_day}-seed{seed}")
-    out = {layout: os.path.join(base, layout) for layout in ("naive", "utc")}
-    if not os.path.isdir(base):
-        scale = gen_domain.DomainScale(days, per_day)
-        gen_domain.generate(out["naive"], scale, seed)
-        os.makedirs(out["utc"])
-        for name in gen_domain.TABLES:
-            path = os.path.join(out["naive"], f"{name}.parquet")
-            table = pq.read_table(path)
-            pq.write_table(table, path, row_group_size=per_day)
-            utc = pa.schema([
-                f.with_type(pa.timestamp("us", tz="UTC"))
-                if pa.types.is_timestamp(f.type) else f
-                for f in table.schema
-            ])
-            pq.write_table(table.cast(utc),
-                           os.path.join(out["utc"], f"{name}.parquet"),
-                           row_group_size=per_day)
-    return out
+HISTORIES = (7, 90, 365)
+PER_DAY = 300
+DAYS = 3
+SEED = 1
 
 
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    p.add_argument("--histories", default="7,90,365")
-    p.add_argument("--per-day", type=int, default=300)
-    p.add_argument("--days", type=int, default=3)
-    p.add_argument("--seed", type=int, default=1)
     p.add_argument("--workdir", default=None)
     a = p.parse_args()
     workdir = a.workdir or tempfile.mkdtemp(prefix="day_cost_curve-")
     spark = get_spark(app_name="day-cost-curve")
     spark.sparkContext.setLogLevel("ERROR")
     collector = MetricsCollector(spark)
-    print("layout history_days day wall_s bytes_read node_rows "
-          "shuffle_bytes result_rows")
+    print("history_days day wall_s bytes_read node_rows shuffle_bytes "
+          "result_rows")
     warmed = False
-    for history in map(int, a.histories.split(",")):
-        dirs = build(workdir, history, a.per_day, a.seed)
-        scale = gen_domain.DomainScale(history, a.per_day)
-        for layout, src in dirs.items():
-            tables = load_domain_tables(spark, src)
-            for day in scale.day_list()[-a.days:]:
-                params = TrendsParams(
-                    list_public_ids=(gen_domain.TARGET_LIST,
-                                     gen_domain.DEPRECATED_LIST),
-                    since_date=day, limit=0,
-                )
+    for history in HISTORIES:
+        scale = gen_domain.DomainScale(history, PER_DAY)
+        src = os.path.join(workdir, f"h{history}-s{PER_DAY}-seed{SEED}")
+        if not os.path.isdir(src):
+            gen_domain.generate(src, scale, SEED)
+        tables = load_domain_tables(spark, src)
+        for day in scale.day_list()[-DAYS:]:
+            params = TrendsParams(
+                list_public_ids=(gen_domain.TARGET_LIST,
+                                 gen_domain.DEPRECATED_LIST),
+                since_date=day, limit=0,
+            )
 
-                def run(_):
-                    pipe = TrendsPipeline(tables, params)
-                    pipe.count_highlights()
-                    return pipe.all_variants().collect()
+            def run(_):
+                pipe = TrendsPipeline(tables, params)
+                pipe.count_highlights()
+                return pipe.all_variants().collect()
 
-                if not warmed:
-                    run(None)
-                    warmed = True
-                t0 = time.perf_counter()
-                rows, qm = collector.measure("day", None, run)
-                wall = time.perf_counter() - t0
-                print(f"{layout} {history} {day} {wall:.3f} "
-                      f"{int(qm.bytes_read)} {int(qm.sql_output_rows)} "
-                      f"{int(qm.shuffle_bytes_written)} {len(rows)}",
-                      flush=True)
+            if not warmed:
+                run(None)
+                warmed = True
+            t0 = time.perf_counter()
+            rows, qm = collector.measure("day", None, run)
+            wall = time.perf_counter() - t0
+            print(f"{history} {day} {wall:.3f} {int(qm.bytes_read)} "
+                  f"{int(qm.sql_output_rows)} "
+                  f"{int(qm.shuffle_bytes_written)} {len(rows)}",
+                  flush=True)
     spark.stop()
 
 

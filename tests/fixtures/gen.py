@@ -226,9 +226,9 @@ EDGE_DAYS = ("2024-03-02", "2024-03-31", "2024-10-27")
 def generate_window_edges(outdir: str, days=EDGE_DAYS) -> dict[str, str]:
     """Statuses at every hour boundary from 00:00 the day before to 00:00
     two days after each of ``days``: 1 µs before the boundary, on it,
-    and 30 min after — so every civil-day bound and every day-window
-    bound, under any whole-hour shift or the Europe/Paris zone, has a
-    row just inside and just outside it.  Each status has its own
+    and 30 min after — so every civil-day bound, under any whole-hour
+    shift or the Europe/Paris zone, has a row just inside and just
+    outside it.  Each status has its own
     publisher (the distinct variants keep every row) and is highlighted
     in the target list; every fifth highlight is published an hour
     later than its status (day-consistency across a boundary); each

@@ -12,9 +12,9 @@ from pyspark.sql import functions as F
 from org_revue_de_presse_trends_spark.functions import text as T
 from org_revue_de_presse_trends_spark.functions.expressions import (
     civil_day,
-    is_retweet_derived,
+    is_retweet_derived_sql,
     is_valid_json,
-    popularity,
+    popularity_sql,
 )
 from org_revue_de_presse_trends_spark.operators.antijoin import anti_join
 from org_revue_de_presse_trends_spark.operators.asof import asof_join
@@ -482,7 +482,7 @@ def test_popularity_cascade_and_json_validity(spark):
     ]
     df = spark.createDataFrame(rows)
     out = df.select(
-        popularity(F.col("p"), F.col("h"), F.col("doc")).alias("v"),
+        F.expr(popularity_sql("p", "h", "doc")).alias("v"),
         is_valid_json(F.col("doc")).alias("ok"),
     ).collect()
     assert [r["v"] for r in out] == [5, 3, 1, None]
@@ -500,7 +500,7 @@ def test_is_retweet_derivation(spark):
     got = [
         r[0]
         for r in df.select(
-            is_retweet_derived(F.col("rt"), F.col("doc"))
+            F.expr(is_retweet_derived_sql("rt", "doc"))
         ).collect()
     ]
     assert got == [True, True, False, False]

@@ -344,6 +344,49 @@ def test_running_user_peaks_stateful(spark, events_stream_dir, tmp_path):
     assert got == expected
 
 
+def test_running_user_peaks_drops_rows_behind_watermark(spark, tmp_path):
+    """Two micro-batches of one query.  The first batch's latest event
+    (12:00) sets the watermark to 11:00; in the second batch a 10:45
+    row is behind it and is dropped, an 11:10 row is counted."""
+    import datetime as dt
+
+    src = str(tmp_path / "in")
+    schema = "user_id LONG, value DOUBLE, ts TIMESTAMP"
+
+    def at(hh, mm):
+        return dt.datetime(2024, 3, 1, hh, mm)
+
+    def add(rows):
+        spark.createDataFrame(rows, schema).write.parquet(src, mode="append")
+
+    def peaks():
+        """Each user's last update: the one with the most events."""
+        return {
+            r["user_id"]: (r["peak_value"], r["n_events"])
+            for r in spark.sql(
+                "SELECT * FROM user_peaks_late ORDER BY n_events"
+            ).collect()
+        }
+
+    add([(1, 1.0, at(10, 30)), (2, 5.0, at(12, 0))])
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (
+        running_user_peaks(stream).writeStream.format("memory")
+        .queryName("user_peaks_late")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt_late"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert peaks() == {1: (1.0, 1), 2: (5.0, 1)}
+        add([(1, 100.0, at(10, 45)), (1, 2.0, at(11, 10))])
+        q.processAllAvailable()
+        assert peaks() == {1: (2.0, 2), 2: (5.0, 1)}
+    finally:
+        q.stop()
+
+
 def test_enrich_stream_with_static_dim(spark, events_stream_dir, tmp_path):
     """Stream-static join: streaming events enriched with a static
     user dimension; result equals the batch join."""

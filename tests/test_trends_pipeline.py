@@ -409,17 +409,17 @@ def edge_duck(edge_tables):
     ("2024-03-02", 0, None),
     ("2024-03-02", 2, None),
     ("2024-10-27", 1, None),
+    ("2024-03-02 10:00", 1, None),  # a time part names its whole day
 ])
-def test_day_window_edges(spark, edge_tables, edge_duck, day, shift_hours,
-                          tz):
+def test_day_edges(spark, edge_tables, edge_duck, day, shift_hours, tz):
     """Every variant and both COUNT modes against DuckDB on rows 1 µs
     either side of every hour boundary around the day, so each civil-day
-    bound and each day-window bound has a row just inside and just
-    outside it.  Spark resolves the repeated 02:00-03:00 of 2024-10-27
+    bound has a row just inside and just outside it.  Spark resolves the repeated 02:00-03:00 of 2024-10-27
     to CEST and DuckDB to CET; both instants fall on the same civil day,
     so no row is left out."""
     pipe = TrendsPipeline(edge_tables[0], _params(
         since_date=day, limit=0, shift_hours=shift_hours, tz=tz))
+    day = day[:10]
     civil = civil_sql(shift_hours, tz)
     oracles = {
         "status": curated_oracle(day, 0, False, civil),
@@ -441,27 +441,17 @@ def _executions(spark) -> dict:
             for e in (execs.apply(i) for i in range(execs.size()))}
 
 
-def test_day_window_reaches_every_history_scan(spark, domain_tables):
-    """Plan shape of the union and both COUNTs: the day window is a
-    Parquet pushed filter on all three history scans, and no anti-join
-    key set is shuffled (anti joins need no DISTINCT)."""
+def test_anti_join_key_sets_are_not_shuffled(spark, domain_tables):
+    """Plan shape of the union: no anti-join key set is shuffled (anti
+    joins need no DISTINCT)."""
     pipe = TrendsPipeline(domain_tables, _params())
-    for run in (lambda: pipe.all_variants().collect(),
-                lambda: pipe.count_highlights(),
-                lambda: pipe.count_highlights(distinct_sources=True)):
-        before = set(_executions(spark))
-        run()
-        plan = "\n".join(e.physicalPlanDescription()
-                         for i, e in _executions(spark).items()
-                         if i not in before)
-        pushed = [ln for ln in plan.splitlines() if "PushedFilters:" in ln]
-        for col in ("publication_date_time", "ust_created_at", "checked_at"):
-            assert any(
-                f"GreaterThanOrEqual({col},2024-03-02 01:00:00.0)" in ln
-                and f"LessThan({col},2024-03-03 01:00:00.0)" in ln
-                for ln in pushed
-            ), col
-        assert "hashpartitioning(excluded_id" not in plan
+    before = set(_executions(spark))
+    pipe.all_variants().collect()
+    plan = "\n".join(e.physicalPlanDescription()
+                     for i, e in _executions(spark).items()
+                     if i not in before)
+    assert "LeftAnti" in plan
+    assert "hashpartitioning(excluded_id" not in plan
 
 
 def test_cli_loads_nanosecond_timestamps(spark, domain_dir, tmp_path):
