@@ -414,9 +414,9 @@ def edge_duck(edge_tables):
 def test_day_edges(spark, edge_tables, edge_duck, day, shift_hours, tz):
     """Every variant and both COUNT modes against DuckDB on rows 1 µs
     either side of every hour boundary around the day, so each civil-day
-    bound has a row just inside and just outside it.  Spark resolves the repeated 02:00-03:00 of 2024-10-27
-    to CEST and DuckDB to CET; both instants fall on the same civil day,
-    so no row is left out."""
+    bound has a row just inside and just outside it.  Spark resolves the
+    repeated 02:00-03:00 of 2024-10-27 to CEST and DuckDB to CET; both
+    instants fall on the same civil day, so no row is left out."""
     pipe = TrendsPipeline(edge_tables[0], _params(
         since_date=day, limit=0, shift_hours=shift_hours, tz=tz))
     day = day[:10]
