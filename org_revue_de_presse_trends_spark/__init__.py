@@ -11,11 +11,10 @@ Spark-first:
 - ``functions``  — named column expressions (civil day, popularity cascade,
                    text analysis, hashing, vector math)
 - ``operators``  — reusable dataframe-level operators (top-k, argmax,
-                   as-of join, anti-join, dedup, similarity search)
+                   anti-join, dedup, similarity search)
 - ``plans``      — end-to-end pipelines (the three trends variants, the
                    driver query suite)
 - ``sources``    — JDBC reader, document sink, partitioned lake sink
-- ``streaming``  — incremental Structured Streaming mode
 """
 
 __version__ = "0.1.0"

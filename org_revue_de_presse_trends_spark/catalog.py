@@ -118,11 +118,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

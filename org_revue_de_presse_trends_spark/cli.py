@@ -41,6 +41,22 @@ DOMAIN_TABLES = (
 )
 
 
+def civil_date(s: str) -> str:
+    """argparse type for --since-date: exactly ``YYYY-MM-DD``.
+
+    The plan reads the day with ``CAST(:day AS DATE)``, which also
+    accepts '2024-3-2' or '2024-03-02 10:00', while the sink path and
+    the lake's ``day`` column take the raw string — so a loose value
+    would publish the same day a second time under another key."""
+    try:
+        ok = dt.date.fromisoformat(s).isoformat() == s
+    except ValueError:
+        ok = False
+    if not ok:
+        raise argparse.ArgumentTypeError(f"not a YYYY-MM-DD date: {s!r}")
+    return s
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="trends-spark",
@@ -72,7 +88,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="second public_id matched by the IN-list (trends.go:39)",
     )
     p.add_argument(
-        "--since-date", default=dt.date.today().isoformat(),
+        "--since-date", type=civil_date,
+        default=dt.date.today().isoformat(),
         help="civil day YYYY-MM-DD (default: today, trends.go:98)",
     )
     p.add_argument("--distinct-sources-only", action="store_true")

@@ -1,1 +1,1 @@
-from . import expressions, hashing, text, vectors  # noqa: F401
+"""Named column expressions; import each module directly."""

@@ -28,10 +28,6 @@ import struct
 
 __all__ = ["parse_mp4", "extract_samples", "mux_mp4_vp8"]
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts",
-               b"mvex", b"udta"}
-
-
 def _iter_boxes(buf: bytes, start: int, end: int):
     pos = start
     while pos + 8 <= end:

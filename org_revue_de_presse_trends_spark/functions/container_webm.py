@@ -62,8 +62,6 @@ _DOCTYPE = 0x4282
 _VOID = 0xEC
 _CRC32 = 0xBF
 
-_UNKNOWN_SIZE = (1 << 56) - 1
-
 
 # ---------------------------------------------------------------------------
 # EBML primitives

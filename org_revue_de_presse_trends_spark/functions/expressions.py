@@ -66,10 +66,3 @@ def is_retweet_derived_sql(is_retweet: str, api_document: str) -> str:
         f"coalesce({is_retweet}, get_json_object({api_document}, "
         "'$.retweeted_status_result') IS NOT NULL, false)"
     )
-
-
-def is_valid_json(doc: Column) -> Column:
-    """Reference skips rows whose document fails json.Valid
-    (trends.go:619-623,690-694).  Spark: try-parse returns null on
-    invalid input."""
-    return F.try_parse_json(doc).isNotNull()

@@ -1,7 +1,8 @@
-"""Hash-family column expressions: MinHash signatures and SimHash.
+"""Hash-family column expressions: LSH band keys, SimHash and the
+signed-random-projection hyperplanes.
 
-Built on ``xxhash64`` (JVM-side, codegen'd) with per-permutation seeds.
-These back the near-duplicate operators in ``operators.dedup``.
+Built on ``xxhash64`` (JVM-side, codegen'd).  These back the
+near-duplicate operators in ``operators.dedup``.
 
 Literature: MinHash — Broder, "On the resemblance and containment of
 documents" (SEQUENCES 1997); LSH banding — Leskovec/Rajaraman/Ullman,
@@ -18,22 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def _seeded_hash(i: int):
-    # 1-arg lambda factory: PySpark introspects lambda arity, so the
-    # seed must be captured in a closure, not a default argument.
-    return lambda s: F.xxhash64(s, F.lit(i))
-
-
-def minhash_signature(shingle_arr: Column, num_perm: int = 64) -> Column:
-    """array<long> of length ``num_perm``: element i is
-    min(xxhash64(shingle, seed=i)) over the shingle set."""
-    sigs = [
-        F.array_min(F.transform(shingle_arr, _seeded_hash(i)))
-        for i in range(num_perm)
-    ]
-    return F.array(*sigs)
 
 
 def lsh_band_keys_expr(
@@ -148,48 +133,3 @@ def srp_sign_masks(n_bits: int, dim: int, seed: int = 0x5EED) -> list[int]:
             m -= 1 << 64
         masks.append(m)
     return masks
-
-
-def srp_band_keys(
-    vec: Column,
-    dim: int,
-    n_bits: int = 16,
-    bands: int = 8,
-    seed: int = 0x5EED,
-) -> Column:
-    """array<struct<band:int, key:long>> — SRP-LSH bucket keys for a
-    cosine metric over an ``array<float/double>`` column.
-
-    Bit i = sign(v · r_i) for fixed ±1 hyperplanes r_i baked into the
-    plan as literal arrays (zero runtime hashing, zero shuffle);
-    P[bit agrees] = 1 - θ/π.  Bits are grouped into ``bands`` keys so
-    near vectors collide in ≥1 band with high probability — the same
-    banding amplification as MinHash-LSH, making embedding near-dup an
-    equi-join on (band, key)."""
-    if n_bits % bands:
-        raise ValueError("n_bits must divide evenly into bands")
-    if n_bits // bands > 63:
-        # the band key is packed into one signed 64-bit long
-        raise ValueError("rows_per_band (n_bits/bands) must be <= 63")
-    signs = srp_signs(n_bits, dim, seed)
-    bits = []
-    for i in range(n_bits):
-        plane = F.array(*[F.lit(x) for x in signs[i]])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)))
-    rows_per_band = n_bits // bands
-    keys = []
-    for b in range(bands):
-        # long accumulator: an int literal would wrap at 32 bits once
-        # rows_per_band > 31, silently merging buckets
-        key = F.lit(0).cast("long")
-        for r in range(rows_per_band):
-            key = F.shiftleft(key, 1).bitwiseOR(bits[b * rows_per_band + r])
-        keys.append(
-            F.struct(F.lit(b).alias("band"), key.cast("long").alias("key"))
-        )
-    return F.array(*keys)

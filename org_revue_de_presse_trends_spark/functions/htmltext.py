@@ -37,7 +37,7 @@ projection-inlining blowup documented for ``operators/urls.py``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: regex stages, applied in order: (name, raw-pattern, replacement).
@@ -136,18 +136,3 @@ def html_text_col(html: str) -> Column:
 
 def html_title_col(html: str) -> Column:
     return F.expr(html_title_sql("spark", html))
-
-
-def with_html_text(
-    df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text_extracted",
-    title_col: str | None = "title",
-) -> DataFrame:
-    """Append the extracted plain text (and optionally the <title>)
-    of ``html_col``.  Pure per-row projection — at 100 TB this stage
-    fuses into the scan with zero shuffle."""
-    out = df.withColumn(out_col, html_text_col(html_col))
-    if title_col is not None:
-        out = out.withColumn(title_col, html_title_col(html_col))
-    return out

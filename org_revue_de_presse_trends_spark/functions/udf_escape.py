@@ -6,62 +6,16 @@ scoring, tokenizers).  Policy:
 - row-at-a-time ``F.udf`` is banned in this codebase (10-100× slower);
 - escape hatches are Arrow-batched ``@pandas_udf`` (scalar) or
   ``mapInPandas`` (see operators/multimodal.py) only;
-- every pandas UDF ships with an equivalence test against a JVM
-  reference expression where one exists (tests/test_udf_escape.py),
-  so the escape hatch never silently drifts from the declarative path.
+- a pandas UDF exists only where Spark has no built-in for the job,
+  and is checked cross-engine (``nfc_normalize_pandas`` backs
+  q:doc_nfc_normalization, oracled against DuckDB's nfc_normalize).
 
 UDFs are exposed as factories (the @pandas_udf decorator parses its
 DDL return type against the active session, so construction is lazy).
 """
 
-import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-
-
-def normalize_embedding():
-    """L2-normalize an array<float> column (numpy over Arrow batches)."""
-
-    @pandas_udf("array<float>")
-    def _normalize(v: pd.Series) -> pd.Series:
-        def one(arr):
-            a = np.asarray(arr, dtype=np.float64)
-            n = np.linalg.norm(a)
-            out = a / n if n else a
-            return out.astype(np.float32).tolist()
-
-        return v.map(one)
-
-    return _normalize
-
-
-def cosine_pandas():
-    """Cosine via numpy — the escape-hatch twin of
-    functions.vectors.cosine (JVM); validated against it in tests."""
-
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        def one(pair):
-            x = np.asarray(pair[0], dtype=np.float64)
-            y = np.asarray(pair[1], dtype=np.float64)
-            nx, ny = np.linalg.norm(x), np.linalg.norm(y)
-            if nx == 0 or ny == 0:
-                return float("nan")
-            return float(np.dot(x, y) / (nx * ny))
-
-        return pd.Series(map(one, zip(a, b)))
-
-    return _cos
-
-
-def token_count_pandas():
-    """Whitespace token count (twin of functions.text.token_count)."""
-
-    @pandas_udf("long")
-    def _count(texts: pd.Series) -> pd.Series:
-        return texts.str.split(" ").map(len).astype("int64")
-
-    return _count
 
 
 def nfc_normalize_pandas():

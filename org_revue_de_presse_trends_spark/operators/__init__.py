@@ -1,14 +1,1 @@
-from . import (  # noqa: F401
-    antijoin,
-    argmax,
-    asof,
-    decontaminate,
-    dedup,
-    mixing,
-    multimodal,
-    packing,
-    rangejoin,
-    similarity,
-    skew,
-    topk,
-)
+"""Reusable DataFrame-level operators; import each module directly."""

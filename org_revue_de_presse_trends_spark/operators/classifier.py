@@ -5,11 +5,8 @@ algorithms).  The MODEL-TRAINING stage of a quality-classifier
 curation loop — `operators/evalmetrics.py` is its evaluation stage and
 `plans/classifier_ext.py` wires the two together.
 
-This is the RECOMMENDED quality-filter path (deterministic, oracled,
-CLI-wired via ``prepare-corpus --classifier-model``); the MLlib-based
-``operators/quality.py`` is the escape hatch for users who want L2 /
-LBFGS / calibrated probabilities and can accept non-deterministic
-floats with no oracle (r9 verdict item 6 documents the split).
+This is the quality-filter path (deterministic, oracled, CLI-wired
+via ``prepare-corpus --classifier-model``).
 
 Features: token → md5-prefix bucket (`int(md5(t)[:6], 16) % dim` —
 exactly `urls.md5_bucket_sql(…, 6) % dim`, so SQL scoring in EITHER
@@ -95,16 +92,6 @@ def _grad_from_features(
         if (q := round(g * c / n * G_SCALE))
     }
     return gq, round(g * G_SCALE)
-
-
-def _doc_grad_quantized(
-    text: str, y: int, w: list[float], b: float, dim: int
-) -> tuple[dict[int, int], int]:
-    """Featurize-then-gradient for callers that hold raw text (kept
-    for tests/external callers; train_logreg's distributed path now
-    featurizes once up front and gradients from the stored arrays)."""
-    counts, n = _doc_features(text, dim)
-    return _grad_from_features(counts, n, y, w, b)
 
 
 def train_logreg(

@@ -21,7 +21,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import hashing as H
@@ -214,48 +214,6 @@ def shingle_pairs_overlap(
             / F.least(F.col("n_a"), F.col("n_b")).cast("double")
         ).alias("overlap"),
     ).filter(F.col("overlap") >= threshold)
-
-
-def winnow_candidate_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    w: int = 4,
-    max_fp_df: int = 1000,
-) -> DataFrame:
-    """Candidate near-dup pairs via shared winnowing fingerprints
-    (functions/text.winnow_fingerprints): explode fingerprints →
-    self-equi-join on the fingerprint → distinct pairs, with the same
-    document-frequency cap discipline as ``shingle_pairs_jaccard``
-    (a boilerplate fingerprint shared by 10⁴ docs must not emit 10⁸
-    candidate rows).  Guarantee inherited from winnowing: any pair
-    sharing a token run of length >= w + k - 1 is a candidate.
-    Returns (id_a, id_b, n_shared_fps); verify with exact Jaccard or
-    embedding cosine downstream.
-    """
-    staged = T.with_winnow_fingerprints(
-        df.select(F.col(id_col).cast("long").alias("id"), F.col(text_col)),
-        text_col, "__fps", k, w,
-    )
-    ex = staged.select("id", F.explode("__fps").alias("fp"))
-    if max_fp_df is not None:
-        w_df = Window.partitionBy("fp")
-        ex = (
-            ex.withColumn("_df", F.count(F.lit(1)).over(w_df))
-            .filter(F.col("_df") <= max_fp_df)
-            .drop("_df")
-        )
-    a, b = ex.alias("a"), ex.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared_fps"))
-    )
 
 
 def minhash_signatures(
@@ -511,20 +469,6 @@ def hamming_pairs(
         .dropDuplicates(["id_a", "id_b"])
         .filter(F.col("hamming") <= max_hamming)
     )
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict[str, float],
-    seed: int = 42,
-) -> DataFrame:
-    """Deterministic stratified sampling for training-data mixtures:
-    keep a per-stratum fraction (e.g. downsample dominant languages).
-    Uses sampleBy (per-row Bernoulli on a seeded hash) — exact-size
-    guarantees need a window-rank variant; this is the scan-only
-    scale path."""
-    return df.sampleBy(strata_col, fractions, seed)
 
 
 def cluster_pairs(
@@ -1229,7 +1173,7 @@ def edit_distance_pairs(
     doc-length bucket of width ``max_dist + 1`` — ``dist >= |len_a -
     len_b|`` makes adjacent buckets a NECESSARY condition, so one side
     explodes to its three neighbor buckets and the join stays fully
-    equi-keyed (the banded range-join trick, operators/rangejoin.py).
+    equi-keyed (the banded range-join trick).
     Verification runs JVM-side with the BANDED levenshtein (threshold
     arg -> O(n * max_dist) per pair instead of O(n^2), returning -1
     past the band).

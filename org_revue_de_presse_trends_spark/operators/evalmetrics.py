@@ -105,8 +105,7 @@ def score_label_counts(
     positive/negative counts per distinct quantized score.  Counts
     merge across shards or micro-batches by union + SUM per score
     (state ≤ |distinct quantized scores| rows forever), so running AUC
-    over a stream never re-reads the stream — the
-    foreach_batch_auc sink builds on exactly this."""
+    over a stream never re-reads the stream."""
     gcols = list(group_cols)
     s = F.round(
         F.col(score_col).cast("double") * F.lit(float(scale)), 0

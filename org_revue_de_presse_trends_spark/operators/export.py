@@ -486,94 +486,6 @@ def corpus_diff_pruned(
     )
 
 
-def apply_corpus_delta(
-    spark,
-    path: str,
-    manifest: DataFrame,
-    changes: DataFrame,
-    n_shards: int,
-    id_col: str,
-    payload_cols: list[str],
-    op_col: str = "op",
-) -> DataFrame:
-    """Apply a CDC-style delta to a ``write_shards`` export IN PLACE,
-    touching only the shards the delta lands in, and return the
-    updated manifest — the "daily re-crawl upsert" counterpart of
-    :func:`corpus_diff`.
-
-    ``changes`` carries ``op_col`` ∈ ``upsert`` (insert or replace by
-    id) / ``delete`` (drop by id; absent ids are a no-op) plus
-    ``id_col`` and, for upserts, the payload columns.
-
-    Scale shape: shard assignment is a pure function of the id, so
-    the moved-shard list is computed from the delta alone (one
-    distinct over |delta| rows, collected — bounded by n_shards).
-    Only those shard directories are read (Hive partition pruning),
-    rewritten via dynamic partition overwrite with the bijective
-    task map, or DELETED when the delta empties them (dynamic
-    overwrite never touches a partition that gets no new rows — the
-    stale-dir trap).  The returned manifest recomputes rows for moved
-    shards from the rewritten content and passes every other row
-    through untouched, so the update is |delta|+|moved shards|-sized
-    work regardless of corpus size; ``verify_export`` against it must
-    come back clean (pinned in tests)."""
-    ops = [
-        r[0]
-        for r in changes.select(op_col).distinct().collect()
-    ]
-    bad = [o for o in ops if o not in ("upsert", "delete")]
-    if bad:
-        raise ValueError(f"unknown {op_col!r} values: {bad}")
-    ch = changes.selectExpr(
-        f"{shard_id_sql('spark', id_col, n_shards)} AS shard_id",
-        "*",
-    ).localCheckpoint()
-    moved = [
-        r["shard_id"] for r in ch.select("shard_id").distinct().collect()
-    ]
-    if not moved:
-        return manifest
-    old = spark.read.parquet(path).filter(F.col("shard_id").isin(moved))
-    survivors = old.select(id_col, *payload_cols).join(
-        ch.select(id_col).distinct(), id_col, "left_anti"
-    )
-    upserts = ch.filter(F.col(op_col) == "upsert").select(
-        id_col, *payload_cols
-    )
-    # EAGER checkpoint is load-bearing, not a cache: the write below
-    # overwrites the very directories `old` reads — without full
-    # materialization the write plan would consume files it is
-    # replacing.  (Delta ids must be unique within one call; the
-    # caller owns compacting its CDC stream.)
-    new_rows = survivors.unionByName(upserts).selectExpr(
-        "*", f"{shard_id_sql('spark', id_col, n_shards)} AS shard_id"
-    ).localCheckpoint()
-    m_moved = shard_manifest(
-        new_rows.select(id_col, *payload_cols),
-        n_shards,
-        id_col,
-        payload_cols,
-    ).localCheckpoint()
-    (
-        repartition_for_shards(new_rows, n_shards)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard_id")
-        .parquet(path)
-    )
-    # dynamic overwrite leaves a now-empty shard's old directory in
-    # place — delete exactly those (bounded by |moved|)
-    still = {r["shard_id"] for r in m_moved.select("shard_id").collect()}
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    for s in moved:
-        if s not in still:
-            fs.delete(hpath(f"{path}/shard_id={s}"), True)
-    return manifest.filter(~F.col("shard_id").isin(moved)).unionByName(
-        m_moved
-    )
-
-
 def manifest_to_json_dict(
     manifest_rows, n_shards: int, id_col: str, payload_cols: list[str]
 ) -> dict:

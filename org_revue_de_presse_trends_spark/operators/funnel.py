@@ -87,35 +87,6 @@ def funnel_steps(
     )
 
 
-def funnel_counts(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    within_seconds: int | None = None,
-) -> DataFrame:
-    """The aggregate view: (step, step_name, n_users) — how many users
-    reached at least each step, descending through the funnel."""
-    per_user = funnel_steps(
-        events, steps, user_col, ts_col, type_col, within_seconds
-    )
-    rows = [
-        per_user.agg(
-            F.count(F.col(f"step_{i}_ts")).alias("n_users")
-        ).select(
-            F.lit(i).cast("long").alias("step"),
-            F.lit(s).alias("step_name"),
-            "n_users",
-        )
-        for i, s in enumerate(steps, start=1)
-    ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
-
-
 def funnel_steps_sliding(
     events: DataFrame,
     steps: list[str],

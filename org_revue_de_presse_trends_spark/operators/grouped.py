@@ -1,11 +1,9 @@
-"""Grouped-map operators: the applyInPandas escape hatch and its JVM
-window-expression twin.
+"""Grouped z-score as JVM window expressions.
 
-``applyInPandas`` ships whole groups into Python as Arrow batches —
-the right tool when per-group logic genuinely needs numpy/pandas
-(model scoring, curve fitting).  For anything expressible as window
-aggregates the JVM path wins by an order of magnitude, so both are
-provided and equivalence-tested (tests/test_udf_escape.py)."""
+Per-group logic expressible as window aggregates stays on the JVM:
+shipping whole groups into Python through ``applyInPandas`` is an
+order of magnitude slower.  q:user_value_zscores is oracled against
+DuckDB."""
 
 from __future__ import annotations
 
@@ -45,32 +43,4 @@ def zscore_jvm(
         )
         .filter(F.col("_var") > 0)
         .drop("_var")
-    )
-
-
-def zscore_apply_in_pandas(
-    df: DataFrame, group_col: str = "user_id", value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Same computation through the grouped-map Arrow path."""
-
-    def fn(pdf):
-        import pandas as pd
-
-        m = pdf[value_col].astype(float).mean()
-        v = pdf[value_col].astype(float).var(ddof=0)
-        if v <= 0:
-            return pd.DataFrame(
-                {id_col: [], group_col: [], "z": []}
-            )
-        return pd.DataFrame(
-            {
-                id_col: pdf[id_col],
-                group_col: pdf[group_col],
-                "z": (pdf[value_col].astype(float) - m) / (v**0.5),
-            }
-        )
-
-    return df.groupBy(group_col).applyInPandas(
-        fn, schema=f"{id_col} long, {group_col} long, z double"
     )

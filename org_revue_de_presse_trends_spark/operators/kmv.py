@@ -104,28 +104,3 @@ def kmv_jaccard_pairs(sketches: DataFrame, k: int = 256) -> DataFrame:
             "est_jaccard"
         ),
     )
-
-
-#: hash space size for the 12-hex-char md5 prefix
-_KMV_SPACE = float(1 << 48)
-
-
-def kmv_distinct_counts(sketches: DataFrame, k: int = 256) -> DataFrame:
-    """(group, n_kmin, est_distinct) — the KMV cardinality estimator:
-    with h_(k) the k-th smallest hash mapped into (0, 1),
-    D̂ = (k - 1) / h_(k) (Bar-Yossef et al. RANDOM'02; unbiased per
-    Beyer et al. SIGMOD'07).  When the sketch holds fewer than k
-    values it IS the whole set and the count is exact.  Compare with
-    ``approx_count_distinct`` (HLL): KMV additionally supports the
-    merged-sketch intersection/Jaccard estimates this module exists
-    for, from the same one-pass sketch."""
-    n = F.size(F.col("hs"))
-    kth = F.element_at(F.col("hs"), n).cast("double") + F.lit(1.0)
-    est = F.when(n < F.lit(k), n.cast("double")).otherwise(
-        (n.cast("double") - 1.0) / (kth / F.lit(_KMV_SPACE))
-    )
-    return sketches.select(
-        F.col("grp").alias("group"),
-        n.cast("long").alias("n_kmin"),
-        F.round(est, 3).alias("est_distinct"),
-    )

@@ -120,73 +120,6 @@ def remove_duplicate_lines(
     return _reassemble(df, kept, id_col, text_col, out_col)
 
 
-def line_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 10,
-) -> DataFrame:
-    """The persisted dedup state for CONTINUOUS ingest: one row per
-    distinct dedup-eligible normalized line in ``df`` (column
-    ``line_norm``).  Exempt (short) lines are never indexed — they are
-    always kept, so cross-batch state for them is meaningless."""
-    lines = _lines_frame(df, id_col, text_col)
-    return (
-        lines.where(F.length("_norm") >= min_chars)
-        .select(F.col("_norm").alias("line_norm"))
-        .distinct()
-    )
-
-
-def remove_duplicate_lines_incremental(
-    batch_df: DataFrame,
-    index_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_chars: int = 10,
-    out_col: str = "text_line_deduped",
-) -> tuple[DataFrame, DataFrame]:
-    """Keep-first line dedup of ``batch_df`` GIVEN history: a line
-    already in ``index_df`` (column ``line_norm``, duplicates
-    tolerated) is dropped everywhere in the batch; lines new to this
-    batch dedup keep-first within it.
-
-    Returns ``(deduped_docs, new_index_rows)`` — the second frame is
-    the batch's distinct newly-seen norms, to be APPENDED to the
-    index.  Chunked ingestion in (doc_id, pos) order is exactly
-    equivalent to one-shot :func:`remove_duplicate_lines` on the
-    concatenated corpus (pinned in tests/test_streaming.py).
-
-    Scale: the history join is a left-anti equi-join on the norm —
-    the only per-batch cost that grows with corpus age, and it reads
-    only the index column, never historical text.
-    """
-    lines = _lines_frame(batch_df, id_col, text_col)
-    new_eligible = (
-        lines.where(F.length("_norm") >= min_chars)
-        .join(
-            index_df.select(F.col("line_norm").alias("_norm")).distinct(),
-            "_norm",
-            "left_anti",
-        )
-    )
-    # short lines bypass both the index and the keep-first aggregate
-    short = lines.where(F.length("_norm") < min_chars).select(
-        "_id", "_pos", "_line"
-    )
-    kept = short.unionByName(
-        _keep_first(
-            new_eligible.select("_id", "_pos", "_line", "_norm"),
-            min_chars=0,  # already filtered to eligible
-        ).select("_id", "_pos", "_line")
-    )
-    deduped = _reassemble(batch_df, kept, id_col, text_col, out_col)
-    new_index = (
-        new_eligible.select(F.col("_norm").alias("line_norm")).distinct()
-    )
-    return deduped, new_index
-
-
 def line_dedup_oracle_sql(
     docs_sql: str,
     id_col: str = "doc_id",

@@ -146,66 +146,3 @@ def mixture_plan(
             F.coalesce(F.col("n_sampled"), F.lit(0)).alias("n_sampled"),
         )
     )
-
-
-def replication_rates(
-    token_counts: dict[str, int],
-    weights: dict[str, float],
-    total_tokens: int | None = None,
-) -> dict[str, float]:
-    """Per-source sampling rate realizing ``weights`` at a fixed token
-    budget ``T`` (default: the natural total, preserving corpus size):
-    r_s = w_s·T / n_s.  Rates may EXCEED 1 — low-resource domains are
-    up-sampled by replication (mT5 §3.1 repeats small languages; the
-    down-sampling-only ``keep_rates`` is the no-duplication variant).
-    Zero/NULL-mass or zero-weight sources get 0.0."""
-    valid = {
-        s: n for s, n in token_counts.items() if n is not None and n > 0
-    }
-    t = float(total_tokens if total_tokens is not None else sum(valid.values()))
-    return {
-        s: (weights[s] * t / valid[s])
-        if s in valid and weights.get(s, 0.0) > 0
-        else 0.0
-        for s in weights
-    }
-
-
-def sample_mixture_replicated(
-    docs: DataFrame,
-    rates: dict[str, float],
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    seed: int = 0x31337,
-) -> DataFrame:
-    """Deterministic mixture realization allowing rates > 1: each doc
-    appears floor(r) times plus one more iff its hash coin falls under
-    frac(r) — expected copies exactly r, variance the bare minimum for
-    integer copies.  Output adds a ``copy`` column (1..n) so
-    downstream epoch-aware shuffling can separate the replicas.
-
-    Same determinism contract as ``sample_mixture``: the coin is
-    xxhash64(id, seed) — layout-independent, rerun-stable, zero
-    shuffle (explode of a per-row bounded sequence).  For rates ≤ 1
-    it keeps exactly ``sample_mixture``'s set with copy=1."""
-    rate_expr = F.create_map(
-        *[F.lit(x) for kv in rates.items() for x in kv]
-    )[F.col(source_col)]
-    coin = (
-        F.shiftrightunsigned(
-            F.xxhash64(F.col(id_col).cast("long"), F.lit(seed)), 1
-        ).cast("double")
-        / F.lit(float(1 << 63))
-    )
-    n_copies = (
-        F.floor(rate_expr).cast("int")
-        + F.when(coin < rate_expr - F.floor(rate_expr), 1).otherwise(0)
-    )
-    return (
-        docs.withColumn("__n_copies", n_copies)
-        .filter(F.col("__n_copies") >= 1)  # sequence(1,0) would step -1
-        .withColumn(
-            "copy", F.explode(F.sequence(F.lit(1), F.col("__n_copies")))
-        )
-        .drop("__n_copies")
-    )

@@ -167,160 +167,6 @@ def extract_media_features(
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def resize_images(
-    media: DataFrame,
-    width: int = 16,
-    height: int = 16,
-    decoder: str = "fake",
-) -> DataFrame:
-    """Image-resize plumbing: media-in → media-out (same MEDIA_SCHEMA),
-    so it composes with ``extract_media_features`` / dedup downstream.
-
-    Image rows get their payload replaced by the resized encoding and
-    meta width/height updated; non-image rows pass through unchanged.
-    The fake path resamples payload bytes at even strides to exactly
-    width×height bytes — deterministic, so goldens hold.  The 'auto'
-    path REALLY decodes (stdlib PNG; PIL formats when installed),
-    nearest-neighbor resizes, and re-encodes as PNG."""
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        # resample indices depend only on (n, target): cache per length
-        target = width * height
-        idx_cache: dict[int, "np.ndarray"] = {}
-
-        def resample(payload: bytes) -> bytes:
-            n = len(payload)
-            idx = idx_cache.get(n)
-            if idx is None:
-                idx = (np.arange(target, dtype=np.int64) * n) // target
-                idx_cache[n] = idx
-            return np.frombuffer(payload, dtype=np.uint8)[idx].tobytes()
-
-        for pdf in batches:
-            rows = []
-            for media_id, kind, raw, raw_meta in zip(
-                pdf["media_id"].values, pdf["kind"].values,
-                pdf["payload"].values, pdf["meta"].values,
-            ):
-                payload = bytes(raw) if raw is not None else None
-                meta = dict(raw_meta) if raw_meta is not None else None
-                # only image rows WITH a payload are resized; everything
-                # else (non-images, null payloads, null meta) passes
-                # through byte-for-byte — a null payload must stay null,
-                # not become b'' with a claimed resize in meta
-                if kind == "image" and payload:
-                    if decoder == "stub":
-                        raise NotImplementedError(
-                            "image resize requires codec libraries not "
-                            "present in this environment"
-                        )
-                    mime = None
-                    if decoder in ("auto", "real"):
-                        from ..functions import codecs
-
-                        img = codecs.decode_image(payload)
-                        payload = codecs.encode_png(
-                            codecs.resize_nearest(img, width, height)
-                        )
-                        mime = "image/png"
-                    elif decoder == "fake":
-                        payload = resample(payload)
-                    else:
-                        raise ValueError(f"unknown decoder {decoder!r}")
-                    meta = meta or {
-                        "mime": None, "width": None, "height": None,
-                        "duration_ms": None,
-                    }
-                    if mime is not None:
-                        meta["mime"] = mime
-                    meta["width"], meta["height"] = width, height
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "kind": kind,
-                        "payload": payload,
-                        "meta": meta,
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def extract_video_metadata(media: DataFrame) -> DataFrame:
-    """Container-level video metadata WITHOUT decoding any frame —
-    the curation primitive for filtering a corpus by codec /
-    resolution / duration / keyframe density before paying for
-    decode.  Native for WebM (EBML) and unfragmented MP4; rows whose
-    payload can't be parsed surface as ``parse_error`` strings rather
-    than failing the job (curation wants the inventory INCLUDING the
-    broken files).
-
-    Output: (media_id, container, codec, width, height, duration_ms,
-    n_frames, n_keyframes, parse_error) — scalar columns only (the
-    rows-only driver contract shape)."""
-    out_schema = (
-        "media_id LONG, container STRING, codec STRING, width INT, "
-        "height INT, duration_ms LONG, n_frames INT, n_keyframes INT, "
-        "parse_error STRING"
-    )
-
-    def run(batches):
-        import pandas as pd
-
-        from ..functions import codecs
-        from ..functions.container_mp4 import extract_samples
-        from ..functions.container_webm import demux_video_frames, parse_webm
-
-        for pdf in batches:
-            rows = []
-            for media_id, raw in zip(pdf["media_id"], pdf["payload"]):
-                payload = bytes(raw) if raw is not None else b""
-                fmt = codecs.sniff_format(payload)
-                rec = {"media_id": int(media_id), "container": fmt,
-                       "codec": None, "width": None, "height": None,
-                       "duration_ms": None, "n_frames": None,
-                       "n_keyframes": None, "parse_error": None}
-                try:
-                    if fmt == "webm":
-                        track, frames = demux_video_frames(payload)
-                        doc = parse_webm(payload)
-                        rec.update(
-                            codec=track["codec_id"],
-                            width=track["width"], height=track["height"],
-                            n_frames=len(frames),
-                            n_keyframes=sum(1 for _, kf, _ in frames
-                                            if kf),
-                            duration_ms=(max(ts for ts, _, _ in frames)
-                                         if frames else 0),
-                        )
-                    elif fmt == "mp4":
-                        track, samples = extract_samples(payload)
-                        rec.update(
-                            codec=track["codec"],
-                            width=track["width"], height=track["height"],
-                            duration_ms=track["duration_ms"],
-                            n_frames=len(samples),
-                            n_keyframes=sum(1 for _, sync, _ in samples
-                                            if sync),
-                        )
-                    else:
-                        rec["parse_error"] = f"unsupported container {fmt}"
-                except (ValueError, NotImplementedError) as ex:
-                    rec["parse_error"] = f"{type(ex).__name__}: {ex}"
-                rows.append(rec)
-            yield pd.DataFrame(rows)
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(run, out_schema)
-    )
-
-
 def sample_video_frames(
     media: DataFrame, every_ms: int = 1000, decoder: str = "fake"
 ) -> DataFrame:

@@ -1,96 +1,15 @@
-"""Trained quality classifier — MLlib ESCAPE HATCH variant.
+"""Document quality signals computed per row in Python.
 
-Two quality-classifier stacks exist by design (r9 verdict item 6);
-for "train a quality filter" the RECOMMENDED path is
-``operators/classifier.py``: bit-deterministic training (quantized
-gradients, driver ≡ distributed), rank-exact libm-free scoring with a
-DuckDB-oracled end-to-end AUC query, and direct CLI wiring
-(``prepare-corpus --classifier-model``).  Use THIS module only when
-you specifically want Spark MLlib's machinery — L2 regularization,
-LBFGS convergence, calibrated probabilities out of the box — and can
-accept non-deterministic floats with no cross-engine oracle.
-
-The model itself is the document filter of GPT-3 §2.2 / LLaMA's
-pipeline (score documents by similarity to a "high-quality" reference
-class, keep the high scorers), built on Spark's own ML stack: hashed
-bag-of-tokens features (``HashingTF``, the fastText-style feature
-map) + logistic regression.
-
-Scale shape (100 TB): featurization is a pure map stage (token hash →
-fixed-width sparse vector, no shuffle); training iterates only over
-the (usually sampled) labeled subset via MLlib's treeAggregate;
-scoring broadcasts the coefficient vector and is again map-only.  The
-corpus never shuffles.
-
-This is the engine-capability operator: the synthetic test fixture has
-no linearly separable quality signal (every token occurs in every
-class — only frequencies differ), so the correctness evidence is a
-planted-separable corpus in tests/test_quality.py, not a driver
-query.
+The trained quality classifier is ``operators/classifier.py``
+(bit-deterministic training, a DuckDB-oracled AUC query, and
+``prepare-corpus --classifier-model``).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from ..functions import text as T
-
-
-def quality_classifier_scores(
-    docs: DataFrame,
-    label: Column,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    train_filter: Column | None = None,
-    n_features: int = 1 << 12,
-    max_iter: int = 25,
-    reg_param: float = 0.01,
-) -> DataFrame:
-    """(id_col, label, quality_prob, quality_pred) for every document.
-
-    ``label`` is the weak-supervision column (1.0 = high quality —
-    e.g. "comes from the curated reference corpus"); ``train_filter``
-    restricts which rows train the model (defaults to all — at scale,
-    pass a hash-sample predicate so the iterative fit touches a
-    bounded subset while scoring stays corpus-wide).
-
-    ``quality_prob`` is P(label=1 | tokens) under the fitted logistic
-    model; filtering on it (or importance-sampling with it, the GPT-3
-    Pareto trick) is the caller's policy.
-    """
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import HashingTF
-    from pyspark.ml.functions import vector_to_array
-
-    base = docs.select(
-        F.col(id_col),
-        label.cast("double").alias("label"),
-        T.tokens(F.col(text_col)).alias("__toks"),
-    )
-    tf = HashingTF(
-        inputCol="__toks", outputCol="features", numFeatures=n_features
-    )
-    feats = tf.transform(base)
-    train = feats if train_filter is None else feats.filter(train_filter)
-    lr = LogisticRegression(
-        featuresCol="features",
-        labelCol="label",
-        maxIter=max_iter,
-        regParam=reg_param,
-    )
-    model = lr.fit(train)
-    scored = model.transform(feats)
-    return scored.select(
-        id_col,
-        "label",
-        vector_to_array(F.col("probability"))
-        .getItem(1)
-        .alias("quality_prob"),
-        (F.col("prediction") == 1.0).alias("quality_pred"),
-    )
+from pyspark.sql import DataFrame
 
 
 def compression_signals(

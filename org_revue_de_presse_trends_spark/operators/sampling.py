@@ -90,30 +90,6 @@ def apportioned_quotas(
     )
 
 
-def stratified_take_n(
-    df: DataFrame,
-    strata_cols: list[str],
-    n: int,
-    id_col: str,
-    seed: int = 0,
-) -> DataFrame:
-    """Exactly ``min(n, |stratum|)`` rows per stratum, chosen by the
-    md5 order coin (id tiebreak makes the order total)."""
-    if n < 0:
-        raise ValueError("n must be >= 0")
-    ok = sample_order_sql("spark", id_col, seed)
-    strata = ", ".join(strata_cols)
-    return (
-        df.selectExpr(
-            "*",
-            f"ROW_NUMBER() OVER (PARTITION BY {strata}"
-            f" ORDER BY {ok}, {id_col}) AS __rn",
-        )
-        .filter(F.col("__rn") <= F.lit(int(n)))
-        .drop("__rn")
-    )
-
-
 def eval_carve(
     df: DataFrame,
     strata_cols: list[str],

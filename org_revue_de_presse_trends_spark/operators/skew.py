@@ -48,17 +48,6 @@ def salted_join(
     return joined.drop("__salt")
 
 
-def key_histogram(df: DataFrame, on: str, top: int = 20) -> DataFrame:
-    """Diagnostic: per-key row counts, descending — feed this to decide
-    whether a key needs salting (one shuffle, top-k collapse)."""
-    return (
-        df.groupBy(on)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy(F.desc("n_rows"), F.asc(on))
-        .limit(top)
-    )
-
-
 def spread_for_cpu(df: DataFrame, min_factor: int = 1) -> DataFrame:
     """Round-robin repartition a DataFrame whose INPUT layout has
     fewer partitions than the cluster has cores, so CPU-bound per-row

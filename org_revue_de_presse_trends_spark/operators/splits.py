@@ -1,12 +1,11 @@
-"""Deterministic dataset splits and shard assignment.
+"""Deterministic dataset splits.
 
 The last mile of a training-data pipeline: carve the corpus into
-train/val/test and write fixed-count shards for data loaders.  Both
-assignments are pure per-row hash functions of the document id —
-layout-independent, rerun-stable, no RNG state (the packing/mixing
-determinism invariant, CLAUDE.md) — so a regenerated pipeline or a
-repartitioned input can never migrate a document across splits, which
-would leak eval data into training.
+train/val/test.  The assignment is a pure per-row hash function of the
+document id — layout-independent, rerun-stable, no RNG state (the
+packing/mixing determinism invariant, CLAUDE.md) — so a regenerated
+pipeline or a repartitioned input can never migrate a document across
+splits, which would leak eval data into training.
 
 The split coin reuses the Knuth multiplicative-hash construction from
 the weighted sampler (plans/analytics_ext.doc_weighted_sample):
@@ -15,9 +14,6 @@ integer ops plus one divide, bit-identical in any engine, so the
 driver's DuckDB oracle reproduces assignments exactly.  The id is
 reduced mod 2^31 BEFORE the multiply: the product stays < 2^63 for
 every long id (ANSI overflow is impossible by construction).
-
-Shard assignment uses xxhash64 (better avalanche for balance); it has
-no DuckDB equivalent, so shard queries are rows-only.
 """
 
 from __future__ import annotations
@@ -96,40 +92,3 @@ def split_case_sql(
         parts.append(f"WHEN {coin} < {acc!r} THEN '{name}'")
     parts.append(f"ELSE '{names[-1]}' END")
     return " ".join(parts)
-
-
-def assign_shard(
-    df: DataFrame,
-    n_shards: int,
-    id_col: str = "doc_id",
-    seed: int = 0,
-    out_col: str = "shard",
-) -> DataFrame:
-    """Add a ``shard`` column in [0, n_shards): xxhash64-balanced,
-    deterministic, shuffle-free.  Write with
-    ``df.write.partitionBy("shard")`` (or repartition on it) to get
-    fixed-count shards whose membership survives reruns — a data
-    loader can resume mid-epoch against re-generated shards."""
-    if n_shards < 1:
-        raise ValueError("n_shards must be >= 1")
-    return df.withColumn(
-        out_col,
-        F.pmod(
-            F.xxhash64(F.col(id_col).cast("long"), F.lit(int(seed))),
-            F.lit(int(n_shards)),
-        ).cast("int"),
-    )
-
-
-def shard_manifest(
-    df: DataFrame,
-    token_count: Column | None = None,
-    shard_col: str = "shard",
-) -> DataFrame:
-    """(shard, n_docs[, n_tokens]) — the manifest a training job reads
-    to plan epoch schedules.  One tiny aggregation; bounded at
-    n_shards rows."""
-    aggs = [F.count(F.lit(1)).alias("n_docs")]
-    if token_count is not None:
-        aggs.append(F.sum(token_count).alias("n_tokens"))
-    return df.groupBy(shard_col).agg(*aggs)

@@ -53,8 +53,7 @@ def orders_nearby_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     window_sum − 1 (exclude self).  Measured 20.3 s → sub-second at
     sf0.1 vs the banded pair join, identical relation (the oracle
     stays the naive non-equi join, so the rewrite is verified, not
-    assumed).  The GENERAL banded interval join — needed when per-pair
-    output survives — lives in operators/rangejoin.py."""
+    assumed)."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.datediff(

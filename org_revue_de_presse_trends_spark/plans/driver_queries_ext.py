@@ -1,6 +1,6 @@
 """Extended driver-query suite: windowed analytics, sessionization,
-correlated aggregates, conditional pivots — the batch counterparts of
-the streaming operators plus beyond-reference analytics surface.
+correlated aggregates, conditional pivots — beyond-reference
+analytics surface.
 """
 
 from __future__ import annotations
@@ -36,8 +36,7 @@ from .registry import query
 )
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: 30-minute-gap sessions via lag + running sum —
-    the batch formulation of stateful session windows (the streaming
-    equivalent is session_window / applyInPandasWithState).  One
+    the batch formulation of stateful session windows.  One
     shuffle on user_id serves both window passes.  The gap is compared
     in microseconds (the oracle's INTERVAL precision): a whole-second
     cast would keep a 1800.27 s gap inside one session."""

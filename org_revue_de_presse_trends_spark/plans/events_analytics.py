@@ -40,9 +40,7 @@ _BURST = (
 
 
 def burst_flags(daily: DataFrame) -> DataFrame:
-    """Burst verdicts over a (event_type, day, c) daily-count frame —
-    the formula core shared by the batch query below and the streaming
-    accumulator (``streaming.incremental.foreach_batch_burst_detect``).
+    """Burst verdicts over a (event_type, day, c) daily-count frame.
     The window input is one row per (type, day): bounded by
     types × days, never event-scale."""
     w = (

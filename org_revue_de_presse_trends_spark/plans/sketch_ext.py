@@ -808,8 +808,7 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both sides are |bins|-row histogram sketches — computing
     drift between two 100 TB snapshots costs two histogram passes plus
-    a |bins|-sized join, and per-day histograms are already maintained
-    by the streaming sink."""
+    a |bins|-sized join."""
     from ..operators.histogram import histogram, psi
 
     ev = load_table(spark, sf_dir, "events")

@@ -1,1 +1,1 @@
-from . import bucketed, document_sink, jdbc, lake  # noqa: F401
+"""Readers and sinks; import each module directly."""

@@ -31,10 +31,6 @@ def write_partitioned(
     )
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def delete_matching(
     spark: SparkSession,
     path: str,
@@ -119,117 +115,3 @@ def delete_matching(
             fs.delete(parent, True)
             parent = parent.getParent()
     return n_removed
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    partition_by: tuple[str, ...] = ("day", "statusType"),
-) -> dict:
-    """Small-file compaction — the lake-maintenance primitive a
-    continuously-written 100 TB lake needs: every micro-batch /
-    per-day overwrite leaves a few files per partition, and a year of
-    them turns every scan into a metadata storm (driver-side file
-    listing, one task per splinter, parquet footer reads).
-
-    Per leaf partition, the data-file listing decides: a partition
-    whose file count exceeds ``ceil(bytes / target_bytes)`` is
-    rewritten into exactly that many files via ``repartition(n_out)``
-    (round-robin, exempt from AQE partition coalescing — the
-    REPARTITION_BY_NUM rule, so the file count is exact); partitions
-    already at or under their target file count are NOT read or
-    written — cost scales with the splintered data, not the lake.
-
-    The rewrite rides the same dynamic-partition-overwrite path as
-    ``delete_matching`` (slice localCheckpointed first — the
-    self-overwrite hazard), so a crash mid-commit leaves the original
-    partition, and a rerun is idempotent (compacted partitions no
-    longer qualify).  Row CONTENT is untouched; only file layout
-    changes.
-
-    Returns ``{"partitions_compacted", "files_before", "files_after",
-    "bytes_compacted"}``.
-    """
-    import math
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(hconf)
-
-    def _leaf_dirs(p, depth):
-        if depth == 0:
-            yield p
-            return
-        for st in fs.listStatus(p):
-            if st.isDirectory() and "=" in st.getPath().getName():
-                yield from _leaf_dirs(st.getPath(), depth - 1)
-
-    plan = []  # (key tuple, n_files, bytes, n_out)
-    for leaf in _leaf_dirs(root, len(partition_by)):
-        files = [
-            st
-            for st in fs.listStatus(leaf)
-            if not st.isDirectory()
-            and not st.getPath().getName().startswith(("_", "."))
-        ]
-        total = sum(st.getLen() for st in files)
-        n_out = max(1, math.ceil(total / float(target_bytes)))
-        if len(files) > n_out:
-            # str(leaf) may carry a filesystem scheme (file:/...) the
-            # root string lacks — key off the trailing hive segments.
-            # Hive URL-escapes special chars in partition VALUES
-            # (space, '%', '='...); unescape before the equality
-            # filter below or those partitions read-prune to empty
-            # and the rewrite silently no-ops.
-            segs = str(leaf).split("/")[-len(partition_by):]
-            key = tuple(
-                unquote(seg.split("=", 1)[1]) for seg in segs
-            )
-            plan.append((key, len(files), total, n_out))
-    if not plan:
-        return {
-            "partitions_compacted": 0,
-            "files_before": 0,
-            "files_after": 0,
-            "bytes_compacted": 0,
-        }
-    df = spark.read.parquet(path)
-    # one rewrite per splintered partition: the filter on partition
-    # columns is a directory prune (only that partition's files are
-    # read), repartition(n_out) is a round-robin exchange EXEMPT from
-    # AQE coalescing (the REPARTITION_BY_NUM rule), so the partition
-    # lands in exactly n_out files.  A maintenance job compacting
-    # thousands of partitions should batch calls by day range; each
-    # rewrite here is independent and idempotent.
-    for key, _, _, n_out in plan:
-        pred = None
-        for c, v in zip(partition_by, key):
-            cond = df[c].cast("string") == F.lit(v)
-            pred = cond if pred is None else (pred & cond)
-        slice_df = (
-            df.filter(pred).repartition(n_out).localCheckpoint()
-        )
-        write_partitioned(slice_df, path, partition_by=partition_by)
-    files_after = 0
-    compacted_keys = {k for k, _, _, _ in plan}
-    for leaf in _leaf_dirs(root, len(partition_by)):
-        segs = str(leaf).split("/")[-len(partition_by):]
-        key = tuple(unquote(seg.split("=", 1)[1]) for seg in segs)
-        if key in compacted_keys:
-            files_after += sum(
-                1
-                for st in fs.listStatus(leaf)
-                if not st.isDirectory()
-                and not st.getPath().getName().startswith(("_", "."))
-            )
-    return {
-        "partitions_compacted": len(plan),
-        "files_before": sum(n for _, n, _, _ in plan),
-        "files_after": files_after,
-        "bytes_compacted": sum(b for _, _, b, _ in plan),
-    }

@@ -24,11 +24,11 @@ records; a 100 TB crawl is ~10⁵ such tasks with zero shuffle.  For
 many-small-file layouts apply ``operators.skew.spread_for_cpu``
 upstream as usual.
 
-Malformed-input contract (the jsonl-quarantine / container-mp4
-precedent): a damaged file yields its successfully-parsed prefix of
-records plus ONE error row naming the file and the parse failure —
-never a crashed job, never silent loss; truncated payloads are
-detected against Content-Length.
+Malformed-input contract (the container-mp4 precedent): a damaged
+file yields its successfully-parsed prefix of records plus ONE error
+row naming the file and the parse failure — never a crashed job,
+never silent loss; truncated payloads are detected against
+Content-Length.
 """
 
 from __future__ import annotations
@@ -388,9 +388,8 @@ def write_wet(
     carries MTIME=0 — so the emitted FILES are byte-deterministic
     across reruns and input layouts, the same replay-stability
     contract as the parquet shard export.  Each shard group writes
-    ``wet-{shard:05d}.warc.gz`` via temp-file + atomic rename (the
-    foreach_batch delta discipline: a crashed task never leaves a
-    half-written visible file).
+    ``wet-{shard:05d}.warc.gz`` via temp-file + atomic rename (a
+    crashed task never leaves a half-written visible file).
 
     Returns the manifest: one dict per shard (shard_id, n_records,
     n_bytes, path), computed from the written bytes.  ``out_dir``
@@ -475,136 +474,3 @@ def write_wet(
                 "path": path,
             }
     return [manifest[s] for s in range(n_shards)]
-
-
-def digest_dedup(records: DataFrame) -> DataFrame:
-    """Exact-duplicate removal on ``payload_digest`` — the Common
-    Crawl workflow where sha1 digests ship in the WARC headers, so
-    byte-identical re-fetches drop WITHOUT ever decoding payloads.
-    Keep-first under (warc_date, record_id); rows with no digest are
-    exempt (kept) — absence of evidence is not a duplicate.
-
-    Scale: one map-side-combinable aggregate on the digest + a
-    semi-join back on the (digest, date, id) identity — the linededup
-    skew argument applies (a viral page's digest reduces per
-    partition before the exchange)."""
-    from pyspark.sql import functions as F
-
-    # tiebreak keys ride as NULL-coalesced sentinels: a record missing
-    # WARC-Date/Record-ID (real malformed crawl data) must still be
-    # keepable — an equi-join on a raw NULL key would silently drop
-    # the whole digest group (review-caught)
-    with_digest = (
-        records.where(F.col("payload_digest").isNotNull())
-        .withColumn("_date_k", F.coalesce(F.col("warc_date"), F.lit("")))
-        .withColumn("_rid_k", F.coalesce(F.col("record_id"), F.lit("")))
-    )
-    first = (
-        with_digest.groupBy("payload_digest")
-        .agg(F.min(F.struct("_date_k", "_rid_k")).alias("_f"))
-        .select(
-            "payload_digest",
-            F.col("_f._date_k").alias("_date_k"),
-            F.col("_f._rid_k").alias("_rid_k"),
-        )
-    )
-    kept = with_digest.join(
-        first, ["payload_digest", "_date_k", "_rid_k"], "left_semi"
-    ).drop("_date_k", "_rid_k")
-    return records.where(F.col("payload_digest").isNull()).unionByName(kept)
-
-
-def crawl_stats(records: DataFrame) -> DataFrame:
-    """Per-host crawl data card straight off the record frame (no
-    text decode): record/ok/html counts, payload bytes, distinct
-    content types, parse errors folded in by their file path.  The
-    inventory a curation run reads before deciding what to keep —
-    one hash aggregate over hosts."""
-    from pyspark.sql import functions as F
-
-    host = F.coalesce(
-        F.lower(
-            F.regexp_extract("target_uri", "^[a-zA-Z]+://([^/]+)", 1)
-        ),
-        F.lit(""),  # error rows have no URI: the '' bucket
-    )
-    ctype0 = F.lower(
-        F.split(F.coalesce(F.col("content_type"), F.lit("")), ";")[0]
-    )
-    return (
-        records.withColumn("host", host)
-        .groupBy("host")
-        .agg(
-            F.count(F.lit(1)).alias("n_records"),
-            # NULL http_status (WET conversion records, error rows)
-            # must count as 0, not make the SUM NULL (review-caught)
-            F.sum(
-                F.coalesce(
-                    (F.col("http_status") == 200).cast("long"), F.lit(0)
-                )
-            ).alias("n_ok"),
-            F.sum(
-                ctype0.startswith("text/html").cast("long")
-            ).alias("n_html"),
-            F.sum(
-                F.coalesce(F.length("payload"), F.lit(0)).cast("long")
-            ).alias("payload_bytes"),
-            F.count_distinct(ctype0).alias("n_content_types"),
-            F.sum(
-                F.col("parse_error").isNotNull().cast("long")
-            ).alias("n_parse_errors"),
-        )
-    )
-
-
-def cdx_index(records: DataFrame) -> DataFrame:
-    """CDX-style capture index over a records frame — the sidecar
-    Common Crawl publishes (CDXJ) so consumers can locate captures
-    without walking WARC files.  One row per non-error record:
-
-    - ``urlkey``: the SURT form (Sort-friendly URI Reordering
-      Transform, the public convention) of the CANONICALIZED url —
-      reversed host labels comma-joined, then ``)/`` + path + sorted
-      query; canonicalization is ``operators/urls`` (www/port strip,
-      tracking-param removal, sorted params), so two crawls of the
-      same logical page share a key,
-    - ``ts``: the 14-digit compact form of WARC-Date,
-    - record id / type / http status / content type / payload digest /
-      payload length, straight off the frame.
-
-    Pure per-row projection (zero shuffle); sorting by urlkey for the
-    classic CDX file layout is the caller's ``orderBy`` (a range-
-    partitioned sort at scale)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.urls import with_canonical_url
-
-    base = with_canonical_url(
-        records.where(F.col("parse_error").isNull()).withColumn(
-            "url", F.col("target_uri")
-        ),
-        "url",
-    )
-    host = F.regexp_extract("canonical_url", "^[a-z]+://([^/?#]+)", 1)
-    tail = F.regexp_extract("canonical_url", "^[a-z]+://[^/?#]+(.*)$", 1)
-    urlkey = F.concat(
-        F.array_join(F.reverse(F.split(host, "\\.")), ","),
-        F.lit(")"),
-        F.when(tail == "", F.lit("/")).otherwise(F.lower(tail)),
-    )
-    ts = F.regexp_replace(
-        F.coalesce(F.col("warc_date"), F.lit("")), "[^0-9]", ""
-    ).substr(1, 14)
-    return base.select(
-        urlkey.alias("urlkey"),
-        ts.alias("ts"),
-        "record_id",
-        "warc_type",
-        "http_status",
-        "content_type",
-        "payload_digest",
-        F.coalesce(F.length("payload"), F.lit(0))
-        .cast("long")
-        .alias("payload_length"),
-        F.col("target_uri").alias("original_url"),
-    )

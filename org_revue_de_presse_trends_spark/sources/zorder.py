@@ -9,10 +9,9 @@ hyper-rectangle of the value space, so its parquet footer min/max
 stats exclude it from most box queries — the mechanism behind Delta
 Lake's OPTIMIZE ZORDER, applied here with plain open parquet.
 
-At 100 TB the whole operation is one range shuffle: compute the
-interleaved key per row (pure projection), ``repartitionByRange`` on
-it (the range exchange samples its own bounds), sort within
-partitions, write.  Readers need NO changes: Spark/DuckDB/Trino all
+The key is a pure per-row projection; a writer clusters by
+``repartitionByRange`` on it (one range shuffle) and sorts within
+partitions.  Readers need NO changes: Spark/DuckDB/Trino all
 push min/max skipping down to parquet row groups natively; the curve
 just makes those stats selective on BOTH columns at once.
 
@@ -105,26 +104,3 @@ def with_zorder_key(
         for j in range(bits)
     )
     return staged.select(*df.columns, F.expr(terms).alias(out_col))
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int = 8,
-    edges: dict | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Cluster ``df`` along the Z-curve over ``cols`` and write
-    ``n_files``-ish parquet files whose footer min/max stats are
-    selective on every clustered column at once."""
-    edges = edges if edges is not None else linear_edges(df, cols)
-    keyed = with_zorder_key(df, cols, edges, bits=bits)
-    (
-        keyed.repartitionByRange(n_files, "zkey")
-        .sortWithinPartitions("zkey")
-        .drop("zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -198,36 +198,6 @@ def test_media_features_auto_decoder_boundary_raises(spark):
         extract_media_features(jpegish, decoder="auto").collect()
 
 
-def test_resize_images_auto_real_decode_reencode(spark, real_media_df):
-    """decoder='auto' resize: output payload is a REAL PNG of the
-    target dimensions whose pixels equal nearest-neighbor resampling
-    of the original decoded pixels."""
-    import numpy as np
-
-    from org_revue_de_presse_trends_spark.functions import codecs
-    from org_revue_de_presse_trends_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    rows = {r["media_id"]: r for r in
-            resize_images(real_media_df, width=5, height=6,
-                          decoder="auto").collect()}
-    out = rows[10]
-    assert out["meta"]["width"] == 5 and out["meta"]["height"] == 6
-    assert out["meta"]["mime"] == "image/png"
-    decoded = codecs.decode_png(bytes(out["payload"]))
-    assert decoded.shape == (6, 5, 3)
-    orig = codecs.decode_png(
-        bytes({r["media_id"]: r for r in real_media_df.collect()}[10]
-              ["payload"])
-    )
-    assert np.array_equal(decoded, codecs.resize_nearest(orig, 5, 6))
-    # audio row passes through untouched
-    assert bytes(rows[11]["payload"]) == bytes(
-        {r["media_id"]: r for r in real_media_df.collect()}[11]["payload"]
-    )
-
-
 def test_cli_since_last_week_prints_window(spark, domain_dir, capsys):
     """Corrected -since-last-week mode: statuses whose shifted creation
     time falls in the 7 days before --since-date."""
@@ -368,60 +338,23 @@ def test_cli_config_file_routes_firebase_sink(spark, domain_dir, tmp_path):
                         "retweetFromDistinctSources"}
 
 
-def test_resize_images_composes_with_features(spark, media_df):
-    from org_revue_de_presse_trends_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    resized = resize_images(media_df, width=8, height=8)
-    rows = {r["media_id"]: r for r in resized.collect()}
-    # image rows: payload resampled to exactly w*h bytes, meta updated
-    img = rows[1]
-    assert img["kind"] == "image"
-    assert len(img["payload"]) == 64
-    assert img["meta"]["width"] == 8 and img["meta"]["height"] == 8
-    # non-image rows pass through untouched
-    for r in rows.values():
-        if r["kind"] != "image":
-            orig = {x["media_id"]: x for x in media_df.collect()}[r["media_id"]]
-            assert bytes(r["payload"]) == bytes(orig["payload"])
-    # composes: features over the resized stream keep the schema
-    feats = extract_media_features(resized).collect()
-    assert {f["media_id"] for f in feats} == set(rows)
-    # deterministic: same input -> same resized hash
-    again = {r["media_id"]: bytes(r["payload"])
-             for r in resize_images(media_df, width=8, height=8).collect()}
-    assert again[1] == bytes(img["payload"])
-
-
-def test_resize_images_stub_raises(spark, media_df):
-    from org_revue_de_presse_trends_spark.operators.multimodal import (
-        resize_images,
-    )
-
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        resize_images(media_df, decoder="stub").collect()
-
-
-def test_resize_preserves_null_payloads(spark):
-    from pyspark.sql import Row as R
-
-    from org_revue_de_presse_trends_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        resize_images,
-    )
-
-    df = spark.createDataFrame(
-        [
-            R(media_id=1, kind="image", payload=None, meta=None),
-            R(media_id=2, kind="audio", payload=None, meta=None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {r["media_id"]: r for r in resize_images(df, 8, 8).collect()}
-    # null payloads stay null; no resize is claimed in meta
-    assert rows[1]["payload"] is None and rows[1]["meta"] is None
-    assert rows[2]["payload"] is None and rows[2]["meta"] is None
+@pytest.mark.parametrize(
+    "day", ["2024-3-2", "2024-03-02 10:00", "2024-03-02T99"]
+)
+def test_cli_rejects_loose_since_date(spark, tmp_path, day):
+    """Spark's CAST(:day AS DATE) reads each of these as 2024-03-02,
+    but the sink and lake key the day by the raw string: the CLI must
+    refuse anything but YYYY-MM-DD before touching any table."""
+    with pytest.raises(SystemExit):
+        main(
+            [
+                "--publishers-list-id", TARGET_LIST,
+                "--since-date", day,
+                "--source-dir", str(tmp_path),
+                "--dry-mode",
+            ],
+            spark=spark,
+        )
 
 
 def test_cli_since_last_week_rejects_sink_dir(spark, domain_dir, tmp_path):

@@ -1,21 +1,10 @@
-"""Near-dup clustering (connected components) + bucketed co-located
-join evidence."""
+"""Near-dup clustering (connected components) over pair lists."""
 
 from __future__ import annotations
-
-import io
-import contextlib
-
-import pytest
-from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.operators.dedup import (
     cluster_pairs,
     dedup_assignments,
-)
-from org_revue_de_presse_trends_spark.sources.bucketed import (
-    read_table,
-    write_bucketed,
 )
 
 
@@ -44,47 +33,3 @@ def test_dedup_assignments_keep_flags(spark):
         10: (10, True), 11: (10, False),
         99: (99, True),  # unpaired doc survives
     }
-
-
-@pytest.mark.usefixtures("spark")
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Both sides bucketed by the join key → SortMergeJoin with zero
-    Exchange operators in the plan (the co-located join that makes the
-    trends spine shuffle-free at scale)."""
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in ("bkt_status", "bkt_popularity"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # metastore is per-process; stale managed-table dirs from
-        # earlier runs must go too
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-    status = spark.range(1000).select(
-        F.col("id").alias("status_id"), (F.col("id") % 7).alias("x")
-    )
-    pop = spark.range(3000).select(
-        (F.col("id") % 1000).alias("status_id"),
-        (F.col("id") * 3).alias("retweets"),
-    )
-    write_bucketed(status, "bkt_status", "status_id", 8, sort_by="status_id")
-    write_bucketed(pop, "bkt_popularity", "status_id", 8,
-                   sort_by="status_id")
-    # tiny test tables would be broadcast; disable to expose the
-    # bucket-aware SortMergeJoin that large tables would use
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = read_table(spark, "bkt_status").join(
-            read_table(spark, "bkt_popularity"), "status_id"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
-        assert joined.count() == 3000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -243,45 +243,3 @@ def test_stz2_four_bit_packing():
     stbl = struct.pack(">I", 8 + len(stz2)) + b"stbl" + stz2
     sizes = cm._read_sizes(stbl, (8, len(stbl)))
     assert sizes == entries
-
-
-@needs_libwebp
-def test_extract_video_metadata_operator(spark, vp8_frames):
-    """Inventory-without-decode over mixed webm/mp4/broken payloads:
-    codec, dims, duration, keyframe density; broken files surface as
-    parse_error rows instead of failing the job."""
-    from pyspark.sql import Row
-
-    from org_revue_de_presse_trends_spark.functions.container_webm import (
-        mux_webm_vp8,
-    )
-    from org_revue_de_presse_trends_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        extract_video_metadata,
-    )
-
-    payloads = [p for p, _ in vp8_frames[:4]]
-    webm = mux_webm_vp8(payloads, W, H, frame_duration_ms=100,
-                        keyframes=[True, False, True, False])
-    mp4 = cm.mux_mp4_vp8(payloads, W, H, frame_duration=100,
-                         keyframes=[True, True, False, False])
-    def meta(d): return Row(mime=None, width=None, height=None,
-                            duration_ms=d)
-    df = spark.createDataFrame([
-        Row(media_id=1, kind="video", payload=webm, meta=meta(400)),
-        Row(media_id=2, kind="video", payload=mp4, meta=meta(400)),
-        Row(media_id=3, kind="video", payload=b"\x00garbage",
-            meta=meta(0)),
-        Row(media_id=4, kind="image", payload=b"ignored", meta=None),
-    ], MEDIA_SCHEMA)
-    rows = {r.media_id: r for r in extract_video_metadata(df).collect()}
-    assert set(rows) == {1, 2, 3}          # images filtered out
-    w = rows[1]
-    assert (w.container, w.codec, w.width, w.height, w.n_frames,
-            w.n_keyframes, w.duration_ms) == (
-        "webm", "V_VP8", W, H, 4, 2, 300)
-    m = rows[2]
-    assert (m.container, m.codec, m.width, m.height, m.n_frames,
-            m.n_keyframes, m.duration_ms) == (
-        "mp4", "vp08", W, H, 4, 2, 400)
-    assert rows[3].parse_error and rows[3].codec is None

@@ -387,103 +387,6 @@ def test_corpus_diff_pruned_equals_full_and_prunes(spark, tmp_path):
     assert empty.count() == 0 and empty.columns == ["doc_id", "status"]
 
 
-def test_apply_corpus_delta_in_place(spark, tmp_path):
-    """CDC upsert into an export: only delta shards are rewritten
-    (unchanged shard files byte-identical on disk), a fully-emptied
-    shard's directory is deleted, and the returned incremental
-    manifest equals a from-scratch recompute AND verifies the files."""
-    import glob as _glob
-    import os as _os
-
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    path = str(tmp_path / "cdc")
-    manifest = X.write_shards(docs, path, 8, "doc_id", ["text"]).localCheckpoint()
-    before = {
-        f: _os.path.getmtime(f)
-        for f in _glob.glob(f"{path}/shard_id=*/part-*.parquet")
-    }
-    # delta: change 11, add 9001, delete 7, and EMPTY one whole shard
-    shard_of = {
-        r["doc_id"]: r["shard_id"]
-        for r in docs.selectExpr(
-            "doc_id", f"{X.shard_id_sql('spark', 'doc_id', 8)} AS shard_id"
-        ).collect()
-    }
-    victim_shard = shard_of[7]
-    emptied = sorted(d for d, s in shard_of.items() if s == victim_shard)
-    changes = spark.createDataFrame(
-        [("upsert", 11, "totally new text"), ("upsert", 9001, "fresh doc")]
-        + [("delete", d, None) for d in emptied],
-        "op string, doc_id long, text string",
-    )
-    updated = X.apply_corpus_delta(
-        spark, path, manifest, changes, 8, "doc_id", ["text"]
-    ).localCheckpoint()
-    # expected corpus after the delta
-    want_docs = (
-        docs.filter(~F.col("doc_id").isin(emptied))
-        .withColumn(
-            "text",
-            F.when(F.col("doc_id") == 11, F.lit("totally new text"))
-            .otherwise(F.col("text")),
-        )
-        .unionByName(
-            spark.createDataFrame(
-                [(9001, "fresh doc")], "doc_id long, text string"
-            )
-        )
-    )
-    back = spark.read.parquet(path).select("doc_id", "text")
-    assert sorted(map(tuple, back.collect())) == sorted(
-        map(tuple, want_docs.collect())
-    )
-    # incremental manifest == from-scratch recompute, and verifies
-    assert sorted(map(tuple, updated.collect())) == sorted(
-        map(
-            tuple,
-            X.shard_manifest(want_docs, 8, "doc_id", ["text"]).collect(),
-        )
-    )
-    assert (
-        X.verify_export(spark, path, updated, 8, "doc_id", ["text"]).count()
-        == 0
-    )
-    # the emptied shard's directory is gone
-    assert not _glob.glob(f"{path}/shard_id={victim_shard}")
-    # untouched shards were not rewritten (same files, same mtimes)
-    moved = {victim_shard, shard_of[11], shard_of.get(9001, -1)} | {
-        r["shard_id"]
-        for r in changes.selectExpr(
-            f"{X.shard_id_sql('spark', 'doc_id', 8)} AS shard_id"
-        ).collect()
-    }
-    after = {
-        f: _os.path.getmtime(f)
-        for f in _glob.glob(f"{path}/shard_id=*/part-*.parquet")
-    }
-    for f, t in before.items():
-        sid = int(f.split("shard_id=")[1].split("/")[0])
-        if sid not in moved:
-            assert after.get(f) == t, f"untouched shard rewritten: {f}"
-    # no-op delta returns the manifest unchanged
-    noop = spark.createDataFrame([], "op string, doc_id long, text string")
-    same = X.apply_corpus_delta(
-        spark, path, updated, noop, 8, "doc_id", ["text"]
-    )
-    assert sorted(map(tuple, same.collect())) == sorted(
-        map(tuple, updated.collect())
-    )
-    # unknown op rejected
-    with pytest.raises(ValueError, match="unknown"):
-        X.apply_corpus_delta(
-            spark, path, updated,
-            spark.createDataFrame(
-                [("replace", 1, "x")], "op string, doc_id long, text string"
-            ),
-            8, "doc_id", ["text"],
-        )
-
-
 def test_guards(spark):
     docs = load_table(spark, SF, "documents")
     with pytest.raises(ValueError, match="n_shards"):

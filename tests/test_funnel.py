@@ -5,7 +5,6 @@ from __future__ import annotations
 from datetime import datetime
 
 from org_revue_de_presse_trends_spark.operators.funnel import (
-    funnel_counts,
     funnel_steps,
 )
 
@@ -53,7 +52,7 @@ def test_funnel_greedy_earliest_and_window(spark):
     assert out[4] == (_ts(9), _ts(10, 30), None, 2)
 
 
-def test_funnel_unbounded_window_and_counts(spark):
+def test_funnel_unbounded_window(spark):
     rows = [
         (1, _ts(9), "view"), (1, _ts(23), "click"),
         (2, _ts(9), "view"),
@@ -63,13 +62,6 @@ def test_funnel_unbounded_window_and_counts(spark):
     )
     got = {r["user_id"]: r["steps_completed"] for r in per_user.collect()}
     assert got == {1: 2, 2: 1}
-    counts = {
-        (r["step"], r["step_name"]): r["n_users"]
-        for r in funnel_counts(
-            _events(spark, rows), ["view", "click"]
-        ).collect()
-    }
-    assert counts == {(1, "view"): 2, (2, "click"): 1}
 
 
 def test_sliding_funnel_catches_later_anchor(spark):

@@ -103,63 +103,3 @@ def test_mixture_plan_audit_consistency(spark):
     assert plan["books"]["keep_rate"] == pytest.approx(1.0)
     assert plan["web"]["keep_rate"] < 1.0
     assert abs(sum(r["weight"] for r in plan.values()) - 1.0) < 1e-4
-
-
-def test_replication_rates_closed_form():
-    from org_revue_de_presse_trends_spark.operators.mixing import (
-        replication_rates,
-    )
-
-    counts = {"big": 900, "small": 100}
-    w = temperature_weights(counts, alpha=0.5)  # 0.75 / 0.25
-    r = replication_rates(counts, w)  # T = 1000
-    # big: 0.75*1000/900 ≈ 0.833 (down), small: 0.25*1000/100 = 2.5 (UP)
-    assert abs(r["big"] - 750.0 / 900.0) < 1e-12
-    assert abs(r["small"] - 2.5) < 1e-12
-    # explicit budget scales linearly
-    r2 = replication_rates(counts, w, total_tokens=2000)
-    assert abs(r2["small"] - 5.0) < 1e-12
-    # zero-mass source gets 0, not a division blowup
-    r3 = replication_rates({"a": 100, "b": 0}, {"a": 0.5, "b": 0.5})
-    assert r3["b"] == 0.0
-
-
-def test_sample_mixture_replicated_counts_and_determinism(spark):
-    from org_revue_de_presse_trends_spark.operators.mixing import (
-        sample_mixture_replicated,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "s") for i in range(2000)], ["doc_id", "source"]
-    )
-    out = sample_mixture_replicated(docs, {"s": 2.5})
-    rows = out.collect()
-    per_doc = {}
-    for r in rows:
-        per_doc.setdefault(r["doc_id"], []).append(r["copy"])
-    # every doc appears 2 or 3 times with copy = 1..n
-    assert set(per_doc) == set(range(2000))
-    for copies in per_doc.values():
-        assert sorted(copies) in ([1, 2], [1, 2, 3])
-    # expected total 2.5n within a loose binomial bound
-    assert abs(len(rows) - 5000) < 150
-    # deterministic rerun
-    again = {
-        (r["doc_id"], r["copy"])
-        for r in sample_mixture_replicated(docs, {"s": 2.5}).collect()
-    }
-    assert {(r["doc_id"], r["copy"]) for r in rows} == again
-
-
-def test_sample_mixture_replicated_matches_keep_path_below_one(spark):
-    from org_revue_de_presse_trends_spark.operators.mixing import (
-        sample_mixture_replicated,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, "s") for i in range(1000)], ["doc_id", "source"]
-    )
-    kept = {r["doc_id"] for r in sample_mixture(docs, {"s": 0.4}).collect()}
-    rep = sample_mixture_replicated(docs, {"s": 0.4}).collect()
-    assert {r["doc_id"] for r in rep} == kept
-    assert all(r["copy"] == 1 for r in rep)

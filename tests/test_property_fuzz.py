@@ -217,52 +217,6 @@ def test_wav_roundtrip_fuzz(n, ch, rate, seed):
 # ---------------------------------------------------------------------------
 
 
-@settings(max_examples=5, deadline=None, derandomize=True, database=None)
-@given(
-    st.lists(
-        st.floats(
-            min_value=-1000, max_value=1000,
-            allow_nan=False, allow_infinity=False,
-        ),
-        min_size=1, max_size=25,
-    ),
-    st.lists(
-        st.floats(
-            min_value=-1000, max_value=1000,
-            allow_nan=False, allow_infinity=False,
-        ),
-        min_size=1, max_size=25,
-    ),
-    st.sampled_from([0.5, 1, 7, 100]),
-)
-@example(lv=[0.5], rv=[-2.2250738585072014e-308], radius=0.5)
-def test_band_interval_join_matches_brute_force_fuzz(spark, lv, rv, radius):
-    # the pinned @example is the double-slack boundary bug hypothesis
-    # found: a-b rounds to exactly the radius while the operands sit
-    # two bands apart (fixed by the float path's +-2 band probe)
-    from org_revue_de_presse_trends_spark.operators.rangejoin import (
-        band_interval_join,
-    )
-
-    left = spark.createDataFrame(list(enumerate(lv)), ["lid", "lval"])
-    right = spark.createDataFrame(
-        [(100 + i, v) for i, v in enumerate(rv)], ["rid", "rval"]
-    )
-    got = sorted(
-        (r["lid"], r["rid"])
-        for r in band_interval_join(
-            left, right, "lval", "rval", radius
-        ).collect()
-    )
-    brute = sorted(
-        (i, 100 + j)
-        for i, a in enumerate(lv)
-        for j, b in enumerate(rv)
-        if abs(a - b) <= radius
-    )
-    assert got == brute
-
-
 @settings(max_examples=30, deadline=None, derandomize=True, database=None)
 @given(
     st.integers(min_value=0, max_value=25),

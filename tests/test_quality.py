@@ -1,78 +1,6 @@
-"""Trained quality classifier (operators/quality.py) on a planted
-linearly-separable corpus — the capability evidence the synthetic
-driver fixture cannot provide (its lang↔token signal is
-frequency-only)."""
+"""Document quality signals (operators/quality.py)."""
 
 from __future__ import annotations
-
-import random
-
-import pytest
-from pyspark.sql import functions as F
-
-from org_revue_de_presse_trends_spark.operators.quality import (
-    quality_classifier_scores,
-)
-
-
-def _planted_corpus(spark):
-    """200 docs: 'good' docs draw mostly from a clean vocabulary,
-    'bad' docs mostly from a boilerplate vocabulary, with 20% shared
-    noise so the task is separable but not trivial.  Deterministic
-    seed → deterministic fit."""
-    rng = random.Random(42)
-    good_vocab = [f"substance{i}" for i in range(40)]
-    bad_vocab = [f"boiler{i}" for i in range(40)]
-    noise = [f"common{i}" for i in range(20)]
-    rows = []
-    for i in range(200):
-        is_good = i % 2 == 0
-        main = good_vocab if is_good else bad_vocab
-        toks = [
-            rng.choice(main) if rng.random() > 0.2 else rng.choice(noise)
-            for _ in range(30)
-        ]
-        rows.append((i, " ".join(toks), 1.0 if is_good else 0.0))
-    return spark.createDataFrame(rows, ["doc_id", "text", "gold"])
-
-
-def test_classifier_separates_planted_classes_held_out(spark):
-    """Train on doc_id % 4 ∈ {0, 1} (both classes — class parity is
-    doc_id % 2); the held-out half must score ≥ 95% accuracy and the
-    class probabilities must separate cleanly."""
-    docs = _planted_corpus(spark)
-    out = quality_classifier_scores(
-        docs,
-        label=F.col("gold"),
-        train_filter=F.col("doc_id") % 4 <= 1,
-    ).collect()
-    held = [r for r in out if r["doc_id"] % 4 >= 2]
-    assert len(held) == 100
-    acc = sum(
-        1 for r in held if r["quality_pred"] == (r["label"] == 1.0)
-    ) / len(held)
-    assert acc >= 0.95, f"held-out accuracy {acc}"
-    good = [r["quality_prob"] for r in held if r["label"] == 1.0]
-    bad = [r["quality_prob"] for r in held if r["label"] == 0.0]
-    assert min(good) > max(bad), "probability ranges overlap"
-
-
-def test_classifier_scores_every_row_and_is_deterministic(spark):
-    docs = _planted_corpus(spark)
-    a = sorted(
-        (r["doc_id"], round(r["quality_prob"], 9))
-        for r in quality_classifier_scores(
-            docs, label=F.col("gold")
-        ).collect()
-    )
-    b = sorted(
-        (r["doc_id"], round(r["quality_prob"], 9))
-        for r in quality_classifier_scores(
-            docs, label=F.col("gold")
-        ).collect()
-    )
-    assert len(a) == 200
-    assert a == b, "refit on identical input drifted"
 
 
 def test_compression_signals_planted_monotonicity(spark):

@@ -63,18 +63,6 @@ def test_carve_saturates_to_full_corpus(spark):
     assert got == df.count()
 
 
-def test_stratified_take_n_caps_at_stratum_size(spark):
-    df = _uneven(spark)
-    got = {
-        r["source"]: r["n"]
-        for r in S.stratified_take_n(df, ["source"], 5, "doc_id")
-        .groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got == {"a": 5, "b": 5, "c": 5, "d": 1}
-
-
 def test_spark_template_equals_dataframe_operator(spark, tmp_path):
     """The SAME template string, engine='spark', run through spark.sql
     must equal the DataFrame operator — pinning that the oracle text
@@ -100,5 +88,3 @@ def test_guards(spark):
     df = _uneven(spark)
     with pytest.raises(ValueError, match="n_total"):
         S.apportioned_quotas(df, ["source"], -1)
-    with pytest.raises(ValueError, match="n must"):
-        S.stratified_take_n(df, ["source"], -2, "doc_id")

@@ -168,49 +168,6 @@ def test_minhash_lsh_scales_linearly_10x(spark):
     assert s_ratio < 30, f"shuffle grew {s_ratio:.1f}× for 10× docs"
 
 
-def test_band_interval_join_scales_linearly_10x(spark):
-    """Banded range join: runtime AND shuffle bytes must grow roughly
-    linearly for 10× rows at fixed match density (the band key keeps
-    candidate pairs local; a nested-loop would grow 100×)."""
-    import time as _time
-
-    from org_revue_de_presse_trends_spark.observability import (
-        MetricsCollector,
-    )
-    from org_revue_de_presse_trends_spark.operators.rangejoin import (
-        band_interval_join,
-    )
-
-    mc = MetricsCollector(spark)
-    results = {}
-    for n in (20_000, 200_000):
-        # values spread over [0, n/10): constant ~10 rows per unit, so
-        # expected matches per row stay fixed as n grows
-        left = spark.range(n).select(
-            F.col("id").alias("lid"),
-            ((F.col("id") * 7919) % (n // 10)).cast("double").alias("lval"),
-        )
-        right = spark.range(n).select(
-            (F.col("id") + 10_000_000).alias("rid"),
-            ((F.col("id") * 104729) % (n // 10)).cast("double")
-            .alias("rval"),
-        )
-        pairs = band_interval_join(left, right, "lval", "rval", 0.5)
-        t0 = _time.perf_counter()
-        _, qm = mc.measure(
-            f"bandjoin_{n}", pairs, action=lambda d: d.count()
-        )
-        results[n] = (
-            _time.perf_counter() - t0,
-            qm.shuffle_bytes_written,
-            qm.result_rows,
-        )
-    t_ratio = results[200_000][0] / results[20_000][0]
-    s_ratio = results[200_000][1] / max(results[20_000][1], 1)
-    assert t_ratio < 30, f"runtime grew {t_ratio:.1f}× for 10× rows"
-    assert s_ratio < 30, f"shuffle grew {s_ratio:.1f}× for 10× rows"
-
-
 def test_incremental_lsh_cost_tracks_batch_not_index(spark):
     """The continuous-ingest claim, measured: with a FIXED new batch,
     growing the signature index 10× must grow runtime and shuffle far

@@ -15,10 +15,7 @@ from org_revue_de_presse_trends_spark.sources.jdbc import (
     PostgresConfig,
     reader_options,
 )
-from org_revue_de_presse_trends_spark.sources.lake import (
-    read_partitioned,
-    write_partitioned,
-)
+from org_revue_de_presse_trends_spark.sources.lake import write_partitioned
 
 
 def _records(spark, rows):
@@ -110,7 +107,7 @@ def test_lake_dynamic_partition_overwrite(spark, tmp_path):
     # compare stringified
     out = {
         (str(r["day"]), r["id"])
-        for r in read_partitioned(spark, path).collect()
+        for r in spark.read.parquet(path).collect()
     }
     assert out == {("2024-03-01", 1), ("2024-03-02", 99)}
 
@@ -124,9 +121,9 @@ def test_lake_rerun_identical(spark, tmp_path):
         ["day", "statusType", "id", "username"],
     )
     write_partitioned(df, path)
-    first = sorted(map(tuple, read_partitioned(spark, path).collect()))
+    first = sorted(map(tuple, spark.read.parquet(path).collect()))
     write_partitioned(df, path)
-    second = sorted(map(tuple, read_partitioned(spark, path).collect()))
+    second = sorted(map(tuple, spark.read.parquet(path).collect()))
     assert first == second
 
 
@@ -467,7 +464,6 @@ def test_lake_delete_matching(spark, tmp_path):
 
     from org_revue_de_presse_trends_spark.sources.lake import (
         delete_matching,
-        read_partitioned,
         write_partitioned,
     )
 
@@ -489,7 +485,7 @@ def test_lake_delete_matching(spark, tmp_path):
         spark, path, F.col("id").isin(100, 101, 200)
     )
     assert n == 3
-    out = read_partitioned(spark, path)
+    out = spark.read.parquet(path)
     got = {r["id"] for r in out.collect()}
     assert got == set(range(10)) | {102 + i for i in range(8)}
     # untouched partition: same files on disk
@@ -498,7 +494,7 @@ def test_lake_delete_matching(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "day=2024-03-03"))
     # idempotent rerun
     assert delete_matching(spark, path, F.col("id").isin(100, 200)) == 0
-    assert read_partitioned(spark, path).count() == 18
+    assert spark.read.parquet(path).count() == 18
 
 
 def test_lake_delete_matching_keeps_null_predicate_rows(spark, tmp_path):
@@ -509,7 +505,6 @@ def test_lake_delete_matching_keeps_null_predicate_rows(spark, tmp_path):
 
     from org_revue_de_presse_trends_spark.sources.lake import (
         delete_matching,
-        read_partitioned,
         write_partitioned,
     )
 
@@ -525,7 +520,7 @@ def test_lake_delete_matching_keeps_null_predicate_rows(spark, tmp_path):
 
     n = delete_matching(spark, path, F.col("username") == "bob")
     assert n == 1
-    got = {(r["id"], r["username"]) for r in read_partitioned(spark, path).collect()}
+    got = {(r["id"], r["username"]) for r in spark.read.parquet(path).collect()}
     assert got == {(2, None), (3, "carol"), (4, None)}
 
 
@@ -537,7 +532,6 @@ def test_lake_delete_matching_many_partitions_bounded_plan(spark, tmp_path):
 
     from org_revue_de_presse_trends_spark.sources.lake import (
         delete_matching,
-        read_partitioned,
         write_partitioned,
     )
 
@@ -554,7 +548,7 @@ def test_lake_delete_matching_many_partitions_bounded_plan(spark, tmp_path):
     # u0 exists in every partition -> all 100 partitions affected
     n = delete_matching(spark, path, F.col("username") == "u0")
     assert n == n_days
-    out = read_partitioned(spark, path)
+    out = spark.read.parquet(path)
     assert out.count() == n_days * 2
     assert out.filter(F.col("username") == "u0").count() == 0
 
@@ -574,148 +568,3 @@ def test_lake_delete_matching_many_partitions_bounded_plan(spark, tmp_path):
     # a literal OR-chain would mention dozens of day values; the
     # semi-join plan mentions none outside the (bounded) broadcast
     assert plan.count("2024-01-") < 5
-
-
-class TestCompaction:
-    def _write_splintered(self, spark, path, day, n_files, n_rows):
-        from org_revue_de_presse_trends_spark.sources.lake import (
-            write_partitioned,
-        )
-        from pyspark.sql import functions as F
-
-        df = (
-            spark.range(n_rows)
-            .select(
-                F.col("id"),
-                (F.col("id") * 7 % 100).alias("v"),
-                F.lit(day).alias("day"),
-                F.lit("t").alias("statusType"),
-            )
-            .repartition(n_files)
-        )
-        write_partitioned(df, path, mode="append")
-
-    def _files(self, tmp_path, sub):
-        import os
-
-        d = os.path.join(str(tmp_path), "lake", sub)
-        return [
-            f
-            for f in os.listdir(d)
-            if not f.startswith(("_", ".")) and os.path.isfile(
-                os.path.join(d, f)
-            )
-        ]
-
-    def test_compacts_splinters_and_preserves_content(
-        self, spark, tmp_path
-    ):
-        from org_revue_de_presse_trends_spark.sources.lake import (
-            compact_small_files,
-        )
-
-        path = str(tmp_path / "lake")
-        self._write_splintered(spark, path, "2024-01-01", 8, 500)
-        self._write_splintered(spark, path, "2024-01-02", 1, 100)
-        before = {
-            tuple(r)
-            for r in spark.read.parquet(path)
-            .select("id", "v", "day", "statusType")
-            .collect()
-        }
-        sub1 = "day=2024-01-01/statusType=t"
-        sub2 = "day=2024-01-02/statusType=t"
-        assert len(self._files(tmp_path, sub1)) == 8
-        untouched_before = set(self._files(tmp_path, sub2))
-        stats = compact_small_files(spark, path, target_bytes=1 << 30)
-        assert stats["partitions_compacted"] == 1
-        assert stats["files_before"] == 8
-        assert stats["files_after"] == 1
-        assert len(self._files(tmp_path, sub1)) == 1
-        # untouched partition: same physical files
-        assert set(self._files(tmp_path, sub2)) == untouched_before
-        after = {
-            tuple(r)
-            for r in spark.read.parquet(path)
-            .select("id", "v", "day", "statusType")
-            .collect()
-        }
-        assert after == before  # content untouched, layout only
-
-    def test_compacts_url_escaped_partition_values(
-        self, spark, tmp_path
-    ):
-        # hive URL-escapes special chars in partition directory names
-        # (space -> %20 etc.); the equality filter must compare the
-        # UNESCAPED value or the rewrite silently no-ops (r7 ADVICE)
-        import os
-
-        from pyspark.sql import functions as F
-
-        from org_revue_de_presse_trends_spark.sources.lake import (
-            compact_small_files,
-            write_partitioned,
-        )
-
-        path = str(tmp_path / "lake")
-        df = (
-            spark.range(300)
-            .select(
-                F.col("id"),
-                (F.col("id") * 7 % 100).alias("v"),
-                F.lit("2024 03=01%x").alias("day"),  # space, '=', '%'
-                F.lit("t").alias("statusType"),
-            )
-            .repartition(6)
-        )
-        write_partitioned(df, path, mode="append")
-        lake_dir = os.path.join(str(tmp_path), "lake")
-        (day_dir,) = [
-            d for d in os.listdir(lake_dir) if d.startswith("day=")
-        ]
-        assert "%" in day_dir  # hive really did escape it
-        sub = os.path.join(day_dir, "statusType=t")
-        assert len(self._files(tmp_path, sub)) == 6
-        before = {
-            tuple(r)
-            for r in spark.read.parquet(path)
-            .select("id", "v", "day", "statusType")
-            .collect()
-        }
-        stats = compact_small_files(spark, path, target_bytes=1 << 30)
-        assert stats["partitions_compacted"] == 1
-        assert stats["files_before"] == 6
-        assert stats["files_after"] == 1
-        assert len(self._files(tmp_path, sub)) == 1
-        after = {
-            tuple(r)
-            for r in spark.read.parquet(path)
-            .select("id", "v", "day", "statusType")
-            .collect()
-        }
-        assert after == before
-
-    def test_idempotent_and_over_target_splits(self, spark, tmp_path):
-        from org_revue_de_presse_trends_spark.sources.lake import (
-            compact_small_files,
-        )
-
-        path = str(tmp_path / "lake")
-        self._write_splintered(spark, path, "2024-02-01", 10, 4000)
-        # tiny target: partition is over-target -> several output
-        # files, but fewer than the 10 splinters
-        import os
-
-        sub = "day=2024-02-01/statusType=t"
-        total = sum(
-            os.path.getsize(os.path.join(str(tmp_path), "lake", sub, f))
-            for f in self._files(tmp_path, sub)
-        )
-        target = max(1, total // 3)  # want ~3-4 output files
-        stats = compact_small_files(spark, path, target_bytes=target)
-        n_after = len(self._files(tmp_path, sub))
-        assert stats["partitions_compacted"] == 1
-        assert 1 < n_after < 10
-        # second run: already at/under target file count -> no-op
-        stats2 = compact_small_files(spark, path, target_bytes=target)
-        assert stats2["partitions_compacted"] == 0

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.operators.skew import (
-    key_histogram,
     salted_join,
 )
 
@@ -55,13 +54,6 @@ def test_salted_left_preserves_unmatched(spark, skewed_data):
     }
     assert salted == plain
     assert any(v is None for _, _, v in salted)  # hot key null-extended
-
-
-def test_key_histogram_orders_hot_first(spark, skewed_data):
-    probe, _ = skewed_data
-    rows = key_histogram(probe, "k", top=3).collect()
-    # 1800 hot rows + 4 from the id%50 tail that also lands on k=1
-    assert rows[0]["k"] == 1 and rows[0]["n_rows"] == 1804
 
 
 def test_salted_join_rejects_other_hows(spark, skewed_data):

@@ -1,6 +1,6 @@
-"""Deterministic split / shard assignment (operators/splits.py):
+"""Deterministic split assignment (operators/splits.py):
 exhaustiveness, stability under corpus growth (the leak-free
-property), proportion tolerance, shard balance, manifest shape."""
+property), proportion tolerance."""
 
 from __future__ import annotations
 
@@ -8,10 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.operators.splits import (
-    assign_shard,
     assign_split,
     hash_coin,
-    shard_manifest,
 )
 
 WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -84,37 +82,3 @@ def test_hash_coin_uniform_enough(spark, ids):
     ).collect()[0]
     assert abs(stats["m"] - 0.5) < 0.02
     assert 40 < stats["lo"] < 250 and 40 < stats["hi"] < 250
-
-
-def test_shard_balance_and_manifest(spark, ids):
-    n_shards = 16
-    sharded = assign_shard(ids, n_shards, seed=3)
-    man = {
-        r["shard"]: r["n_docs"]
-        for r in shard_manifest(sharded).collect()
-    }
-    assert set(man) == set(range(n_shards))
-    # xxhash64 balance: each shard within ±25% of the mean
-    mean = 10_000 / n_shards
-    assert all(0.75 * mean < n < 1.25 * mean for n in man.values())
-    # deterministic rerun
-    again = {
-        r["doc_id"]: r["shard"]
-        for r in assign_shard(ids, n_shards, seed=3).collect()
-    }
-    first = {r["doc_id"]: r["shard"] for r in sharded.collect()}
-    assert first == again
-
-
-def test_shard_manifest_with_tokens(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "d e"), (3, "f")], ["doc_id", "text"]
-    )
-    from org_revue_de_presse_trends_spark.functions import text as T
-
-    sharded = assign_shard(df, 2)
-    man = shard_manifest(sharded, T.token_count(F.col("text")))
-    total = man.agg(
-        F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t")
-    ).collect()[0]
-    assert total["d"] == 3 and total["t"] == 6

@@ -1,69 +1,14 @@
-"""Escape-hatch equivalence: pandas UDFs must agree with their JVM
-twins (the declarative path stays the source of truth)."""
+"""Day-partitioned lake: the civil-day filter becomes partition
+pruning.  (The one remaining pandas UDF, ``nfc_normalize_pandas``, is
+checked against DuckDB in test_retrieval.)"""
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.catalog import load_table
-from org_revue_de_presse_trends_spark.functions import vectors as V
-from org_revue_de_presse_trends_spark.functions import text as T
-from org_revue_de_presse_trends_spark.functions.udf_escape import (
-    cosine_pandas,
-    normalize_embedding,
-    token_count_pandas,
-)
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_cosine_pandas_matches_jvm(spark):
-    e = load_table(spark, SF, "embeddings").limit(50)
-    a = e.alias("a")
-    b = e.alias("b")
-    pairs = a.join(
-        b, (F.col("a.vec_id") + 1 == F.col("b.vec_id"))
-    ).select(
-        F.col("a.vec_id").alias("id"),
-        V.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("jvm"),
-        cosine_pandas()(F.col("a.embedding"), F.col("b.embedding")).alias("py"),
-    )
-    for r in pairs.collect():
-        assert math.isclose(r["jvm"], r["py"], rel_tol=1e-9), r
-
-
-def test_normalize_embedding_unit_norm(spark):
-    e = load_table(spark, SF, "embeddings").limit(20)
-    out = e.select(
-        V.norm(normalize_embedding()(F.col("embedding"))).alias("n")
-    ).collect()
-    for r in out:
-        assert math.isclose(r["n"], 1.0, rel_tol=1e-6)
-
-
-def test_token_count_pandas_matches_jvm(spark):
-    d = load_table(spark, SF, "documents").limit(100)
-    out = d.select(
-        F.size(T.tokens(F.col("text"))).cast("long").alias("jvm"),
-        token_count_pandas()(F.col("text")).alias("py"),
-    ).collect()
-    assert all(r["jvm"] == r["py"] for r in out)
-
-
-def test_zscore_apply_in_pandas_matches_jvm(spark):
-    from org_revue_de_presse_trends_spark.operators.grouped import (
-        zscore_apply_in_pandas,
-        zscore_jvm,
-    )
-
-    ev = load_table(spark, SF, "events")
-    jvm = {r["event_id"]: r["z"] for r in zscore_jvm(ev).collect()}
-    py = {r["event_id"]: r["z"] for r in zscore_apply_in_pandas(ev).collect()}
-    assert set(jvm) == set(py) and len(jvm) > 900
-    for k in jvm:
-        assert math.isclose(jvm[k], py[k], rel_tol=1e-9, abs_tol=1e-12), k
 
 
 def test_lake_partition_pruning(spark, tmp_path):

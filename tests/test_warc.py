@@ -202,56 +202,31 @@ def test_write_wet_roundtrip_and_determinism(spark, tmp_path):
     assert got == want
 
 
-def test_payload_digest_and_dedup(spark, tmp_path):
-    """WARC-Payload-Digest rides through the reader and digest_dedup
-    keeps exactly the first occurrence per digest, exempting
-    digest-less records."""
+def test_payload_digest_rides_through_reader(spark, tmp_path):
+    """WARC-Payload-Digest rides through the reader; a record without
+    one (or without a WARC-Date) reads that column as NULL."""
 
     def rec(i, digest, date="2025-01-01T00:00:00Z"):
         h = {
             "WARC-Type": "resource",
             "WARC-Record-ID": f"<urn:d{i}>",
             "WARC-Target-URI": f"http://ex.org/{i}",
-            "WARC-Date": date,
             "Content-Type": "text/plain",
         }
+        if date:
+            h["WARC-Date"] = date
         if digest:
             h["WARC-Payload-Digest"] = digest
         return (h, f"body {i}".encode())
 
-    recs = [
-        rec(0, "sha1:AAA"),
-        rec(1, "sha1:AAA", date="2025-01-02T00:00:00Z"),  # later dup
-        rec(2, "sha1:BBB"),
-        rec(3, None),
-        rec(4, None),
-    ]
+    recs = [rec(0, "sha1:AAA"), rec(1, None), rec(2, "sha1:BBB", date=None)]
     (tmp_path / "d.warc").write_bytes(W.build_warc(recs))
     records = W.read_warc(spark, str(tmp_path))
     by_id = {r["record_id"]: r for r in records.collect()}
     assert by_id["<urn:d0>"]["payload_digest"] == "sha1:AAA"
-    assert by_id["<urn:d3>"]["payload_digest"] is None
-
-    kept = {r["record_id"] for r in W.digest_dedup(records).collect()}
-    assert kept == {"<urn:d0>", "<urn:d2>", "<urn:d3>", "<urn:d4>"}
-
-
-def test_digest_dedup_null_date_still_kept(spark, tmp_path):
-    """Review-caught: a digest group whose keeper has no WARC-Date
-    must still keep one occurrence (null-unsafe equi-join dropped the
-    whole group)."""
-    h = {
-        "WARC-Type": "resource",
-        "WARC-Record-ID": "<urn:nodate>",
-        "WARC-Target-URI": "http://ex.org/nd",
-        "WARC-Payload-Digest": "sha1:CCC",
-        "Content-Type": "text/plain",
-    }
-    (tmp_path / "nd.warc").write_bytes(W.build_warc([(h, b"x")]))
-    records = W.read_warc(spark, str(tmp_path))
-    assert records.collect()[0]["warc_date"] is None
-    kept = W.digest_dedup(records).collect()
-    assert len(kept) == 1 and kept[0]["record_id"] == "<urn:nodate>"
+    assert by_id["<urn:d1>"]["payload_digest"] is None
+    assert by_id["<urn:d2>"]["payload_digest"] == "sha1:BBB"
+    assert by_id["<urn:d2>"]["warc_date"] is None
 
 
 def test_uppercase_content_type_promoted(spark, tmp_path):
@@ -276,56 +251,6 @@ def test_uppercase_content_type_promoted(spark, tmp_path):
     assert row["payload_text"] == "<p>Upper case type.</p>"
     docs = W.warc_html_documents(records).collect()
     assert len(docs) == 1 and docs[0]["text"] == "Upper case type."
-
-
-def test_crawl_stats_wet_only_host_has_zero_ok(spark, tmp_path):
-    """Review-caught: an all-conversion (WET) host must report
-    n_ok = 0, not NULL."""
-    recs = [(
-        {
-            "WARC-Type": "conversion",
-            "WARC-Record-ID": "<urn:w>",
-            "WARC-Target-URI": "http://wet-host.net/x",
-            "WARC-Date": "2025-01-01T00:00:00Z",
-            "Content-Type": "text/plain",
-        },
-        b"plain text",
-    )]
-    (tmp_path / "w.warc").write_bytes(W.build_warc(recs))
-    row = W.crawl_stats(W.read_warc(spark, str(tmp_path))).collect()[0]
-    assert row["n_ok"] == 0 and row["n_records"] == 1
-
-
-def test_crawl_stats_card(spark, tmp_path):
-    recs = [
-        (
-            {
-                "WARC-Type": "response",
-                "WARC-Record-ID": f"<urn:s{i}>",
-                "WARC-Target-URI": f"http://Site-A.com/p{i}",
-                "WARC-Date": "2025-01-01T00:00:00Z",
-                "Content-Type": "application/http; msgtype=response",
-            },
-            W.build_http_response(
-                200 if i < 2 else 404,
-                {"Content-Type": "text/html; charset=utf-8"},
-                b"x" * (10 * (i + 1)),
-            ),
-        )
-        for i in range(3)
-    ]
-    (tmp_path / "s.warc").write_bytes(W.build_warc(recs))
-    (tmp_path / "bad.warc").write_bytes(b"junk not warc")
-    stats = {
-        r["host"]: r for r in W.crawl_stats(
-            W.read_warc(spark, str(tmp_path))
-        ).collect()
-    }
-    a = stats["site-a.com"]
-    assert a["n_records"] == 3 and a["n_ok"] == 2 and a["n_html"] == 3
-    assert a["payload_bytes"] == 10 + 20 + 30
-    # the junk file's error row has no URI: empty host bucket
-    assert stats[""]["n_parse_errors"] == 1
 
 
 def test_roundtrip_fuzz_adversarial_payloads():
@@ -395,44 +320,3 @@ def test_mutation_fuzz_never_crashes():
                 assert r["parse_error"] is None or isinstance(
                     r["parse_error"], str
                 )
-
-
-def test_cdx_index_surt_keys(spark, tmp_path):
-    """CDX index: SURT urlkeys off the CANONICALIZED url (www/port
-    strip, sorted query), compact timestamps, metadata passthrough —
-    two noisy crawls of one logical page share a key."""
-    def rec(i, uri):
-        return (
-            {
-                "WARC-Type": "response",
-                "WARC-Record-ID": f"<urn:c{i}>",
-                "WARC-Target-URI": uri,
-                "WARC-Date": "2025-03-04T05:06:07Z",
-                "WARC-Payload-Digest": f"sha1:D{i}",
-                "Content-Type": "application/http; msgtype=response",
-            },
-            W.build_http_response(
-                200, {"Content-Type": "text/html"}, b"<p>Indexed.</p>"
-            ),
-        )
-
-    recs = [
-        rec(0, "http://www.News.Example.com:80/World/Story?b=2&a=1"),
-        rec(1, "http://news.example.com/World/Story?a=1&b=2"),
-        rec(2, "http://other.org/"),
-    ]
-    (tmp_path / "c.warc").write_bytes(W.build_warc(recs))
-    idx = {
-        r["record_id"]: r
-        for r in W.cdx_index(W.read_warc(spark, str(tmp_path))).collect()
-    }
-    assert (
-        idx["<urn:c0>"]["urlkey"]
-        == idx["<urn:c1>"]["urlkey"]
-        == "com,example,news)/world/story?a=1&b=2"
-    )
-    assert idx["<urn:c2>"]["urlkey"] == "org,other)/"
-    assert idx["<urn:c0>"]["ts"] == "20250304050607"
-    assert idx["<urn:c0>"]["payload_digest"] == "sha1:D0"
-    assert idx["<urn:c0>"]["http_status"] == 200
-    assert idx["<urn:c0>"]["payload_length"] == len(b"<p>Indexed.</p>")

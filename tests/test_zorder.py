@@ -1,15 +1,11 @@
-"""Z-order clustering and parquet min/max data skipping
-(sources/zorder.py)."""
+"""Z-order (Morton) keys and their bucket edges (sources/zorder.py)."""
 
 from __future__ import annotations
-
-import glob
 
 from org_revue_de_presse_trends_spark.sources.zorder import (
     linear_edges,
     quantile_edges,
     with_zorder_key,
-    write_zordered,
 )
 
 
@@ -45,64 +41,3 @@ def test_quantile_edges_spread_skewed_column(spark):
     n_q = qed.select("zkey").distinct().count()
     assert n_q >= 12  # quantile cells cover most of the 16 slots
     assert n_lin <= 6  # linear binning collapses the power-law head
-
-
-def _file_stats(path: str, cols: list[str]) -> list[dict]:
-    import pyarrow.parquet as pq
-
-    out = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo = {c: None for c in cols}
-        hi = {c: None for c in cols}
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                name = col.path_in_schema
-                if name in cols and col.statistics is not None:
-                    s = col.statistics
-                    lo[name] = s.min if lo[name] is None else min(lo[name], s.min)
-                    hi[name] = s.max if hi[name] is None else max(hi[name], s.max)
-        out.append({"lo": lo, "hi": hi})
-    return out
-
-
-def _skippable(stats: list[dict], box: dict) -> float:
-    """Fraction of files whose min/max EXCLUDE the box query."""
-    skipped = 0
-    for st in stats:
-        overlap = all(
-            st["lo"][c] <= b_hi and st["hi"][c] >= b_lo
-            for c, (b_lo, b_hi) in box.items()
-        )
-        if not overlap:
-            skipped += 1
-    return skipped / len(stats)
-
-
-def test_zorder_files_skip_box_queries(spark, tmp_path):
-    from org_revue_de_presse_trends_spark.catalog import load_table
-
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "user_id", "value"
-    )
-    z_path = str(tmp_path / "z")
-    flat_path = str(tmp_path / "flat")
-    write_zordered(ev, z_path, ["user_id", "value"], bits=8, n_files=8)
-    ev.repartition(8).write.mode("overwrite").parquet(flat_path)
-
-    cols = ["user_id", "value"]
-    z_stats = _file_stats(z_path, cols)
-    f_stats = _file_stats(flat_path, cols)
-    assert len(z_stats) >= 6
-    # a small box on BOTH axes: z-ordered files carry tight per-file
-    # ranges on both columns, the unordered layout spans everything
-    lo_u = sorted(s["lo"]["user_id"] for s in z_stats)[0]
-    box = {"user_id": (lo_u, lo_u + 5), "value": (0.0, 3.0)}
-    assert _skippable(z_stats, box) >= 0.5
-    assert _skippable(f_stats, box) <= 0.25
-    # correctness: clustering must not change the data
-    a = sorted(map(tuple, spark.read.parquet(z_path).collect()))
-    b = sorted(map(tuple, ev.collect()))
-    assert a == b
