@@ -57,6 +57,19 @@ def civil_date(s: str) -> str:
     return s
 
 
+def non_negative_int(s: str) -> int:
+    """argparse type for --limit/--page: an integer >= 0.
+
+    The plan skips LIMIT/OFFSET for values <= 0, so a negative value
+    would publish the whole day, where the reference's Postgres
+    rejects a negative LIMIT.  A non-integer raises ValueError, which
+    argparse reports as an invalid value."""
+    n = int(s)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must not be negative: {s!r}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="trends-spark",
@@ -93,8 +106,8 @@ def build_parser() -> argparse.ArgumentParser:
         help="civil day YYYY-MM-DD (default: today, trends.go:98)",
     )
     p.add_argument("--distinct-sources-only", action="store_true")
-    p.add_argument("--limit", type=int, default=10)
-    p.add_argument("--page", type=int, default=0)
+    p.add_argument("--limit", type=non_negative_int, default=10)
+    p.add_argument("--page", type=non_negative_int, default=0)
     # the reference launcher passes -in-parallel=true (fun.sh:393-404)
     parity = "accepted for launcher parity; the sink sends one request per run"
     p.add_argument("--in-parallel", dest="in_parallel", action="store_true",
@@ -145,6 +158,22 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
             build_parser().error(
                 "--publishers-list-id is required (or List_Id in --config)"
             )
+    # refuse bad flag combinations before any Spark work, so neither
+    # --dry-mode nor a --lake-dir write runs ahead of the refusal
+    if args.firebase_config and (cfg is None or not cfg.firebase_url):
+        build_parser().error(
+            "--firebase-config requires --config with a non-empty "
+            "Firebase_url (the sink flag would otherwise be silently "
+            "ignored)"
+        )
+    if args.since_last_week and (args.sink_dir or args.firebase_config):
+        # the document sink expects 12-field highlight records; raw
+        # statuses have no statusType/popularity — refuse loudly
+        # instead of printing to stdout with exit 0
+        build_parser().error(
+            "--since-last-week writes raw statuses: use --lake-dir "
+            "or stdout, not --sink-dir or the Firebase sink"
+        )
     if args.tz is not None:
         # validate eagerly: Spark only checks zone ids at execution,
         # which --dry-mode never reaches
@@ -190,21 +219,6 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
     if args.since_last_week:
         from pyspark.sql import functions as F
 
-        if args.sink_dir:
-            # the document sink expects 12-field highlight records;
-            # raw statuses have no statusType/popularity — refuse
-            # loudly instead of printing to stdout with exit 0
-            build_parser().error(
-                "--since-last-week writes raw statuses: use --lake-dir "
-                "or stdout, not --sink-dir"
-            )
-        if args.firebase_config and cfg is not None and cfg.firebase_url:
-            # same rationale: a configured Firebase sink would otherwise
-            # be silently ignored while we print to stdout with exit 0
-            build_parser().error(
-                "--since-last-week writes raw statuses: use --lake-dir "
-                "or stdout, not the Firebase sink"
-            )
         from .functions.expressions import civil_day
 
         df = pipe.last_week_statuses(now=args.since_date)
@@ -270,53 +284,39 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 d, args.lake_dir, partition_by=("day", "statusType")
             ),
         )
-    if args.firebase_config and (cfg is None or not cfg.firebase_url):
-        build_parser().error(
-            "--firebase-config requires --config with a non-empty "
-            "Firebase_url (the sink flag would otherwise be silently "
-            "ignored)"
-        )
-    use_firebase = (
-        not args.sink_dir
-        and cfg is not None
-        and cfg.firebase_url
-        and args.firebase_config
-    )
+    # --firebase-config implies a Firebase_url (checked above)
+    use_firebase = not args.sink_dir and args.firebase_config
     if args.sink_dir:
         from .sources.document_sink import (
             LocalFSDocumentStore,
             write_highlights,
         )
 
-        root = args.sink_dir
+        store = LocalFSDocumentStore(args.sink_dir)
         materialize(
             "highlights:document_sink",
             result,
             lambda d: write_highlights(
                 d,
-                lambda: LocalFSDocumentStore(root),
+                store,
                 list_id=args.publishers_list_id,
                 since_date=args.since_date,
             ),
         )
     elif use_firebase:
-        from .sources.document_sink import write_highlights
+        from .sources.config import token_provider_from_firebase_config
+        from .sources.document_sink import FirebaseRESTStore, write_highlights
 
-        fb_url, fb_cfg = cfg.firebase_url, args.firebase_config
-
-        def firebase_factory(url=fb_url, key_path=fb_cfg):
-            from .sources.config import token_provider_from_firebase_config
-            from .sources.document_sink import FirebaseRESTStore
-
-            provider = token_provider_from_firebase_config(key_path)
-            return FirebaseRESTStore(url, token_provider=provider.token)
-
+        provider = token_provider_from_firebase_config(args.firebase_config)
+        store = FirebaseRESTStore(
+            cfg.firebase_url, token_provider=provider.token
+        )
         materialize(
             "highlights:firebase_sink",
             result,
             lambda d: write_highlights(
                 d,
-                firebase_factory,
+                store,
                 list_id=args.publishers_list_id,
                 since_date=args.since_date,
             ),

@@ -197,15 +197,6 @@ def encode_png(img: np.ndarray) -> bytes:
     )
 
 
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize (H, W, C) → (height, width, C) — pure
-    integer index math, deterministic across platforms."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height, dtype=np.int64) * h) // height
-    xs = (np.arange(width, dtype=np.int64) * w) // width
-    return img[ys][:, xs]
-
-
 def decode_image(payload: bytes) -> np.ndarray:
     """Image bytes → uint8 (H, W, C): stdlib for PNG and JPEG (baseline
     + progressive); PIL for the rest (GIF, BMP, WebP, ...) when

@@ -47,43 +47,6 @@ def lsh_band_keys_expr(
     return F.expr(f"array({parts})")
 
 
-def simhash64(token_arr: Column) -> Column:
-    """64-bit SimHash over a token array.
-
-    For each bit position j, sum +1/-1 across tokens according to bit j
-    of xxhash64(token); bit j of the result is 1 iff the sum > 0.
-    Pure JVM expression: one xxhash64 per token, then a 64-slot count
-    accumulator (bit positions unrolled at plan-build time because
-    shift amounts must be literals).
-    """
-    import functools
-
-    def bits_pm1(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-                ).otherwise(F.lit(-1))
-                for j in range(64)
-            ]
-        )
-
-    contrib = F.transform(token_arr, lambda t: bits_pm1(F.xxhash64(t)))
-    counts = F.aggregate(
-        contrib,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-    )
-    bit_terms = [
-        F.when(
-            F.element_at(counts, j + 1) > 0,
-            F.shiftleft(F.lit(1).cast("long"), j),
-        ).otherwise(F.lit(0).cast("long"))
-        for j in range(64)
-    ]
-    return functools.reduce(lambda a, b: a.bitwiseOR(b), bit_terms)
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit hashes (bit_count of xor)."""
     return F.bit_count(a.bitwiseXOR(b))

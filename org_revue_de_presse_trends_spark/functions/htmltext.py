@@ -132,7 +132,3 @@ def html_text_col(html: str) -> Column:
     """Spark Column: extracted plain text of the HTML column named
     ``html`` (one parsed expression)."""
     return F.expr(html_to_text_sql("spark", html))
-
-
-def html_title_col(html: str) -> Column:
-    return F.expr(html_title_sql("spark", html))

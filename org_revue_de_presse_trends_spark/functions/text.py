@@ -99,80 +99,57 @@ def fingerprint(text: Column) -> Column:
     return F.md5(F.lower(F.trim(text)))
 
 
-def _combine_kgrams(th: Column, k: int) -> Column:
-    """Rotate-xor combination of k consecutive token hashes (position-
-    dependent, overflow-free under ANSI mode).  zip_with over k shifted
-    slices — linear work; referencing the whole array inside a
-    per-element lambda would re-evaluate it per element (O(n²) per
-    document).  ``th`` should be a column ATTRIBUTE when possible:
+#: lambda bodies for :func:`_kgram_windows_sql` (``a`` is the fold so
+#: far, ``b`` the next member of the window)
+_ROTATE_XOR = "(shiftrightunsigned(a, 7) | shiftleft(a, 57)) ^ b"
+_CONCAT = "concat_ws(' ', a, b)"
+_LEAST = "least(a, b)"
+
+
+def _kgram_windows_sql(arr: str, k: int, combine: str) -> str:
+    """SQL text folding every k consecutive elements of the array
+    column ATTRIBUTE ``arr`` with the lambda body ``combine``: one
+    array element per window position, ``max(size - k + 1, 1)`` of
+    them.
+
+    Rotate-xor gives position-dependent k-gram hashes (overflow-free
+    under ANSI mode), ``concat_ws`` the k-gram strings and ``least``
+    a sliding min.  zip_with over k shifted slices is linear work; a
+    per-element lambda referencing the whole array would re-evaluate
+    it per element (O(n²) per document).  ``arr`` must be an attribute:
     interpreted HOF eval recomputes a non-attribute subtree once per
-    slice reference (k times)."""
-    n = F.size(th)
-
-    def rot(c: Column, r: int) -> Column:
-        return F.shiftrightunsigned(c, r).bitwiseOR(F.shiftleft(c, 64 - r))
-
-    win = F.greatest(n - F.lit(k - 1), F.lit(1))
-    combined = F.slice(th, 1, win)
+    slice reference.  zip_with pads a short slice with null, which
+    ``concat_ws`` and ``least`` skip, so an array shorter than k still
+    yields one window.  One parsed expression instead of ~20 py4j
+    round-trips per k (the plan-build tax)."""
+    win = f"greatest(size({arr}) - {k - 1}, 1)"
+    out = f"slice({arr}, 1, {win})"
     for j in range(1, k):
-        combined = F.zip_with(
-            combined,
-            F.slice(th, j + 1, win),
-            lambda a, b: rot(a, 7).bitwiseXOR(b),
+        out = (
+            f"zip_with({out}, slice({arr}, {j + 1}, {win}), "
+            f"(a, b) -> {combine})"
         )
-    return combined
-
-
-def _combine_kgrams_sql(th_name: str, k: int) -> str:
-    """SQL text of :func:`_combine_kgrams` over a column ATTRIBUTE
-    named ``th_name`` — one parse instead of ~20 py4j round-trips per
-    k; parses to the identical expression tree (goldens unchanged)."""
-    win = f"greatest(size({th_name}) - {k - 1}, 1)"
-    combined = f"slice({th_name}, 1, {win})"
-    for j in range(1, k):
-        combined = (
-            f"zip_with({combined}, slice({th_name}, {j + 1}, {win}), "
-            "(a, b) -> (shiftrightunsigned(a, 7) | shiftleft(a, 57)) ^ b)"
-        )
-    return combined
-
-
-def _rolling_kgram_hashes(toks: Column, k: int) -> Column:
-    """ORDERED rolling hashes of k-token windows (array<long>, one per
-    window position): hash each token once, then rotate-xor combine."""
-    return _combine_kgrams(F.transform(toks, lambda t: F.xxhash64(t)), k)
-
-
-def shingle_hashes(text: Column, k: int = 3) -> Column:
-    """Distinct 64-bit fingerprints of k-word shingles (array<long>)
-    WITHOUT materializing shingle strings — ~3× cheaper; used by
-    MinHash where only a fingerprint is needed (exact-Jaccard keeps
-    real strings).  Prefer ``with_shingle_hashes`` in DataFrame
-    contexts (stages the token/hash levels as attributes; this Column
-    form re-tokenizes k+1 times per row under interpreted HOF eval)."""
-    toks = tokens(text)
-    n = F.size(toks)
-    return F.when(
-        n < F.lit(k), F.array(F.xxhash64(F.concat_ws(" ", toks)))
-    ).otherwise(F.array_distinct(_rolling_kgram_hashes(toks, k)))
+    return out
 
 
 def with_shingle_hashes(
     df, text_col: str = "text", out_col: str = "sh", k: int = 3
 ):
-    """DataFrame-level ``shingle_hashes`` with each level staged as a
-    column attribute (see ``with_winnow_fingerprints`` for why) —
-    identical values, tokenization/hashing evaluated once per row.
-    (An O(log k)-pass doubling combine measured 2.3× slower at k=13/sf0.1:
-    each staged level copies a full-length array attribute.)
+    """Distinct 64-bit fingerprints of k-word shingles (array<long>)
+    WITHOUT materializing shingle strings — ~3× cheaper; used by
+    MinHash where only a fingerprint is needed (exact-Jaccard keeps
+    real strings).  A document shorter than k tokens gets the hash of
+    its whole text.  Each level is staged as a column attribute (see
+    ``with_winnow_fingerprints`` for why), so tokenization and hashing
+    run once per row.  (An O(log k)-pass doubling combine measured
+    2.3× slower at k=13/sf0.1: each staged level copies a full-length
+    array attribute.)
     """
     rest = list(df.columns)
     # every stage as ONE parsed SQL expression: the Column-by-Column
     # construction cost ~0.2 s of driver plan-build per call (~60 py4j
-    # round-trips through slices/lambdas/rotates — the plan-build tax,
-    # CLAUDE.md).  The SQL text parses to the same expression trees:
-    # rot(a,7) = shiftrightunsigned|shiftleft(57), xor via ^ — values
-    # bit-identical, pinned by the goldens.
+    # round-trips through slices/lambdas/rotates, the plan-build tax);
+    # values are pinned by the goldens
     d1 = df.select(
         *rest, F.expr(f"split(`{text_col}`, ' ')").alias("__sh_toks")
     )
@@ -184,7 +161,9 @@ def with_shingle_hashes(
     d3 = d2.select(
         *rest,
         "__sh_toks",
-        F.expr(_combine_kgrams_sql("__sh_th", k)).alias("__sh_comb"),
+        F.expr(_kgram_windows_sql("__sh_th", k, _ROTATE_XOR)).alias(
+            "__sh_comb"
+        ),
     )
     out = F.expr(
         f"CASE WHEN size(__sh_toks) < {k} THEN "
@@ -197,74 +176,23 @@ def with_shingle_hashes(
 def with_shingles(
     df, text_col: str = "text", out_col: str = "sh", k: int = 3
 ):
-    """DataFrame-level ``shingles`` (string k-grams) with the token
-    array staged as an attribute — identical values, one tokenization
-    per row instead of k+2."""
+    """Distinct k-word shingles (array<string>); a document shorter than
+    k tokens is one shingle of its whole text.  The token array is
+    staged as an attribute, so each row is tokenized once instead of
+    k+2 times."""
     rest = list(df.columns)
     # one parsed expression per stage (plan-build tax — see
-    # with_shingle_hashes); trees and values identical
+    # with_shingle_hashes)
     d1 = df.select(
         *rest, F.expr(f"split(`{text_col}`, ' ')").alias("__sg_toks")
     )
-    win = f"greatest(size(__sg_toks) - {k - 1}, 1)"
-    combined = f"slice(__sg_toks, 1, {win})"
-    for j in range(1, k):
-        combined = (
-            f"zip_with({combined}, slice(__sg_toks, {j + 1}, {win}), "
-            "(a, b) -> concat_ws(' ', a, b))"
-        )
+    combined = _kgram_windows_sql("__sg_toks", k, _CONCAT)
     out = F.expr(
         f"CASE WHEN size(__sg_toks) < {k} THEN "
         "array(concat_ws(' ', __sg_toks)) "
         f"ELSE array_distinct({combined}) END"
     )
     return d1.select(*rest, out.alias(out_col))
-
-
-def winnow_fingerprints(text: Column, k: int = 5, w: int = 4) -> Column:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    "Winnowing: Local Algorithms for Document Fingerprinting",
-    SIGMOD'03 — public algorithm): the min of every ``w``-window of the
-    rolling k-gram hash sequence, distinct (array<long>).
-
-    Guarantee: two documents sharing a token run of length
-    >= w + k - 1 share at least one fingerprint, while only
-    ~2/(w+1) of all k-gram hashes are kept — a tunable-density
-    candidate-blocking key for near-dup detection (explode + equi-join
-    on fingerprint, the same scale shape as every other dedup path).
-    The sliding min is w-1 zip_with(least) passes over shifted slices —
-    linear, no per-element slicing.
-
-    PERFORMANCE: higher-order functions are interpreted, and
-    interpreted eval re-evaluates a subtree once per REFERENCE — this
-    single-Column form references the rolling-hash tree w times and the
-    token tree k times within it (≈ k·w tokenizations per row,
-    measured ~10× slower).  Prefer ``with_winnow_fingerprints`` (the
-    DataFrame form used by the engine's own query/operator paths),
-    which stages each level as a column attribute so it is evaluated
-    exactly once per row; this Column form is kept for expression-only
-    contexts.
-    """
-    toks = tokens(text)
-    hs = _rolling_kgram_hashes(toks, k)
-    mins = _sliding_min(hs, w)
-    return F.when(
-        F.size(tokens(text)) < F.lit(k),
-        F.array(F.xxhash64(F.concat_ws(" ", toks))),
-    ).otherwise(F.array_distinct(mins))
-
-
-def _sliding_min(hs: Column, w: int) -> Column:
-    n_h = F.size(hs)
-    win = F.greatest(n_h - F.lit(w - 1), F.lit(1))
-    # zip_with pads the shorter (shifted) side with null; least()
-    # ignores nulls, so short tails still produce a valid window min
-    mins = F.slice(hs, 1, win)
-    for j in range(1, w):
-        mins = F.zip_with(
-            mins, F.slice(hs, j + 1, win), lambda a, b: F.least(a, b)
-        )
-    return mins
 
 
 def with_winnow_fingerprints(
@@ -274,37 +202,52 @@ def with_winnow_fingerprints(
     k: int = 5,
     w: int = 4,
 ):
-    """DataFrame-level winnowing: identical values to
-    ``winnow_fingerprints`` (same expressions), but each level (tokens
-    → rolling k-gram hashes → sliding min) is materialized as a column
-    ATTRIBUTE behind a projection boundary, so interpreted HOF eval
-    computes it once per row instead of once per reference
-    (CollapseProject keeps the boundaries: the aliases are non-cheap
-    and referenced more than once).  Measured ~10× faster at sf0.1.
-    Returns df with ``out_col`` added and no other column changes."""
-    rest = [c for c in df.columns]
-    d1 = df.select(*rest, tokens(F.col(text_col)).alias("__wf_toks"))
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
+    "Winnowing: Local Algorithms for Document Fingerprinting",
+    SIGMOD'03 — public algorithm): the min of every ``w``-window of the
+    rolling k-gram hash sequence, distinct (array<long>).  Returns df
+    with ``out_col`` added and no other column changes.
+
+    Guarantee: two documents sharing a token run of length
+    >= w + k - 1 share at least one fingerprint, while only
+    ~2/(w+1) of all k-gram hashes are kept — a tunable-density
+    candidate-blocking key for near-dup detection (explode + equi-join
+    on fingerprint, the same scale shape as every other dedup path).
+    A document shorter than k tokens gets the hash of its whole text.
+
+    Each level (tokens → token hashes → rolling k-gram hashes →
+    sliding min) is materialized as a column ATTRIBUTE behind a
+    projection boundary: higher-order functions are interpreted, and
+    interpreted eval re-evaluates a subtree once per REFERENCE, so an
+    unstaged expression re-tokenizes ≈ k·w times per row (measured
+    ~10× slower at sf0.1).  CollapseProject keeps the boundaries: the
+    aliases are non-cheap and referenced more than once."""
+    rest = list(df.columns)
+    d1 = df.select(
+        *rest, F.expr(f"split(`{text_col}`, ' ')").alias("__wf_toks")
+    )
     d1b = d1.select(
         *rest,
         "__wf_toks",
-        F.transform(F.col("__wf_toks"), lambda t: F.xxhash64(t)).alias(
-            "__wf_th"
-        ),
+        F.expr("transform(__wf_toks, t -> xxhash64(t))").alias("__wf_th"),
     )
     d2 = d1b.select(
         *rest,
         "__wf_toks",
-        _combine_kgrams(F.col("__wf_th"), k).alias("__wf_hs"),
+        F.expr(_kgram_windows_sql("__wf_th", k, _ROTATE_XOR)).alias(
+            "__wf_hs"
+        ),
     )
     d3 = d2.select(
         *rest,
         "__wf_toks",
-        _sliding_min(F.col("__wf_hs"), w).alias("__wf_mins"),
+        F.expr(_kgram_windows_sql("__wf_hs", w, _LEAST)).alias("__wf_mins"),
     )
-    fps = F.when(
-        F.size(F.col("__wf_toks")) < F.lit(k),
-        F.array(F.xxhash64(F.concat_ws(" ", F.col("__wf_toks")))),
-    ).otherwise(F.array_distinct(F.col("__wf_mins")))
+    fps = F.expr(
+        f"CASE WHEN size(__wf_toks) < {k} THEN "
+        "array(xxhash64(concat_ws(' ', __wf_toks))) "
+        "ELSE array_distinct(__wf_mins) END"
+    )
     return d3.select(*rest, fps.alias(out_col))
 
 
@@ -340,28 +283,6 @@ def chunks_from_tokens(
     )
 
 
-def shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles (array<string>), distinct.
-
-    Built by zip_with over k shifted slices of the token array —
-    linear work (slicing inside a per-element lambda re-evaluates the
-    array per element: O(n²) per document).
-    """
-    toks = tokens(text)
-    n = F.size(toks)
-    win = F.greatest(n - F.lit(k - 1), F.lit(1))
-    combined = F.slice(toks, 1, win)
-    for j in range(1, k):
-        combined = F.zip_with(
-            combined,
-            F.slice(toks, j + 1, win),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-    return F.when(
-        n < F.lit(k), F.array(F.concat_ws(" ", toks))
-    ).otherwise(F.array_distinct(combined))
-
-
 def with_repetition_signals(
     df,
     text_col: str = "text",
@@ -383,8 +304,8 @@ def with_repetition_signals(
     aggregation (count per (doc, gram) map-side combines before the
     shuffle — at 100 TB the exchange carries one row per DISTINCT gram
     per doc, not per occurrence) and join back on ``id_col``.
-    Ordered (non-distinct) n-gram fingerprints reuse the staged
-    rolling-hash pipeline of ``with_shingle_hashes``.
+    Ordered (non-distinct) n-gram fingerprints are the rolling hashes
+    of ``with_shingle_hashes`` before its distinct step.
     """
     rest = list(df.columns)
     lines = F.filter(
@@ -410,9 +331,9 @@ def with_repetition_signals(
     )
     d3 = d2.select(
         *with_lines.columns,
-        F.when(
-            F.size("__rt") < F.lit(n), F.array()
-        ).otherwise(_combine_kgrams(F.col("__rh"), n)).alias("__rng"),
+        F.when(F.size("__rt") < F.lit(n), F.array())
+        .otherwise(F.expr(_kgram_windows_sql("__rh", n, _ROTATE_XOR)))
+        .alias("__rng"),
     )
     occ = d3.select(
         F.col(id_col).alias("__rid"), F.explode("__rng").alias("g")

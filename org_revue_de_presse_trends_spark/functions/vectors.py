@@ -56,17 +56,6 @@ def dot_scaled(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_exact(a: Column, b: Column) -> Column:
-    """Cross-engine-deterministic cosine: the 1e6 scaling cancels
-    between numerator and the two norms, so dividing the scaled longs
-    directly yields the true cosine."""
-    return (
-        dot_scaled(a, b).cast("double")
-        / F.sqrt(dot_scaled(a, a).cast("double"))
-        / F.sqrt(dot_scaled(b, b).cast("double"))
-    )
-
-
 def blocked_cosine_pairs(vecs, threshold: float, block: int):
     """Numpy kernel shared by the applyInPandas pair stages
     (semdedup cells, SRP-LSH buckets): all strict-upper-triangle index

@@ -52,7 +52,7 @@ def _ngram_hashes(
     token rows and keeps the per-row work in whole-stage codegen
     (measured 3× at sf0.1: 1.65 s → 0.62 s).  Documents shorter than
     ``n`` tokens contribute their whole-text hash, matching
-    ``shingle_hashes``' fallback.
+    ``with_shingle_hashes``' fallback.
 
     Giant-document guard: the lag window is salted by token BLOCK —
     partitionBy(doc, p div B) instead of partitionBy(doc) — so one

@@ -348,9 +348,10 @@ def simhash_pairs(
     Returns (id_a, id_b, hamming).
     """
     # explode + 64 grouped sums (one xxhash64 per token, bit tests on
-    # the long) — same restructure as minhash_signatures: the pure
-    # column-expression simhash64() nests 64-wide arrays per token and
-    # codegens poorly on wide documents.
+    # the long) — same restructure as minhash_signatures: a per-row
+    # column expression (a 64-wide ±1 array per token, folded by
+    # zip_with) nests arrays per token and codegens poorly on wide
+    # documents.
     tok = df.select(
         F.col(id_col).cast("long").alias("id"),
         F.explode(T.tokens(F.col(text_col))).alias("t"),

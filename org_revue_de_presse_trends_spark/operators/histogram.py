@@ -70,18 +70,6 @@ def histogram(
     )
 
 
-def histogram_merge(
-    a: DataFrame, b: DataFrame, group_cols: Sequence[str] = ()
-) -> DataFrame:
-    """union + per-bin SUM — the map-side-combinable merge that makes
-    per-partition / per-day histograms roll up without a rescan."""
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "bin")
-        .agg(F.sum("c").alias("c"))
-    )
-
-
 def histogram_quantiles(
     hist: DataFrame,
     qs: Sequence[float],

@@ -109,20 +109,6 @@ def hll_registers(
     )
 
 
-def hll_merge(
-    reg_a: DataFrame, reg_b: DataFrame, group_cols: Sequence[str]
-) -> DataFrame:
-    """Merge two register tables: UNION ALL + per-bucket MAX.  Exactly
-    ``hll_registers(A ∪ B)`` (max is associative/commutative/
-    idempotent over the per-row ranks) — the property that lets
-    per-partition / per-day sketches roll up without a rescan."""
-    return (
-        reg_a.unionByName(reg_b)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("r").alias("r"))
-    )
-
-
 def hll_estimate(
     reg: DataFrame, group_cols: Sequence[str], p: int = 8
 ) -> DataFrame:

@@ -14,7 +14,7 @@ The DECODE step is pluggable via ``decoder=``:
 - ``"stub"`` — always raises: the explicit no-codec boundary.
 
 Scale design: mapInPandas streams Arrow record batches through Python
-once (no per-row overhead), feature extraction is embarrassingly
+once (no per-row overhead), per-item hashing is embarrassingly
 parallel, and ``repartition`` before the map sizes the Python worker
 batches; binaries never pass through the driver.
 """
@@ -46,126 +46,6 @@ MEDIA_SCHEMA = T.StructType(
         ),
     ]
 )
-
-FEATURE_SCHEMA = (
-    "media_id LONG, kind STRING, n_bytes LONG, byte_mean DOUBLE, "
-    "byte_entropy DOUBLE, content_hash STRING, feature ARRAY<FLOAT>"
-)
-
-
-def _byte_stats(arr) -> tuple[float, float, list[float]]:
-    """(mean, entropy, 8-bucket histogram) over a uint8 array.
-
-    The kernel is numpy end-to-end (frombuffer + bincount): a per-byte
-    Python loop here defeats the point of Arrow batching — measured 8×
-    faster on 4 KiB payloads, and the gap widens with payload size."""
-    import numpy as np
-
-    n = arr.size
-    if n == 0:
-        return 0.0, 0.0, [0.0] * 8
-    counts = np.bincount(arr.reshape(-1), minlength=256)
-    mean = float(arr.sum(dtype=np.int64)) / n
-    p = counts[counts > 0] / n
-    entropy = float(-(p * np.log2(p)).sum())
-    feature = (counts.reshape(8, 32).sum(axis=1) / n).tolist()
-    return mean, entropy, feature
-
-
-def _decode_payload(payload: bytes, kind: str, decoder: str):
-    """The codec boundary: returns (mean, entropy, feature[8]).
-
-    'fake' computes the stats over the RAW payload bytes; 'auto' REALLY
-    decodes (stdlib PNG/WAV, PIL/ffmpeg when installed) and computes
-    the same stats over decoded pixels / quantized audio samples, so
-    the two paths share one schema and one downstream contract."""
-    import numpy as np
-
-    if decoder == "stub":
-        raise NotImplementedError(
-            "media decoding requires codec libraries not present in this "
-            "environment; use decoder='fake' for the deterministic "
-            "byte-level path"
-        )
-    if decoder in ("auto", "real"):
-        from ..functions import codecs
-
-        if not payload:
-            return 0.0, 0.0, [0.0] * 8
-        if kind == "image":
-            return _byte_stats(codecs.decode_image(payload).reshape(-1))
-        if kind == "audio":
-            if codecs.sniff_format(payload) != "wav":
-                raise NotImplementedError(
-                    "only WAV audio decodes natively; other formats need "
-                    "an audio library not present in this environment"
-                )
-            samples, _rate = codecs.decode_wav(payload)
-            # quantize [-1, 1] → uint8 bins so image/audio share stats
-            q = np.clip((samples.reshape(-1) + 1.0) * 127.5, 0, 255)
-            return _byte_stats(q.astype(np.uint8))
-        if kind == "video":
-            # WebM/VP8 decodes natively (container_webm + codec_vp8);
-            # other containers/codecs need ffmpeg and raise without it.
-            # Stats over the first frame's pixels (duration unknown at
-            # this boundary; one probe frame at t=0 is the feature).
-            frames = codecs.extract_video_frames(
-                payload, every_ms=1000, duration_ms=1
-            )
-            if not frames:
-                return 0.0, 0.0, [0.0] * 8
-            return _byte_stats(
-                codecs.decode_image(frames[0][1]).reshape(-1)
-            )
-        raise NotImplementedError(
-            f"no decoder for kind={kind!r} in this environment"
-        )
-    if decoder != "fake":
-        raise ValueError(f"unknown decoder {decoder!r}")
-    if not payload:
-        return 0.0, 0.0, [0.0] * 8
-    return _byte_stats(np.frombuffer(payload, dtype=np.uint8))
-
-
-def extract_media_features(
-    media: DataFrame, decoder: str = "fake", batch_partitions: int | None = None
-) -> DataFrame:
-    """(media_id, kind, n_bytes, byte_mean, byte_entropy, content_hash,
-    feature) via mapInPandas over Arrow batches."""
-    if batch_partitions:
-        media = media.repartition(batch_partitions)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
-
-        import pandas as pd
-
-        # column-wise zip, not iterrows(): iterrows materializes a
-        # pandas Series per row (measured dominant at 10⁴ rows)
-        for pdf in batches:
-            out = {
-                "media_id": [], "kind": [], "n_bytes": [], "byte_mean": [],
-                "byte_entropy": [], "content_hash": [], "feature": [],
-            }
-            for media_id, kind, raw in zip(
-                pdf["media_id"].values, pdf["kind"].values,
-                pdf["payload"].values,
-            ):
-                payload = bytes(raw) if raw is not None else b""
-                mean, entropy, feature = _decode_payload(
-                    payload, kind, decoder
-                )
-                out["media_id"].append(media_id)
-                out["kind"].append(kind)
-                out["n_bytes"].append(len(payload))
-                out["byte_mean"].append(mean)
-                out["byte_entropy"].append(entropy)
-                out["content_hash"].append(hashlib.md5(payload).hexdigest())
-                out["feature"].append(feature)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
 
 def sample_video_frames(
     media: DataFrame, every_ms: int = 1000, decoder: str = "fake"
@@ -494,8 +374,7 @@ def audio_fingerprints(
     the stdlib codec; 'fake' fingerprints a pseudo-signal from the
     raw bytes).  Non-audio rows are filtered out when ``kind`` is
     present; empty/NULL payloads fingerprint to NULL; non-WAV audio
-    raises the module's NotImplementedError codec boundary, matching
-    ``_decode_payload``."""
+    raises the module's NotImplementedError codec boundary."""
     import numpy as np
 
     if "kind" in media.columns:

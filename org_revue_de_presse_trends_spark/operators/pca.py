@@ -1,36 +1,16 @@
-"""Distributed PCA for embedding columns — covariance, principal
-components, and projection (the whitening/dimensionality-reduction
-stage in front of clustering, IVF, and semantic dedup).
+"""Exact covariance of an embedding column — the second-moment
+statistic behind PCA whitening in front of clustering, IVF and
+semantic dedup.
 
-Two formulations, house-style:
-
-- ``covariance_exact`` — the cross-engine VALIDATOR.  Per-row
-  products are rounded to scaled longs (coordinate scale 10⁶, product
-  scale 10¹² = its square), the reduces are exact integer sums, and
-  the final covariance is one pinned IEEE expression over those sums
-  — value-identical in any engine, at any partitioning
-  (plans/graph_ext.embedding_pca_covariance oracles it in DuckDB).
-  Cost is n·d²/2 expanded rows: fine as a correctness gate, not the
-  100 TB path.
-- ``gram_and_mean`` / ``pca_components`` / ``pca_project`` — the
-  scale path: one ``mapInPandas`` pass emits a dim×dim BLAS partial
-  Gram matrix + coordinate sums PER PARTITION (d² floats each, ~32 KB
-  at d=64 — the only thing that ever reaches the driver), the driver
-  sums partials, eigendecomposes the d×d covariance with numpy, and
-  projection is one X @ Wᵀ matmul per batch (the r5b
-  vector-pair-scoring lesson: BLAS batches what per-element
-  expressions evaluate one at a time).  n never matters driver-side;
-  d² does — the classic tall-skinny regime (d ≤ a few thousand).
-
-Eigenvector sign is normalized (largest-|coefficient| entry positive,
-lowest index on ties) so components are deterministic up to numpy's
-eigh, which is golden-pinned in tests rather than oracled — LAPACK is
-not bit-pinned across engines, covariance is.
+``covariance_exact`` is value-identical in any engine: per-row
+products are rounded to scaled longs (coordinate scale 10⁶, product
+scale 10¹² = its square), the reduces are exact integer sums, and the
+final covariance is one pinned IEEE expression over those sums, at any
+partitioning (plans/retrieval_ext.embedding_pca_covariance oracles it
+in DuckDB).  Cost is n·d²/2 expanded rows.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -55,7 +35,7 @@ def covariance_exact(
     is one pinned expression tree over exact integers — IEEE-identical
     cross-engine.  Exactness budget: |x| ≤ 1 keeps each term ≤ 10¹²,
     so sums are exact up to ~9·10⁶ rows; larger corpora should lower
-    the scales (or use the Gram path, which this validates).
+    the scales.
 
     Rows must carry exactly ``dim`` coordinates — under ANSI mode a
     shorter array fails loudly instead of silently truncating."""
@@ -106,120 +86,3 @@ def covariance_exact(
             F.round(exy - mean_i * mean_j, 9).alias("cov"),
         )
     )
-
-
-def gram_and_mean(
-    emb: DataFrame, dim: int, vec_col: str = "embedding"
-):
-    """One distributed pass → (gram dim×dim np.ndarray, mean np 1-d,
-    n).  Each partition ships one d²-float partial (the ONLY
-    driver-bound data — independent of n)."""
-    import numpy as np
-
-    d = dim
-
-    def partials(it: Iterator) -> Iterator:
-        import numpy as _np
-        import pandas as _pd
-
-        g = _np.zeros((d, d), dtype=_np.float64)
-        s = _np.zeros(d, dtype=_np.float64)
-        n = 0
-        for pdf in it:
-            if not len(pdf):
-                continue
-            x = _np.stack(
-                [_np.asarray(v, dtype=_np.float64) for v in pdf[vec_col]]
-            )
-            g += x.T @ x
-            s += x.sum(axis=0)
-            n += x.shape[0]
-        yield _pd.DataFrame(
-            {
-                "g": [g.ravel().tolist()],
-                "s": [s.tolist()],
-                "n": [n],
-            }
-        )
-
-    rows = (
-        emb.select(vec_col)
-        .mapInPandas(partials, schema="g array<double>, s array<double>, n long")
-        .collect()
-    )
-    gram = np.zeros((d, d))
-    mean = np.zeros(d)
-    n = 0
-    for r in rows:
-        gram += np.array(r["g"]).reshape(d, d)
-        mean += np.array(r["s"])
-        n += r["n"]
-    if n == 0:
-        raise ValueError("no embedding rows")
-    mean /= n
-    return gram, mean, n
-
-
-def pca_components(
-    emb: DataFrame, dim: int, k: int, vec_col: str = "embedding"
-):
-    """Top-k principal components → (components k×dim np.ndarray,
-    explained_variance len-k, mean len-d).  Covariance from the Gram
-    pass; numpy eigh on the d×d matrix driver-side (d², never n);
-    sign normalized so each component's largest-|coeff| entry is
-    positive (lowest index on ties) — deterministic given the
-    covariance."""
-    import numpy as np
-
-    if not 1 <= k <= dim:
-        raise ValueError(f"k must be in [1, {dim}], got {k}")
-    gram, mean, n = gram_and_mean(emb, dim, vec_col)
-    cov = gram / n - np.outer(mean, mean)
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T  # k × d
-    for r in range(k):
-        a = np.abs(comps[r])
-        idx = np.argmax(a)  # first max on ties
-        if comps[r, idx] < 0:
-            comps[r] = -comps[r]
-    return comps, vals[order], mean
-
-
-def pca_project(
-    emb: DataFrame,
-    components,
-    mean,
-    vec_col: str = "embedding",
-    out_col: str = "projected",
-) -> DataFrame:
-    """Project each embedding onto the components: one centered
-    X @ Wᵀ BLAS matmul per Arrow batch, every other column carried
-    through unchanged.  Output vectors have len(components) dims."""
-    import numpy as np
-
-    w = np.asarray(components, dtype=np.float64)
-    mu = np.asarray(mean, dtype=np.float64)
-    fields = [
-        f"{f.name} {f.dataType.simpleString()}" for f in emb.schema.fields
-    ]
-    schema = ", ".join(fields + [f"{out_col} array<double>"])
-
-    def project(it: Iterator) -> Iterator:
-        import numpy as _np
-
-        for pdf in it:
-            if len(pdf):
-                x = _np.stack(
-                    [
-                        _np.asarray(v, dtype=_np.float64)
-                        for v in pdf[vec_col]
-                    ]
-                )
-                proj = (x - mu) @ w.T
-                pdf = pdf.assign(**{out_col: list(map(list, proj))})
-            else:
-                pdf = pdf.assign(**{out_col: []})
-            yield pdf
-
-    return emb.mapInPandas(project, schema=schema)

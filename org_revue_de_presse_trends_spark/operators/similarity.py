@@ -80,7 +80,7 @@ def brute_force_topk(
     """
     # norms precomputed per vector (once), not per pair — cuts the
     # vector math by 2/3; the division sequence dot/qnorm/cnorm is
-    # kept identical to cosine_exact's for bit-equal results
+    # pinned by the goldens
     dot_fn = V.dot_scaled if exact else V.dot
     norm_of = (
         (lambda v: F.sqrt(V.dot_scaled(v, v).cast("double")))
@@ -117,53 +117,14 @@ def train_centroids(
     id_col: str = "vec_id",
 ) -> list[Row]:
     """Deterministic coarse centroids: pick ``n_cells`` seed vectors by
-    hashing ids (cheap, reproducible; k-means refinement is an optional
-    extra pass with the same join shape)."""
+    hashing ids (cheap, reproducible; ``train_centroids_local`` runs
+    Lloyd rounds from the same seeds)."""
     return (
         corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("centroid"))
         .orderBy(F.xxhash64(F.col("cid")))
         .limit(n_cells)
         .collect()
     )
-
-
-def kmeans_refine(
-    corpus: DataFrame,
-    centroids: list[Row],
-    iters: int = 2,
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> list[Row]:
-    """Lloyd refinement of the coarse centroids: assign → per-cell
-    elementwise mean → repeat.  One shuffle per iteration; empty cells
-    keep their previous centroid.  Returns rows shaped like
-    train_centroids output.
-
-    The per-cell mean is computed TALL (posexplode → groupBy(cell,
-    pos) → avg) rather than as a 64-wide row of avg(getItem(i))
-    aggregates: wide array-element aggregates codegen poorly (the
-    SimHash lesson, CLAUDE.md) — measured 2× faster at sf0.1 (0.75 s
-    vs 1.4 s per iteration) despite shuffling one row per element.
-    The collected result is bounded at n_cells × dim rows."""
-    current = centroids
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, current, vec_col, n_probe=1)
-        means = (
-            assigned.select(
-                "cell", F.posexplode(F.col(vec_col)).alias("pos", "v")
-            )
-            .groupBy("cell", "pos")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        by_cell: dict[int, list[float]] = {}
-        for r in means:
-            by_cell.setdefault(r["cell"], [0.0] * dim)[r["pos"]] = r["m"]
-        current = [
-            Row(cid=r["cid"], centroid=by_cell.get(r["cid"], r["centroid"]))
-            for r in current
-        ]
-    return current
 
 
 def train_centroids_local(
@@ -179,15 +140,14 @@ def train_centroids_local(
     quantizer (FAISS-style) — ONE bounded job collects ``sample_max``
     hash-ordered vectors to the driver, then k-means runs in numpy.
 
-    Replaces train_centroids + kmeans_refine's one-job-per-iteration
-    driver sync (each Lloyd round was a full corpus pass; a quantizer
+    No Lloyd round is a corpus pass or a driver sync: a quantizer
     trained on a bounded deterministic sample is statistically
-    equivalent and the per-round cost becomes a BLAS matmul over the
-    sample).  Seeds are the first ``n_cells`` sample vectors — the
+    equivalent to one trained on the corpus, and each round is a BLAS
+    matmul over the sample.  Seeds are the first ``n_cells`` sample vectors — the
     same xxhash64(id)-order convention as ``train_centroids`` — and
     the assignment rule mirrors ``ivf_assign`` (rank by dot with the
     unit-normalized centroid, ties to the earlier centroid).  Empty
-    cells keep their previous centroid, like ``kmeans_refine``.
+    cells keep their previous centroid.
     Returns rows shaped like train_centroids output.
     """
     import numpy as np
@@ -235,7 +195,8 @@ def ivf_assign(
     per centroid instead of cosine's three (dot + both norms — HOFs
     are interpreted, CLAUDE.md), and the order is identical — cosine =
     dot(v, c/|c|)/|v| and |v| > 0 is constant within a row (measured:
-    kmeans_refine 3.5 s → 1.3 s at sf0.1/2 iters)."""
+    a two-round corpus-side k-means over ivf_assign went 3.5 s → 1.3 s
+    at sf0.1)."""
 
     def _unit(vs):
         n = math.sqrt(sum(float(x) * float(x) for x in vs))

@@ -1,51 +1,16 @@
-"""Skew mitigation for hot join keys.
+"""Skew and small-input layout helpers.
 
-Two layers of defense at 100 TB:
-
-1. AQE skew-join splitting (``spark.sql.adaptive.skewJoin.enabled``,
-   on by default in our session factory) — handles skew detected at
-   runtime from shuffle statistics.
-2. ``salted_join`` below — explicit salting for *known* pathological
-   keys (e.g. a viral publisher owning 10% of a day's statuses), or
-   engines/planners where AQE can't split (stream-static joins).
-
-Salting trades a ``salt``-times replication of the build side for an
-even distribution of the probe side: probe rows get a deterministic
-salt in [0, salt), build rows are exploded into all salt values, and
-the join key becomes (key, salt).
+Hot join keys are left to AQE skew-join splitting
+(``spark.sql.adaptive.skewJoin.enabled``, on in the session factory),
+which splits skewed partitions at runtime from shuffle statistics.
+What stays here is ``spread_for_cpu``: spreading a small input that
+arrives as too few splits across the cluster's cores before a
+CPU-heavy per-row stage.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def salted_join(
-    skewed: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Join ``skewed`` (probe side, hot keys) with ``small`` (build
-    side, replicated ``salt``×) on column ``on``.
-
-    The probe-side salt is a deterministic hash of the whole row
-    (xxhash64 over all columns) so repeated runs produce identical
-    partitioning — no rand(), keeping the plan reproducible.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins")
-    probe = skewed.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in skewed.columns]), F.lit(salt)),
-    )
-    build = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    joined = probe.join(build, on=[on, "__salt"], how=how)
-    return joined.drop("__salt")
 
 
 def spread_for_cpu(df: DataFrame, min_factor: int = 1) -> DataFrame:

@@ -258,14 +258,7 @@ def embedding_pca_covariance(
     (operators/pca.covariance_exact — upper triangle, 2080 entries):
     per-row products rounded to scaled longs, exact integer sums, one
     pinned IEEE expression for the centered covariance — value-exact
-    in DuckDB at any partitioning.
-
-    This is the cross-engine VALIDATOR for the PCA scale path
-    (operators/pca.gram_and_mean: one mapInPandas pass shipping a
-    d²-float BLAS partial Gram per partition — driver cost is d²,
-    never n — then numpy eigh and an X @ Wᵀ projection matmul;
-    golden-pinned in tests because LAPACK is not bit-pinned across
-    engines, covariance is)."""
+    in DuckDB at any partitioning."""
     from ..operators.pca import covariance_exact
     from ..operators.skew import spread_for_cpu
 

@@ -392,9 +392,9 @@ def orders_hll_distinct_custkeys(
 
     Scale: COUNT(DISTINCT) exchanges every distinct key; the sketch
     exchanges ≤ 256 map-side-combined register rows per group per
-    task, and per-partition sketches MERGE by max (operators/hll.py
-    hll_merge) — per-day sketches roll up to per-month without a
-    rescan.  The corrected (linear-counting) estimate is deliberately
+    task, and sketches MERGE by UNION ALL + MAX over their register
+    rows (operators/hll.py) — per-day sketches roll up to per-month
+    without a rescan.  The corrected (linear-counting) estimate is deliberately
     NOT in the oracled projection: it needs libm ln, which is not
     bit-pinned across engines; tests golden-pin it instead."""
     from ..operators.hll import hll_distinct
@@ -570,8 +570,9 @@ def value_histogram_quantiles(
     percentile() shuffles every value into a per-group sort; this
     exchanges |bins| counter rows per group and the value stream never
     crosses an exchange.  Per-partition/per-day histograms roll up by
-    union+sum (operators/histogram.histogram_merge) without a rescan —
-    the monitoring-system shape at any corpus size."""
+    UNION ALL + SUM over their bin rows (operators/histogram.py)
+    without a rescan — the monitoring-system shape at any corpus
+    size."""
     from ..operators.histogram import histogram_quantiles_of
 
     ev = load_table(spark, sf_dir, "events")

@@ -49,9 +49,6 @@ class DocumentStore:
         leaving other children alone.  Returns the retried requests."""
         raise NotImplementedError
 
-    def close(self) -> None:
-        pass
-
 
 class LocalFSDocumentStore(DocumentStore):
     """Filesystem-backed store: one JSON file per leaf, directories for
@@ -195,7 +192,7 @@ def _valid_json(value) -> bool:
 
 def write_highlights(
     df: DataFrame,
-    store_factory: Callable[[], DocumentStore],
+    store: DocumentStore,
     list_id: str,
     since_date: str,
 ) -> SinkStats:
@@ -218,11 +215,7 @@ def write_highlights(
         recs[rec["twitterId"]] = rec
     if not children:
         return stats
-    store = store_factory()
-    try:
-        stats.retried = store.replace_children(
-            f"highlights/{list_id}/{since_date}", children)
-    finally:
-        store.close()
+    stats.retried = store.replace_children(
+        f"highlights/{list_id}/{since_date}", children)
     stats.written = sum(map(len, children.values()))
     return stats

@@ -17,10 +17,7 @@ just makes those stats selective on BOTH columns at once.
 
 Bucket edges come from the caller or a one-row min/max aggregate
 (``linear_edges``).  Linear binning keeps the key monotone per
-dimension but concentrates skewed columns into few cells; for
-power-law columns pass quantile edges (``quantile_edges``,
-approxQuantile — driver memory bounded at O(2**bits) per column, the
-same discipline as the k-means centroid reads).
+dimension but concentrates skewed columns into few cells.
 """
 
 from __future__ import annotations
@@ -38,36 +35,15 @@ def linear_edges(df: DataFrame, cols: list[str]) -> dict[str, tuple]:
     return {c: (row[f"__lo_{c}"], row[f"__hi_{c}"]) for c in cols}
 
 
-def quantile_edges(
-    df: DataFrame, cols: list[str], bits: int, rel_err: float = 0.01
-) -> dict[str, list]:
-    """Per-column interior cut points (2**bits - 1 of them) for
-    skew-robust binning."""
-    n = (1 << bits) - 1
-    probs = [i / (n + 1) for i in range(1, n + 1)]
-    qs = df.approxQuantile(cols, probs, rel_err)
-    return {c: q for c, q in zip(cols, qs)}
-
-
 def _cell_sql(col: str, e, bits: int) -> str:
     """SQL mapping one column to an integer cell in [0, 2**bits)."""
-    if isinstance(e, tuple) and len(e) == 2:
-        lo, hi = float(e[0]), float(e[1])
-        span = hi - lo if hi > lo else 1.0
-        n = (1 << bits) - 1
-        return (
-            f"least(CAST({n} AS BIGINT), greatest(CAST(0 AS BIGINT), "
-            f"CAST(floor((CAST(`{col}` AS DOUBLE) - {lo!r}D) / {span!r}D "
-            f"* {n + 1}) AS BIGINT)))"
-        )
-    cuts = ", ".join(repr(float(x)) + "D" for x in e)
-    # cell = number of cuts <= value (width_bucket semantics); the
-    # fold is interpreted HOF work, which is why the cell is staged as
-    # a column ATTRIBUTE before the bit fan references it `bits` times
+    lo, hi = float(e[0]), float(e[1])
+    span = hi - lo if hi > lo else 1.0
+    n = (1 << bits) - 1
     return (
-        f"aggregate(array({cuts}), CAST(0 AS BIGINT), "
-        f"(acc, cut) -> acc + (CASE WHEN CAST(`{col}` AS DOUBLE) >= cut "
-        f"THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END))"
+        f"least(CAST({n} AS BIGINT), greatest(CAST(0 AS BIGINT), "
+        f"CAST(floor((CAST(`{col}` AS DOUBLE) - {lo!r}D) / {span!r}D "
+        f"* {n + 1}) AS BIGINT)))"
     )
 
 
@@ -81,11 +57,9 @@ def with_zorder_key(
     """All input columns plus ``out_col``: the Morton interleave of
     ``cols`` (bit j of column i lands at key position j*len(cols)+i).
 
-    ``edges[c]`` is ``(lo, hi)`` for linear binning or a sorted list
-    of interior cuts for quantile binning.  Cells are staged behind a
-    projection boundary, then the k×bits shift fan is built as ONE
-    parsed expression (plan-build tax + interpreted-HOF recompute
-    trap, CLAUDE.md).
+    ``edges[c]`` is the ``(lo, hi)`` range binned linearly.  Cells are
+    staged behind a projection boundary, then the k×bits shift fan is
+    built as ONE parsed expression (the py4j plan-build tax).
     """
     k = len(cols)
     if k * bits > 62:

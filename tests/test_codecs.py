@@ -162,16 +162,6 @@ def test_png_rejects_garbage_and_unsupported():
         codecs.decode_png(png16)
 
 
-def test_resize_nearest_semantics():
-    img = np.arange(16, dtype=np.uint8).reshape(4, 4, 1)
-    out = codecs.resize_nearest(img, 2, 2)
-    # nearest with floor index math: rows 0,2 / cols 0,2
-    assert out[:, :, 0].tolist() == [[0, 2], [8, 10]]
-    up = codecs.resize_nearest(img, 8, 8)
-    assert up.shape == (8, 8, 1)
-    assert up[0, 0, 0] == 0 and up[7, 7, 0] == 15
-
-
 def test_wav_roundtrip_and_bit_depths():
     rng = np.random.default_rng(11)
     samples = rng.uniform(-0.9, 0.9, size=(480, 2)).astype(np.float32)

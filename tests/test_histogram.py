@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.operators.histogram import (
     histogram,
-    histogram_merge,
     histogram_quantiles,
     histogram_quantiles_of,
 )
@@ -114,14 +113,17 @@ class TestHistogram:
         assert abs(row["q_0_9"] - v_k) <= 0.5  # the honest bound holds
 
     def test_union_equals_merge(self, spark):
+        """Histograms merge by UNION ALL + per-bin SUM: the merge of
+        two histograms is the histogram of the union."""
         a, b = VALUES[:150], VALUES[150:]
         merged = sorted(
             map(
                 tuple,
-                histogram_merge(
-                    histogram(_df(spark, a), "value", width=3.0),
-                    histogram(_df(spark, b), "value", width=3.0),
-                ).collect(),
+                histogram(_df(spark, a), "value", width=3.0)
+                .unionByName(histogram(_df(spark, b), "value", width=3.0))
+                .groupBy("bin")
+                .agg(F.sum("c").alias("c"))
+                .collect(),
             )
         )
         direct = sorted(

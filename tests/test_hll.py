@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from org_revue_de_presse_trends_spark.operators.hll import (
     hll_distinct,
     hll_estimate,
-    hll_merge,
     hll_registers,
 )
 
@@ -73,6 +72,8 @@ class TestRegisters:
 
 class TestMerge:
     def test_union_equals_merge(self, spark):
+        """Register tables merge by UNION ALL + per-bucket MAX: the
+        merge of two sketches is the sketch of the union."""
         a_vals = list(range(0, 800))
         b_vals = list(range(400, 1300))  # overlapping halves
         a = _one_group(
@@ -85,27 +86,17 @@ class TestMerge:
         merged = sorted(
             map(
                 tuple,
-                hll_merge(
-                    hll_registers(a, ["grp"], "v"),
-                    hll_registers(b, ["grp"], "v"),
-                    ["grp"],
-                ).collect(),
+                hll_registers(a, ["grp"], "v")
+                .unionByName(hll_registers(b, ["grp"], "v"))
+                .groupBy("grp", "bucket")
+                .agg(F.max("r").alias("r"))
+                .collect(),
             )
         )
         direct = sorted(
             map(tuple, hll_registers(both, ["grp"], "v").collect())
         )
         assert merged == direct
-
-    def test_merge_idempotent(self, spark):
-        df = _one_group(
-            spark.createDataFrame([(1,)], "x int"), range(500)
-        )
-        reg = hll_registers(df, ["grp"], "v")
-        twice = hll_merge(reg, reg, ["grp"])
-        assert sorted(map(tuple, twice.collect())) == sorted(
-            map(tuple, reg.collect())
-        )
 
 
 class TestEstimate:

@@ -243,10 +243,10 @@ def test_ivf_recall_vs_brute_force(spark, embeddings_df):
     assert recall >= 0.5, f"IVF recall too low: {recall:.2f}"
     # Lloyd-refined centroids must stay a usable index
     from org_revue_de_presse_trends_spark.operators.similarity import (
-        kmeans_refine,
+        train_centroids_local,
     )
 
-    refined = kmeans_refine(embeddings_df, cents, iters=2)
+    refined = train_centroids_local(embeddings_df, n_cells=8, iters=2)
     approx2 = ivf_topk(embeddings_df, queries, refined, k=10, n_probe=4)
     got2 = {(r["query_id"], r["neighbor_id"]) for r in approx2.collect()}
     recall2 = len(got2 & truth) / len(truth)
@@ -577,9 +577,9 @@ def test_winnow_fingerprint_guarantee_and_density(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {
         r["doc_id"]: set(r["fps"])
-        for r in df.select(
-            "doc_id", T.winnow_fingerprints(F.col("text"), k=5, w=4).alias("fps")
-        ).collect()
+        for r in T.with_winnow_fingerprints(df, "text", "fps", k=5, w=4)
+        .select("doc_id", "fps")
+        .collect()
     }
     assert out[1] & out[2], "shared 12-token run must share a fingerprint"
     assert not (out[1] & out[3]) and not (out[2] & out[3])
@@ -588,8 +588,8 @@ def test_winnow_fingerprint_guarantee_and_density(spark):
     assert 1 <= len(out[3]) < n_tokens - 5 + 1
     # short-doc path: fewer than k tokens still yields one fingerprint
     tiny = spark.createDataFrame([(9, "two words")], ["doc_id", "text"])
-    got = tiny.select(
-        T.winnow_fingerprints(F.col("text"), k=5, w=4).alias("fps")
+    got = T.with_winnow_fingerprints(
+        tiny, "text", "fps", k=5, w=4
     ).collect()[0]["fps"]
     assert len(got) == 1
 

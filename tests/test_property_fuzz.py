@@ -43,13 +43,13 @@ def test_token_count_and_fingerprint_match_python(spark, docs):
 @settings(max_examples=5, deadline=None, derandomize=True, database=None)
 @given(st.lists(doc_st, min_size=1, max_size=10))
 def test_shingle_hash_count_invariant(spark, docs):
-    """|shingle_hashes(text,k)| == |distinct k-windows| (collisions in a
-    64-bit space are effectively impossible at this size) and >= 1."""
+    """|with_shingle_hashes(text,k)| == |distinct k-windows| (collisions
+    in a 64-bit space are effectively impossible at this size) and >= 1."""
     k = 3
     df = spark.createDataFrame([(i, d) for i, d in enumerate(docs)],
                                ["id", "text"])
-    rows = df.select(
-        "id", F.size(T.shingle_hashes(F.col("text"), k)).alias("n")
+    rows = T.with_shingle_hashes(df, "text", "sh", k).select(
+        "id", F.size("sh").alias("n")
     ).collect()
     got = {r["id"]: r["n"] for r in rows}
     for i, d in enumerate(docs):
@@ -120,8 +120,8 @@ def test_winnow_guarantee_fuzz(spark, token_lists, salt):
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(docs)], ["id", "text"]
     )
-    rows = df.select(
-        "id", T.winnow_fingerprints(F.col("text"), k=k, w=w).alias("fps")
+    rows = T.with_winnow_fingerprints(df, "text", "fps", k=k, w=w).select(
+        "id", "fps"
     ).collect()
     fps = {r["id"]: set(r["fps"]) for r in rows}
     base = fps[0]

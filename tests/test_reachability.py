@@ -1,4 +1,4 @@
-"""Every package module must be reachable from a real entry point.
+"""Every package module and def must be reachable from a real entry point.
 
 A static ``ast`` walk of import statements (module-level and lazy, i.e.
 inside functions) starts at the registered query plans, the three CLIs,
@@ -7,8 +7,11 @@ inside functions) starts at the registered query plans, the three CLIs,
 query, CLI path or sink runs; delete it together with its tests rather
 than keep it alive through a test or an eager ``__init__`` re-export.
 
-Only module-level reach is checked.  Per-def reach would need name
-resolution, and a plain name search is fooled by docstrings.
+The def-level walk starts from the same roots plus ``KEPT`` and follows
+the names code refers to (``Name`` ids, ``Attribute`` attrs and imported
+names), so a name in a docstring or comment does not count.  Names are
+matched without resolving scopes: a def the walk reports is unreached,
+while a dead def that shares its name with a reached one slips through.
 """
 
 from __future__ import annotations
@@ -18,6 +21,36 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "org_revue_de_presse_trends_spark"
+_DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+#: defs that no entry point calls but that stay on purpose, with why;
+#: each seeds the def-level walk, so what they call counts as reached
+KEPT = {
+    "functions.codecs.encode_jpeg":
+        "builds the JPEG decoder tests' inputs (PIL is not installed)",
+    "functions.codecs.encode_jpeg_progressive":
+        "builds the progressive JPEG decoder tests' inputs",
+    "functions.codec_vp8_enc.encode_webp_lossy":
+        "builds the lossy WebP decoder tests' inputs (no WebP encoder)",
+    "functions.container_mp4.mux_mp4_vp8":
+        "builds the MP4 demuxer tests' inputs (no mp4 tooling)",
+    "functions.container_mp4.parse_mp4":
+        "lists the tracks the MP4 demuxer tests check",
+    "operators.psl.registrable_domain_py":
+        "Python oracle of the registrable-domain SQL expression",
+    "operators.dedup.embedding_near_dup_pairs":
+        "brute-force oracle of the LSH embedding near-dup pairs",
+    "sources.jdbc.reader_options":
+        "JDBC options of the reference's PostgreSQL source",
+    "sources.jdbc.read_jdbc":
+        "the only reader of the reference's PostgreSQL source",
+    "operators.classifier.model_artifact":
+        "emits the model artifact that corpus_cli --help documents",
+    "operators.classifier.scaled_weights":
+        "the fixed-point weights of that artifact",
+    "operators.export.write_shards":
+        "export entry point: parquet shards plus their manifest",
+}
 
 
 def _package_modules() -> dict[str, Path]:
@@ -98,12 +131,92 @@ def _roots() -> list[Path]:
     ]
 
 
+def _names(node: ast.AST) -> set[str]:
+    """Names the code under ``node`` refers to; strings do not count."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rpartition(".")[2])
+    return out
+
+
+def _unreached_defs() -> list[str]:
+    """Top-level package defs the def-level walk does not reach."""
+    mods = _package_modules()
+    roots = _roots()
+    root_mods = {m for m, p in mods.items() if p in roots}
+    live_mods = _reached(mods, roots)
+    defs: dict[str, ast.AST] = {}
+    todo = [
+        ast.parse(p.read_text()) for p in roots if p not in mods.values()
+    ]
+    reached = {f"{PKG}.{name}" for name in KEPT}
+    for mod, path in mods.items():
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, _DEF):
+                if mod in live_mods:  # runs when the module is imported
+                    todo.append(node)
+                continue
+            dotted = f"{mod}.{node.name}"
+            defs[dotted] = node
+            if mod in root_mods:  # queries register by decorator
+                reached.add(dotted)
+    todo += [defs[d] for d in reached if d in defs]
+    by_name: dict[str, list[str]] = {}
+    for dotted in defs:
+        by_name.setdefault(dotted.rpartition(".")[2], []).append(dotted)
+    seen: set[str] = set()
+    while todo:
+        for name in _names(todo.pop()) - seen:
+            seen.add(name)
+            for dotted in by_name.get(name, ()):
+                if dotted not in reached:
+                    reached.add(dotted)
+                    todo.append(defs[dotted])
+    return sorted(set(defs) - reached)
+
+
 def test_every_package_module_is_reached_from_an_entry_point():
     mods = _package_modules()
     unreached = sorted(set(mods) - _reached(mods, _roots()))
     assert not unreached, (
         f"package modules no query, CLI path or sink imports: {unreached}"
     )
+
+
+def test_every_package_def_is_reached_from_an_entry_point():
+    unreached = _unreached_defs()
+    assert not unreached, (
+        "package defs no query, CLI path or sink reaches (delete them "
+        f"with their tests, or add them to KEPT with a reason): {unreached}"
+    )
+
+
+def test_kept_names_exist():
+    mods = _package_modules()
+    missing = []
+    for name in KEPT:
+        mod, _, def_name = f"{PKG}.{name}".rpartition(".")
+        path = mods.get(mod)
+        body = ast.parse(path.read_text()).body if path else []
+        if not any(isinstance(n, _DEF) and n.name == def_name for n in body):
+            missing.append(name)
+    assert not missing, f"KEPT names no package def: {missing}"
+
+
+def test_def_walk_ignores_docstrings_and_comments():
+    tree = ast.parse(
+        "def f():\n"
+        "    \"\"\"Calls g.\"\"\"\n"
+        "    # and h\n"
+        "    from m import k as alias\n"
+        "    return x.y(alias)\n"
+    )
+    assert _names(tree) == {"k", "alias", "x", "y"}
 
 
 def test_walk_follows_lazy_and_relative_imports():

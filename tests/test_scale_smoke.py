@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.operators.argmax import argmax
-from org_revue_de_presse_trends_spark.operators.skew import salted_join
 from org_revue_de_presse_trends_spark.operators.topk import top_k
 
 N = 10_000_000
@@ -52,15 +51,6 @@ def test_topk_10m(spark):
     assert len(got) == 5
     assert got == sorted(got, key=lambda t: (-t[0], t[1]))
     assert got[0][0] == 1_000_002  # p-1 is attained (37 invertible mod p)
-
-
-def test_salted_join_10m(spark):
-    df = _big(spark)
-    dim = spark.range(G).select(
-        F.col("id").alias("g"), (F.col("id") % 17).alias("bucket")
-    )
-    n = salted_join(df, dim, on="g", salt=8).count()
-    assert n == N
 
 
 def test_grouped_topk_10m_few_groups(spark):
@@ -866,29 +856,6 @@ def test_pagerank_scales_linearly_10x(spark):
     s_ratio = results[200_000][1] / max(results[20_000][1], 1)
     assert t_ratio < 30, f"runtime grew {t_ratio:.1f}× for 10× edges"
     assert s_ratio < 30, f"shuffle grew {s_ratio:.1f}× for 10× edges"
-
-
-def test_pca_gram_scales_linearly_10x(spark):
-    """PCA Gram path: 10× the vectors must grow the one-pass partial
-    computation ~linearly while the driver-bound payload stays at
-    numPartitions × d² floats (independent of n)."""
-    from org_revue_de_presse_trends_spark.operators.pca import (
-        gram_and_mean,
-    )
-
-    d = 16
-    results = {}
-    for n in (20_000, 200_000):
-        emb = _synthetic_embeddings(spark, n, d).select(
-            F.col("embedding").cast("array<float>").alias("embedding")
-        )
-        t0 = _time.perf_counter()
-        gram, mean, cnt = gram_and_mean(emb, dim=d)
-        results[n] = _time.perf_counter() - t0
-        assert cnt == n
-        assert gram.shape == (d, d)
-    t_ratio = results[200_000] / results[20_000]
-    assert t_ratio < 30, f"runtime grew {t_ratio:.1f}× for 10× vectors"
 
 
 def test_poisson_bootstrap_scales_linearly_10x(spark):

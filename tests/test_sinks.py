@@ -45,14 +45,10 @@ def sample_df(spark):
     )
 
 
-def _store_factory(root):
-    return lambda: LocalFSDocumentStore(root)
-
-
 def test_document_sink_writes_tree(spark, sample_df, tmp_path):
     root = str(tmp_path / "store")
     stats = write_highlights(
-        sample_df, _store_factory(root), "list-1", "2024-03-02")
+        sample_df, LocalFSDocumentStore(root), "list-1", "2024-03-02")
     assert (stats.written, stats.skipped_invalid_json, stats.retried) == (
         2, 1, 0)
     p1 = os.path.join(
@@ -76,14 +72,14 @@ def test_document_sink_idempotent_overwrite(spark, sample_df, tmp_path):
     """Each run replaces its types wholesale (S4): stale leaves from a
     previous run vanish."""
     root = str(tmp_path / "store")
-    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    write_highlights(sample_df, LocalFSDocumentStore(root), "list-1", "2024-03-02")
     stale = os.path.join(
         root, "highlights", "list-1", "2024-03-02", "status", "999.json"
     )
     assert os.path.exists(os.path.dirname(stale))
     with open(stale, "w") as f:
         f.write("{}")
-    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    write_highlights(sample_df, LocalFSDocumentStore(root), "list-1", "2024-03-02")
     assert not os.path.exists(stale)
     assert os.path.exists(
         os.path.join(root, "highlights", "list-1", "2024-03-02", "status",
@@ -168,12 +164,12 @@ class _RTDB:
         self.srv.server_close()
 
 
-def _rest_factory(url, **kw):
+def _rest_store(url, **kw):
     from org_revue_de_presse_trends_spark.sources.document_sink import (
         FirebaseRESTStore,
     )
 
-    return lambda: FirebaseRESTStore(url, **kw)
+    return FirebaseRESTStore(url, **kw)
 
 
 DAY_PATH = "/highlights/list-1/2024-03-02.json"
@@ -184,7 +180,7 @@ def test_firebase_rest_store_requests(spark, sample_df):
     record map; an all-invalid type is sent as null (removed)."""
     with _RTDB() as rtdb:
         stats = write_highlights(
-            sample_df, _rest_factory(rtdb.url, auth_token="tok"),
+            sample_df, _rest_store(rtdb.url, auth_token="tok"),
             "list-1", "2024-03-02",
         )
     assert [(m, p.split("?")[0]) for m, p, _ in rtdb.requests] == [
@@ -213,7 +209,7 @@ def test_rest_store_retries_transient_failures(spark, sample_df):
     whole day with the second request and counts one retry."""
     with _RTDB(codes=[503]) as rtdb:
         stats = write_highlights(
-            sample_df, _rest_factory(rtdb.url), "list-1", "2024-03-02"
+            sample_df, _rest_store(rtdb.url), "list-1", "2024-03-02"
         )
     assert [(m, p) for m, p, _ in rtdb.requests] == [("PATCH", DAY_PATH)] * 2
     assert rtdb.requests[0][2] == rtdb.requests[1][2]
@@ -228,7 +224,7 @@ def test_rest_store_permanent_error_not_retried(spark, sample_df):
     with _RTDB(codes=[403] * 5) as rtdb:
         with pytest.raises(HTTPError) as exc:
             write_highlights(
-                sample_df, _rest_factory(rtdb.url), "list-1", "2024-03-02"
+                sample_df, _rest_store(rtdb.url), "list-1", "2024-03-02"
             )
     assert exc.value.code == 403
     assert [(m, p) for m, p, _ in rtdb.requests] == [("PATCH", DAY_PATH)]
@@ -245,7 +241,7 @@ def test_rest_store_failed_day_sends_no_delete(spark, sample_df):
     with _RTDB(codes=[500] * 10) as rtdb:
         with pytest.raises(Exception):
             write_highlights(
-                sample_df, _rest_factory(rtdb.url), "list-1", "2024-03-02",
+                sample_df, _rest_store(rtdb.url), "list-1", "2024-03-02",
             )
     assert [(m, p) for m, p, _ in rtdb.requests] == (
         [("PATCH", DAY_PATH)] * FirebaseRESTStore.ATTEMPTS)
@@ -267,7 +263,7 @@ def test_document_sink_failed_run_keeps_previous_day(spark, sample_df,
     """A rerun that raises after its first staged leaf leaves the day's
     tree byte-identical to the previous run, with no debris."""
     root = str(tmp_path / "store")
-    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    write_highlights(sample_df, LocalFSDocumentStore(root), "list-1", "2024-03-02")
     before = _tree(root)
     assert sorted(before) == [
         os.path.join("highlights", "list-1", "2024-03-02", "status", n)
@@ -290,7 +286,7 @@ def test_document_sink_failed_run_keeps_previous_day(spark, sample_df,
          "2024-03-02 14:00:00", False, 10, 1, "status"),
     ])
     with pytest.raises(OSError, match="disk full"):
-        write_highlights(rerun, lambda: Failing(root), "list-1", "2024-03-02")
+        write_highlights(rerun, Failing(root), "list-1", "2024-03-02")
     assert Failing.staged == 1
     assert _tree(root) == before
     assert os.listdir(root) == ["highlights"]
@@ -300,13 +296,13 @@ def test_document_sink_keeps_types_the_run_does_not_produce(
         spark, sample_df, tmp_path):
     """A --distinct-sources-only style run replaces only its own types."""
     root = str(tmp_path / "store")
-    write_highlights(sample_df, _store_factory(root), "list-1", "2024-03-02")
+    write_highlights(sample_df, LocalFSDocumentStore(root), "list-1", "2024-03-02")
     distinct = _records(spark, [
         (6, "600", "fay", "t6", "u6", '{"ok": 6}', "2024-03-02 15:00:00",
          "2024-03-02 15:00:00", False, 5, 1, "statusFromDistinctSources"),
     ])
     stats = write_highlights(
-        distinct, _store_factory(root), "list-1", "2024-03-02")
+        distinct, LocalFSDocumentStore(root), "list-1", "2024-03-02")
     day = os.path.join(root, "highlights", "list-1", "2024-03-02")
     assert sorted(os.listdir(day)) == ["status", "statusFromDistinctSources"]
     assert sorted(os.listdir(os.path.join(day, "status"))) == [
@@ -414,7 +410,7 @@ def test_rest_store_uses_token_provider(spark, sample_df):
     with _RTDB() as rtdb:
         write_highlights(
             sample_df,
-            _rest_factory(rtdb.url, token_provider=lambda: "oauth-tok"),
+            _rest_store(rtdb.url, token_provider=lambda: "oauth-tok"),
             "list-1", "2024-03-02",
         )
     paths = [p for _, p, _ in rtdb.requests]
@@ -453,118 +449,3 @@ def test_load_app_config_builds_postgres_dsn(tmp_path):
     q.write_text(json.dumps({"Firebase_url": ""}))
     empty = load_app_config(str(q))
     assert empty.postgres is None and empty.firebase_url is None
-
-
-def test_lake_delete_matching(spark, tmp_path):
-    """Takedown primitive: rows matching the predicate vanish, only
-    affected partitions are rewritten, fully-emptied partitions are
-    removed, untouched partitions keep their files, and a rerun is an
-    idempotent no-op."""
-    import pyspark.sql.functions as F
-
-    from org_revue_de_presse_trends_spark.sources.lake import (
-        delete_matching,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake")
-    rows = [
-        ("2024-03-01", "status", i, f"u{i}") for i in range(10)
-    ] + [
-        ("2024-03-02", "status", 100 + i, f"v{i}") for i in range(10)
-    ] + [
-        ("2024-03-03", "status", 200, "takedown-only")
-    ]
-    df = spark.createDataFrame(rows, ["day", "statusType", "id", "username"])
-    write_partitioned(df, path)
-    d1 = os.path.join(path, "day=2024-03-01", "statusType=status")
-    before_files = set(os.listdir(d1))
-
-    # delete two rows from day 2 and the only row of day 3
-    n = delete_matching(
-        spark, path, F.col("id").isin(100, 101, 200)
-    )
-    assert n == 3
-    out = spark.read.parquet(path)
-    got = {r["id"] for r in out.collect()}
-    assert got == set(range(10)) | {102 + i for i in range(8)}
-    # untouched partition: same files on disk
-    assert set(os.listdir(d1)) == before_files
-    # fully-emptied partition directory is gone
-    assert not os.path.exists(os.path.join(path, "day=2024-03-03"))
-    # idempotent rerun
-    assert delete_matching(spark, path, F.col("id").isin(100, 200)) == 0
-    assert spark.read.parquet(path).count() == 18
-
-
-def test_lake_delete_matching_keeps_null_predicate_rows(spark, tmp_path):
-    """Three-valued logic: rows where the predicate evaluates to NULL
-    (NULL username vs username=='bob') must be KEPT and not counted —
-    the ADVICE-flagged silent-data-loss shape."""
-    import pyspark.sql.functions as F
-
-    from org_revue_de_presse_trends_spark.sources.lake import (
-        delete_matching,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake_nulls")
-    rows = [
-        ("2024-04-01", "status", 1, "bob"),
-        ("2024-04-01", "status", 2, None),  # same partition as the match
-        ("2024-04-01", "status", 3, "carol"),
-        ("2024-04-02", "status", 4, None),  # untouched partition
-    ]
-    df = spark.createDataFrame(rows, ["day", "statusType", "id", "username"])
-    write_partitioned(df, path)
-
-    n = delete_matching(spark, path, F.col("username") == "bob")
-    assert n == 1
-    got = {(r["id"], r["username"]) for r in spark.read.parquet(path).collect()}
-    assert got == {(2, None), (3, "carol"), (4, None)}
-
-
-def test_lake_delete_matching_many_partitions_bounded_plan(spark, tmp_path):
-    """~100 affected partitions: the partition filter is a broadcast
-    semi-join, so the rewrite-slice plan must NOT grow a literal
-    disjunct per partition (the old OR-chain shape)."""
-    import pyspark.sql.functions as F
-
-    from org_revue_de_presse_trends_spark.sources.lake import (
-        delete_matching,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "lake_wide")
-    n_days = 100
-    rows = [
-        (f"2024-01-{d % 31 + 1:02d}x{d:03d}", "status", d * 10 + j, f"u{j}")
-        for d in range(n_days)
-        for j in range(3)
-    ]
-    df = spark.createDataFrame(rows, ["day", "statusType", "id", "username"])
-    write_partitioned(df, path)
-
-    # u0 exists in every partition -> all 100 partitions affected
-    n = delete_matching(spark, path, F.col("username") == "u0")
-    assert n == n_days
-    out = spark.read.parquet(path)
-    assert out.count() == n_days * 2
-    assert out.filter(F.col("username") == "u0").count() == 0
-
-    # plan-shape pin: reconstruct the slice the same way delete_matching
-    # does and assert the filter side carries no per-partition literals
-    aff = (
-        spark.read.parquet(path)
-        .select("day", "statusType")
-        .distinct()
-        .limit(n_days)
-    )
-    local = spark.createDataFrame(aff.collect(), schema=aff.schema)
-    sliced = spark.read.parquet(path).join(
-        F.broadcast(local), on=["day", "statusType"], how="left_semi"
-    )
-    plan = sliced._jdf.queryExecution().toString()
-    # a literal OR-chain would mention dozens of day values; the
-    # semi-join plan mentions none outside the (bounded) broadcast
-    assert plan.count("2024-01-") < 5

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from org_revue_de_presse_trends_spark.functions import htmltext as H
 from org_revue_de_presse_trends_spark.operators.linededup import (
@@ -48,17 +47,6 @@ def test_extraction_end_to_end(spark):
         "line a\n"
         "line b"
     )
-
-
-def test_title_extraction(spark):
-    df = spark.createDataFrame([(PAGE,), ("<p>no title</p>",)], "html string")
-    got = [
-        r["t"]
-        for r in df.select(H.html_title_col("html").alias("t"))
-        .orderBy(F.length("html"))
-        .collect()
-    ]
-    assert got == ["", "My Page"]
 
 
 def test_script_content_never_leaks(spark):
