@@ -1,8 +1,9 @@
 """Table loaders for the driver-generated parquet fixtures.
 
 The reference reads five PostgreSQL tables through a DSN (reference
-trends.go:215-223); our engine abstracts the source behind a loader so
-tests use parquet and production uses JDBC (see ``sources.jdbc``).
+trends.go:215-223); our engine abstracts the source behind a loader.
+Every CLI path reads parquet today; ``sources.jdbc`` holds the JDBC
+reader, which no CLI path calls yet.
 Parquet scans get vectorized reads + predicate pushdown + column pruning
 from Spark for free.
 """
@@ -112,9 +113,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         del _TABLE_CACHE[k]
     _TABLE_CACHE[cache_key] = (mtime, df)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}

@@ -30,15 +30,10 @@ from dataclasses import asdict, is_dataclass
 from pyspark.sql import SparkSession
 
 from .catalog import load_table
-from .plans.trends import TrendsParams, TrendsPipeline, TrendsTables
+from .plans.trends import DOMAIN_TABLES, TrendsParams, TrendsPipeline
 
 # reference trends.go:39: hard-coded deprecated list id also matched
 DEPRECATED_LIST_DEFAULT = "deprecated-list"
-
-DOMAIN_TABLES = (
-    "highlight", "weaving_status", "publishers_list",
-    "status_popularity", "weaving_user",
-)
 
 
 def civil_date(s: str) -> str:
@@ -138,10 +133,11 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def load_domain_tables(spark: SparkSession, source_dir: str) -> TrendsTables:
-    return TrendsTables(
-        *[load_table(spark, source_dir, n) for n in DOMAIN_TABLES]
-    )
+def load_domain_tables(spark: SparkSession, source_dir: str) -> None:
+    """Bind ``source_dir``'s five tables as the session temp views the
+    worker SQL names (``plans.trends.DOMAIN_TABLES``)."""
+    for name in DOMAIN_TABLES:
+        load_table(spark, source_dir, name).createOrReplaceTempView(name)
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> int:
@@ -196,7 +192,8 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
         tz=args.tz,
         bug_compat=args.bug_compat,
     )
-    pipe = TrendsPipeline(load_domain_tables(spark, args.source_dir), params)
+    load_domain_tables(spark, args.source_dir)
+    pipe = TrendsPipeline(spark, params)
 
     # --metrics: bracket every materialization with the status-store
     # collector and log one JSON line per query on stderr (ops parity
@@ -284,35 +281,29 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 d, args.lake_dir, partition_by=("day", "statusType")
             ),
         )
-    # --firebase-config implies a Firebase_url (checked above)
-    use_firebase = not args.sink_dir and args.firebase_config
-    if args.sink_dir:
+    if args.sink_dir or args.firebase_config:
         from .sources.document_sink import (
+            FirebaseRESTStore,
             LocalFSDocumentStore,
             write_highlights,
         )
 
-        store = LocalFSDocumentStore(args.sink_dir)
-        materialize(
-            "highlights:document_sink",
-            result,
-            lambda d: write_highlights(
-                d,
-                store,
-                list_id=args.publishers_list_id,
-                since_date=args.since_date,
-            ),
-        )
-    elif use_firebase:
-        from .sources.config import token_provider_from_firebase_config
-        from .sources.document_sink import FirebaseRESTStore, write_highlights
+        if args.sink_dir:
+            name = "highlights:document_sink"
+            store = LocalFSDocumentStore(args.sink_dir)
+        else:
+            # --firebase-config implies a Firebase_url (checked above)
+            from .sources.config import token_provider_from_firebase_config
 
-        provider = token_provider_from_firebase_config(args.firebase_config)
-        store = FirebaseRESTStore(
-            cfg.firebase_url, token_provider=provider.token
-        )
+            name = "highlights:firebase_sink"
+            provider = token_provider_from_firebase_config(
+                args.firebase_config
+            )
+            store = FirebaseRESTStore(
+                cfg.firebase_url, token_provider=provider.token
+            )
         materialize(
-            "highlights:firebase_sink",
+            name,
             result,
             lambda d: write_highlights(
                 d,
@@ -321,7 +312,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> in
                 since_date=args.since_date,
             ),
         )
-    if not (args.sink_dir or args.lake_dir or use_firebase):
+    elif not args.lake_dir:
         for row in materialize("highlights", result, lambda d: d.collect()):
             print(row)
     return 0

@@ -37,11 +37,15 @@ Day filters.  Every history scan keeps the rows whose civil day is
 J2 and J5 reduce to these per-table day filters.  No raw timestamp range
 is added: Spark builds no Parquet row-group predicate from one on the
 naive ``timestamp[us]`` columns the loader reads, and on those tables it
-measured no faster (ROADMAP direction 3).
+measured no faster (ROADMAP direction 2).
 
 Anti joins ignore duplicate keys, so ``dm``/``dmt`` carry no DISTINCT.
 
-Binding.  List ids, ``tz``, ``:day`` and the ``statusType`` values are
+Binding.  The SQL names the five domain tables (``DOMAIN_TABLES``) as
+the reference's does.  ``cli.load_domain_tables`` binds them once per
+run as session temp views; ``spark.sql`` analyzes eagerly, so a
+DataFrame keeps the tables it was built over when a later load rebinds
+the names.  List ids, ``tz``, ``:day`` and the ``statusType`` values are
 named parameters; only ``int()``-coerced values (``shift_hours``,
 ``limit``, ``page``) are formatted into the text.
 
@@ -55,12 +59,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.expressions import (
     civil_day_sql,
     is_retweet_derived_sql,
     popularity_sql,
+)
+
+#: the reference schema's table names, bound as session temp views
+DOMAIN_TABLES = (
+    "highlight", "weaving_status", "publishers_list",
+    "status_popularity", "weaving_user",
 )
 
 VARIANTS = ("status", "retweet", "statusFromDistinctSources",
@@ -94,21 +104,13 @@ class TrendsParams:
     bug_compat: bool = False
 
 
-@dataclass
-class TrendsTables:
-    highlight: DataFrame
-    weaving_status: DataFrame
-    publishers_list: DataFrame
-    status_popularity: DataFrame
-    weaving_user: DataFrame
-
-
 class TrendsPipeline:
     """Builder for the daily-highlights computation: each public method
-    returns the DataFrame of one ``spark.sql`` statement."""
+    returns the DataFrame of one ``spark.sql`` statement over the bound
+    ``DOMAIN_TABLES``."""
 
-    def __init__(self, tables: TrendsTables, params: TrendsParams):
-        self.t = tables
+    def __init__(self, spark: SparkSession, params: TrendsParams):
+        self.spark = spark
         self.p = params
 
     # -- SQL text -----------------------------------------------------------
@@ -124,22 +126,24 @@ class TrendsPipeline:
             f":l{i}" for i in range(1, len(self.p.list_public_ids) + 1)
         )
         return f"""WITH
-hd AS (SELECT * FROM {{h}} WHERE {self._of_day("publication_date_time")}),
-sd AS (SELECT * FROM {{s}} WHERE {self._of_day("ust_created_at")}),
-pd AS (SELECT status_id, total_retweets, total_favorites FROM {{sp}}
+hd AS (SELECT * FROM highlight WHERE {self._of_day("publication_date_time")}),
+sd AS (SELECT * FROM weaving_status WHERE {self._of_day("ust_created_at")}),
+pd AS (SELECT status_id, total_retweets, total_favorites
+       FROM status_popularity
        WHERE {self._of_day("checked_at")}),
 pop AS (SELECT status_id AS p_status_id,
                MAX(total_retweets) AS p_total_retweets,
                MAX(total_favorites) AS p_total_favorites
         FROM pd GROUP BY status_id),
-tl AS (SELECT id, screen_name FROM {{pl}} WHERE public_id IN ({lists})),
-dl AS (SELECT screen_name FROM {{pl}}
+tl AS (SELECT id, screen_name FROM publishers_list
+       WHERE public_id IN ({lists})),
+dl AS (SELECT screen_name FROM publishers_list
        WHERE deleted_at IS NOT NULL AND screen_name IS NOT NULL),
 dm AS (SELECT /*+ BROADCAST(dl) */ u.usr_id AS excluded_id
-       FROM {{u}} u JOIN dl ON u.usr_twitter_username = dl.screen_name),
+       FROM weaving_user u JOIN dl ON u.usr_twitter_username = dl.screen_name),
 dmt AS (SELECT /*+ BROADCAST(dl) */
                CAST(u.usr_twitter_id AS BIGINT) AS excluded_id
-        FROM {{u}} u JOIN dl ON u.usr_twitter_username = dl.screen_name)
+        FROM weaving_user u JOIN dl ON u.usr_twitter_username = dl.screen_name)
 """
 
     def _curated_sql(self, include_retweets: bool) -> str:
@@ -239,24 +243,13 @@ FROM (
         return out
 
     def _sql(self, body: str, **args) -> DataFrame:
-        t = self.t
         args["day"] = self.p.since_date
         args["tz"] = self.p.tz
         for i, list_id in enumerate(self.p.list_public_ids, 1):
             args[f"l{i}"] = list_id
-        return t.highlight.sparkSession.sql(
-            self._with() + body, args=args,
-            h=t.highlight, s=t.weaving_status, pl=t.publishers_list,
-            sp=t.status_popularity, u=t.weaving_user,
-        )
+        return self.spark.sql(self._with() + body, args=args)
 
     # -- entry points -------------------------------------------------------
-
-    def curated(self, include_retweets: bool) -> DataFrame:
-        return self._sql(self._curated_sql(include_retweets))
-
-    def distinct_sources(self, include_retweets: bool) -> DataFrame:
-        return self._sql(self._distinct_sql(include_retweets))
 
     def variant(self, name: str) -> DataFrame:
         return self._sql(self._variant_sql(name))
@@ -301,9 +294,9 @@ JOIN tl ON h.aggregate_id = tl.id"""
         creation time falls within the 7 days before ``now``
         (parameterized instead of NOW() for determinism)."""
         shifted = f"ust_created_at - INTERVAL {int(self.p.shift_hours)} HOUR"
-        return self.t.weaving_status.sparkSession.sql(
-            f"SELECT * FROM {{s}} WHERE {shifted}"
+        return self.spark.sql(
+            f"SELECT * FROM weaving_status WHERE {shifted}"
             " > CAST(:now AS TIMESTAMP) - INTERVAL 7 DAYS"
             f" AND {shifted} <= CAST(:now AS TIMESTAMP)",
-            args={"now": now}, s=self.t.weaving_status,
+            args={"now": now},
         )

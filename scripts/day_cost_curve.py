@@ -58,7 +58,7 @@ def main() -> None:
         src = os.path.join(workdir, f"h{history}-s{PER_DAY}-seed{SEED}")
         if not os.path.isdir(src):
             gen_domain.generate(src, scale, SEED)
-        tables = load_domain_tables(spark, src)
+        load_domain_tables(spark, src)
         for day in scale.day_list()[-DAYS:]:
             params = TrendsParams(
                 list_public_ids=(gen_domain.TARGET_LIST,
@@ -67,7 +67,7 @@ def main() -> None:
             )
 
             def run(_):
-                pipe = TrendsPipeline(tables, params)
+                pipe = TrendsPipeline(spark, params)
                 pipe.count_highlights()
                 return pipe.all_variants().collect()
 

@@ -149,8 +149,9 @@ def test_cli_metrics_reports_sink_counters(spark, tmp_path, capsys):
         except (TypeError, ValueError):
             return False
 
+    load_domain_tables(spark, domain)
     pipe = TrendsPipeline(
-        load_domain_tables(spark, domain),
+        spark,
         TrendsParams(list_public_ids=(TARGET_LIST, DEPRECATED_LIST),
                      since_date="2024-03-02", limit=0),
     )

@@ -125,7 +125,7 @@ def curated_oracle(day: str, limit: int = 10, include_retweets: bool = False,
 
 
 def distinct_oracle(day: str, include_retweets: bool, limit: int = 10,
-                    civil: str = CIVIL) -> str:
+                    civil: str = CIVIL, bug_compat: bool = False) -> str:
     sday = civil.format(c="s.ust_created_at")
     hday = civil.format(c="h.publication_date_time")
     pday = civil.format(c="p.checked_at")
@@ -134,7 +134,9 @@ def distinct_oracle(day: str, include_retweets: bool, limit: int = 10,
     rt_json = JSON_INT.format(d="s.ust_api_document", f="retweet_count")
     fav_json = JSON_INT.format(d="s.ust_api_document", f="favorite_count")
     cascade = f"COALESCE(p.total_retweets, h.total_retweets, {rt_json})"
-    fav_cascade = f"COALESCE(p.total_favorites, h.total_favorites, {fav_json})"
+    # bug_compat: favorites fall back to h.total_RETWEETS (trends.go:344)
+    fav_mid = "h.total_retweets" if bug_compat else "h.total_favorites"
+    fav_cascade = f"COALESCE(p.total_favorites, {fav_mid}, {fav_json})"
     return f"""
     WITH rows_ AS (
       SELECT
@@ -223,11 +225,6 @@ def domain_dir(tmp_path_factory):
     return str(out)
 
 
-@pytest.fixture(scope="session")
-def domain_tables(spark, domain_dir):
-    return load_domain_tables(spark, domain_dir)
-
-
 def _duck_views(con, src: str):
     for n in DOMAIN_TABLES:
         con.execute(
@@ -241,14 +238,14 @@ def domain_duck(duck, domain_dir):
     return _duck_views(duck, domain_dir)
 
 
-def _params(**kw) -> TrendsParams:
-    defaults = dict(
-        list_public_ids=(TARGET_LIST, DEPRECATED_LIST),
-        since_date=DAY,
-        limit=10,
-    )
-    defaults.update(kw)
-    return TrendsParams(**defaults)
+def _pipe(spark, src: str, **kw) -> TrendsPipeline:
+    """Bind ``src``'s tables, then build a pipeline over them.  The
+    views are session-wide and tests switch table directories, so each
+    pipeline binds its own first."""
+    load_domain_tables(spark, src)
+    return TrendsPipeline(spark, TrendsParams(**{
+        "list_public_ids": (TARGET_LIST, DEPRECATED_LIST),
+        "since_date": DAY, "limit": 10, **kw}))
 
 
 def _compare(df, duck, sql, min_rows=1):
@@ -265,14 +262,14 @@ def _compare(df, duck, sql, min_rows=1):
 
 
 @pytest.mark.parametrize("day", DAYS)
-def test_status_variant(spark, domain_tables, domain_duck, day):
-    pipe = TrendsPipeline(domain_tables, _params(since_date=day))
+def test_status_variant(spark, domain_dir, domain_duck, day):
+    pipe = _pipe(spark, domain_dir, since_date=day)
     _compare(pipe.variant("status"), domain_duck, curated_oracle(day))
 
 
 @pytest.mark.parametrize("day", DAYS)
-def test_status_from_distinct_sources(spark, domain_tables, domain_duck, day):
-    pipe = TrendsPipeline(domain_tables, _params(since_date=day))
+def test_status_from_distinct_sources(spark, domain_dir, domain_duck, day):
+    pipe = _pipe(spark, domain_dir, since_date=day)
     _compare(
         pipe.variant("statusFromDistinctSources"),
         domain_duck,
@@ -281,8 +278,8 @@ def test_status_from_distinct_sources(spark, domain_tables, domain_duck, day):
 
 
 @pytest.mark.parametrize("day", DAYS)
-def test_retweet_from_distinct_sources(spark, domain_tables, domain_duck, day):
-    pipe = TrendsPipeline(domain_tables, _params(since_date=day))
+def test_retweet_from_distinct_sources(spark, domain_dir, domain_duck, day):
+    pipe = _pipe(spark, domain_dir, since_date=day)
     _compare(
         pipe.variant("retweetFromDistinctSources"),
         domain_duck,
@@ -290,8 +287,8 @@ def test_retweet_from_distinct_sources(spark, domain_tables, domain_duck, day):
     )
 
 
-def test_all_variants_union(spark, domain_tables, domain_duck):
-    pipe = TrendsPipeline(domain_tables, _params())
+def test_all_variants_union(spark, domain_dir, domain_duck):
+    pipe = _pipe(spark, domain_dir)
     df = pipe.all_variants(
         ("status", "statusFromDistinctSources", "retweetFromDistinctSources")
     )
@@ -302,44 +299,41 @@ def test_all_variants_union(spark, domain_tables, domain_duck):
     assert df.columns[-1] == "statusType"
 
 
-def test_pagination(spark, domain_tables, domain_duck):
+def test_pagination(spark, domain_dir, domain_duck):
     """Page 1 = rows 11-20 of the page-0-with-limit-20 ordering."""
-    full = TrendsPipeline(domain_tables, _params(limit=20)).variant("status")
-    page1 = TrendsPipeline(domain_tables, _params(limit=10, page=1)).variant(
-        "status"
-    )
+    full = _pipe(spark, domain_dir, limit=20).variant("status")
+    page1 = _pipe(spark, domain_dir, limit=10, page=1).variant("status")
     full_ids = [r["id"] for r in full.collect()]
     page1_ids = [r["id"] for r in page1.collect()]
     assert page1_ids == full_ids[10:20]
 
 
-def test_deleted_members_absent(spark, domain_tables):
+def test_deleted_members_absent(spark, domain_dir):
     """Property (SURVEY §5.2 item 5): anti-join output never contains a
     deleted member's publication."""
-    pipe = TrendsPipeline(domain_tables, _params(limit=0))
-    out = pipe.curated(include_retweets=False)
+    out = _pipe(spark, domain_dir, limit=0).variant("status")
     usernames = {r["username"] for r in out.collect()}
     assert "pub03" not in usernames  # deleted-list screen_name
     assert "pub05" not in usernames  # deleted-list-3 screen_name
 
 
 def test_count_highlights_matches_reference_count(
-    spark, domain_tables, domain_duck
+    spark, domain_dir, domain_duck
 ):
     """A1: the count query (trends.go:450-529) — spine joins + IN-list
     + day filter only, popularity join unaggregated (multiplies)."""
-    pipe = TrendsPipeline(domain_tables, _params())
+    pipe = _pipe(spark, domain_dir)
     for distinct in (False, True):
         assert pipe.count_highlights(distinct) == domain_duck.execute(
             count_oracle(DAY, distinct)
         ).fetchone()[0]
 
 
-def test_last_week_statuses_corrected(spark, domain_tables, domain_duck):
+def test_last_week_statuses_corrected(spark, domain_dir, domain_duck):
     """F6: corrected 7-day lookback (the reference's flag is dead —
     its SQL is invalid, trends.go:531-534)."""
     now = "2024-03-03 12:00:00"
-    got = TrendsPipeline(domain_tables, _params()).last_week_statuses(now)
+    got = _pipe(spark, domain_dir).last_week_statuses(now)
     expected = domain_duck.execute(
         f"""
         SELECT COUNT(*) FROM weaving_status s
@@ -351,54 +345,49 @@ def test_last_week_statuses_corrected(spark, domain_tables, domain_duck):
     assert got.count() == expected and expected > 0
 
 
-def test_bug_compat_reproduces_favorites_bug(spark, domain_tables, domain_duck):
+def test_bug_compat_reproduces_favorites_bug(spark, domain_dir, domain_duck):
     """bug_compat=True reproduces trends.go:344 exactly: the distinct
     favorites cascade falls back to h.total_RETWEETS."""
-    pipe = TrendsPipeline(domain_tables, _params(bug_compat=True))
-    sql = distinct_oracle(DAY, include_retweets=False).replace(
-        "COALESCE(p.total_favorites, h.total_favorites,",
-        "COALESCE(p.total_favorites, h.total_retweets,",
-    )
+    pipe = _pipe(spark, domain_dir, bug_compat=True)
+    sql = distinct_oracle(DAY, include_retweets=False, bug_compat=True)
     _compare(pipe.variant("statusFromDistinctSources"), domain_duck, sql)
     # and the buggy output differs from the corrected default somewhere
-    corrected = TrendsPipeline(domain_tables, _params()).variant(
-        "statusFromDistinctSources"
-    )
+    corrected = _pipe(spark, domain_dir).variant("statusFromDistinctSources")
     a = {(r["id"], r["totalFavorites"]) for r in corrected.collect()}
     b = {(r["id"], r["totalFavorites"])
          for r in pipe.variant("statusFromDistinctSources").collect()}
     assert a != b
 
 
-def test_curated_retweet_extension(spark, domain_tables):
-    """Engine extension: curated(include_retweets=True) has no kind
+def test_curated_retweet_extension(spark, domain_dir):
+    """Engine extension: the curated ``retweet`` variant has no kind
     filter (reference semantics for includeRetweets on the curated
     path) — a superset of the status variant."""
-    pipe = TrendsPipeline(domain_tables, _params(limit=0))
-    no_rt = {r["id"] for r in pipe.curated(False).collect()}
-    all_kinds = {r["id"] for r in pipe.curated(True).collect()}
+    pipe = _pipe(spark, domain_dir, limit=0)
+    no_rt = {r["id"] for r in pipe.variant("status").collect()}
+    all_kinds = {r["id"] for r in pipe.variant("retweet").collect()}
     assert no_rt < all_kinds
 
 
-def test_argmax_one_row_per_source(spark, domain_tables):
-    pipe = TrendsPipeline(domain_tables, _params(limit=0))
-    out = pipe.distinct_sources(include_retweets=False).collect()
+def test_argmax_one_row_per_source(spark, domain_dir):
+    pipe = _pipe(spark, domain_dir, limit=0)
+    out = pipe.variant("statusFromDistinctSources").collect()
     names = [r["username"] for r in out]
     assert len(names) == len(set(names))
 
 
 @pytest.fixture(scope="session")
-def edge_tables(spark, tmp_path_factory):
+def edge_dir(tmp_path_factory):
     out = str(tmp_path_factory.mktemp("trends_window_edges"))
     generate_window_edges(out)
-    return load_domain_tables(spark, out), out
+    return out
 
 
 @pytest.fixture(scope="session")
-def edge_duck(edge_tables):
+def edge_duck(edge_dir):
     import duckdb
 
-    con = _duck_views(duckdb.connect(), edge_tables[1])
+    con = _duck_views(duckdb.connect(), edge_dir)
     yield con
     con.close()
 
@@ -411,14 +400,14 @@ def edge_duck(edge_tables):
     ("2024-10-27", 1, None),
     ("2024-03-02 10:00", 1, None),  # a time part names its whole day
 ])
-def test_day_edges(spark, edge_tables, edge_duck, day, shift_hours, tz):
+def test_day_edges(spark, edge_dir, edge_duck, day, shift_hours, tz):
     """Every variant and both COUNT modes against DuckDB on rows 1 µs
     either side of every hour boundary around the day, so each civil-day
     bound has a row just inside and just outside it.  Spark resolves the
     repeated 02:00-03:00 of 2024-10-27 to CEST and DuckDB to CET; both
     instants fall on the same civil day, so no row is left out."""
-    pipe = TrendsPipeline(edge_tables[0], _params(
-        since_date=day, limit=0, shift_hours=shift_hours, tz=tz))
+    pipe = _pipe(spark, edge_dir, since_date=day, limit=0,
+                 shift_hours=shift_hours, tz=tz)
     day = day[:10]
     civil = civil_sql(shift_hours, tz)
     oracles = {
@@ -435,23 +424,53 @@ def test_day_edges(spark, edge_tables, edge_duck, day, shift_hours, tz):
         ).fetchone()[0]
 
 
-def _executions(spark) -> dict:
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    return {e.executionId(): e
-            for e in (execs.apply(i) for i in range(execs.size()))}
+def _new_executions(spark, action) -> list:
+    """The SQL executions that ``action()`` starts, read with the
+    listener bus drained so that no event of another call lands here."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        return {e.executionId(): e
+                for e in (execs.apply(i) for i in range(execs.size()))}
+
+    before = executions()
+    action()
+    return [e for i, e in executions().items() if i not in before]
 
 
-def test_anti_join_key_sets_are_not_shuffled(spark, domain_tables):
+def test_anti_join_key_sets_are_not_shuffled(spark, domain_dir):
     """Plan shape of the union: no anti-join key set is shuffled (anti
     joins need no DISTINCT)."""
-    pipe = TrendsPipeline(domain_tables, _params())
-    before = set(_executions(spark))
-    pipe.all_variants().collect()
-    plan = "\n".join(e.physicalPlanDescription()
-                     for i, e in _executions(spark).items()
-                     if i not in before)
+    pipe = _pipe(spark, domain_dir)
+    plan = "\n".join(
+        e.physicalPlanDescription()
+        for e in _new_executions(spark, pipe.all_variants().collect))
     assert "LeftAnti" in plan
     assert "hashpartitioning(excluded_id" not in plan
+
+
+def test_tables_bound_once_per_run(spark, domain_dir):
+    """The tables are bound once, at load: the COUNT is one SQL
+    execution and building the union runs none (a DataFrame argument to
+    ``spark.sql`` registers a temp view per statement, each an execution)."""
+    pipe = _pipe(spark, domain_dir)
+    assert len(_new_executions(spark, pipe.count_highlights)) == 1
+    assert _new_executions(spark, pipe.all_variants) == []
+
+
+def test_rebinding_keeps_built_dataframes(
+    spark, domain_dir, domain_duck, edge_dir, edge_duck
+):
+    """``spark.sql`` analyzes eagerly, so a DataFrame built before
+    ``load_domain_tables`` binds another directory still reads the
+    tables it was built over."""
+    built = _pipe(spark, domain_dir, limit=0).variant("status")
+    rebound = _pipe(spark, edge_dir, limit=0).variant("status")
+    _compare(built, domain_duck, curated_oracle(DAY, 0))
+    _compare(rebound, edge_duck, curated_oracle(DAY, 0))
 
 
 def test_cli_loads_nanosecond_timestamps(spark, domain_dir, tmp_path):
